@@ -70,17 +70,23 @@ def _run_df(df) -> None:
 
 
 def solo_main(name: str) -> None:
-    """Fresh-JVM single-query re-measure: same methodology as the suite
-    loop (prepared plan, 2 warmups, median of 5), nothing else in the
-    process. Invoked as `bench.py --solo <name>` by main() for queries
-    whose in-suite trimmed spread exceeds _SOLO_TRIMMED_PCT."""
+    """Fresh-JVM single-query measure of any registered query: same
+    methodology as the suite loop (prepared plan, 2 warmups, median of
+    5), nothing else in the process. Invoked as `bench.py --solo <name>`
+    by main() for queries whose in-suite trimmed spread exceeds
+    _SOLO_TRIMMED_PCT, and by scripts/ab.py with PYTHONPATH leading to
+    the source tree under test. The line also carries the value hash of
+    the collected result and the directory the package was imported
+    from."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from data_wrangling_spark.plans.registry import bench_queries
+    import data_wrangling_spark
+    from data_wrangling_spark.plans.registry import queries
     from data_wrangling_spark.session import get_spark
+    from perfbench.oracle import canon_hash
 
     spark = get_spark(app_name=f"dws-bench-solo-{name}")
     spark.sparkContext.setLogLevel("ERROR")
-    df = bench_queries()[name].spark(spark, sf_dir)
+    df = queries()[name](spark, sf_dir)
     _run_df(df)
     _run_df(df)
     runs = []
@@ -94,17 +100,30 @@ def solo_main(name: str) -> None:
         "median": round(med, 4),
         "spread_pct": round(100.0 * (runs[-1] - runs[0]) / med, 1),
         "trimmed_pct": round(100.0 * (runs[-2] - runs[1]) / med, 1),
+        "hash": canon_hash(df.toPandas()),
+        "package": os.path.dirname(data_wrangling_spark.__file__),
     }), flush=True)
     spark.stop()
 
 
-def _solo_remeasure(name: str) -> dict | None:
+def solo_remeasure(name: str, tree: str | None = None) -> dict | None:
+    """Run solo_main for ``name`` in a fresh process and return its line.
+    With ``tree``, the worker imports ``data_wrangling_spark`` (and
+    ``perfbench``, when that tree has it) from that source tree."""
     import subprocess
 
-    proc = subprocess.run(
-        [sys.executable, os.path.abspath(__file__), "--solo", name],
-        capture_output=True, text=True,
-    )
+    script = os.path.abspath(__file__)
+    cmd = [sys.executable, script, "--solo", name]
+    env = None
+    if tree is not None:
+        # -P keeps this file's directory out of sys.path[0], so `tree`
+        # leads; this checkout follows it for a tree without perfbench
+        cmd.insert(1, "-P")
+        env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+            p for p in (tree, os.path.dirname(script),
+                        os.environ.get("PYTHONPATH")) if p
+        ))
+    proc = subprocess.run(cmd, capture_output=True, text=True, env=env, cwd=tree)
     for line in proc.stdout.splitlines():
         if line.startswith(_SOLO_TAG):
             return json.loads(line[len(_SOLO_TAG):])
@@ -121,7 +140,7 @@ def main() -> None:
     sf = float(m.group(1)) if m else -1.0
 
     from data_wrangling_spark.plans.registry import bench_queries
-    from data_wrangling_spark.session import get_spark
+    from data_wrangling_spark.session import default_parallelism, get_spark
 
     spark = get_spark(app_name="dws-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -188,7 +207,7 @@ def main() -> None:
     if flagged:
         spark.stop()
         for name in flagged:
-            solo = _solo_remeasure(name)
+            solo = solo_remeasure(name)
             if solo is None:
                 continue
             solo_remeasured[name] = {
@@ -211,7 +230,8 @@ def main() -> None:
         import duckdb
 
         con = duckdb.connect()
-        con.execute(f"SET threads={os.cpu_count() or 32}")
+        # same thread count as the Spark session's local[N]
+        con.execute(f"SET threads={default_parallelism()}")
         for t in [
             "region", "nation", "customer", "supplier", "part",
             "orders", "lineitem", "events", "documents", "embeddings",

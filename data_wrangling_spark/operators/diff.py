@@ -75,7 +75,8 @@ def snapshot_diff(
     hashes, two flags) row — far below corpus scale; spills cleanly),
     so the hash scans and the full-outer exchange run exactly once and
     both branches read the cache: 3.16-3.28s -> 2.04-2.54s interleaved
-    at 100x realistic churn (scripts/bench_diff_ab.py 'persist').
+    at 100x realistic churn (measured at 6482cf1; `scripts/ab.py
+    x_corpus_snapshot_diff_realistic 6482cf1^`).
     CALLER CONTRACT: like cohort_retention/bm25_topk, the persist is
     not unpersisted here; long-lived sessions should clearCache()
     between calls (the timing harness rebuilds the plan and clears the

@@ -790,7 +790,8 @@ def ahash_near_dup(hashes: DataFrame, max_hamming: int = 8) -> DataFrame:
     (487k images, 4,660 distinct hashes) the old shape generated 232M
     candidates and spill-thrashed a ~25M-row DISTINCT for a 50s wall;
     this shape prices the same result at ~23k candidates + pure
-    output expansion (scripts/bench_imgdedup_ab.py). With mostly
+    output expansion (measured at c4d5f06; `scripts/ab.py
+    x_multimodal_image_dedup c4d5f06^`). With mostly
     unique hashes it degrades gracefully to the old plan: distinct()
     is one hash agg and the expansion joins are ~output-sized."""
     members = hashes.select("media_id", "ahash_hi", "ahash_lo")

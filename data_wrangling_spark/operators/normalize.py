@@ -136,7 +136,8 @@ def normalize_counts(
     contributes conditional sums, so the whole query is a single pass
     over the source (at the 100x bench: 15.95s for parse→persist→5
     count jobs vs 8.0s for the bare parse noop — this form runs AT the
-    parse floor, `scripts/bench_osmnorm_ab.py`).
+    parse floor, measured at 0379a6b; `scripts/ab.py
+    x_osm_scale_normalize 0379a6b^` re-times it).
 
     Value identity with the materializing form (asserted by
     tests against both fixtures and by the registered query's VALUES

@@ -930,7 +930,7 @@ def cohort_retention(
     retention_ppm) — retention_ppm = round(1e6 · n_active / n_cohort),
     week_offset 0 rows are the cohort sizes themselves (ppm 1e6).
 
-    Scale shape (round-13 rework, scripts/bench_cohort_ab.py at 100x =
+    Scale shape (round-13 rework measured at 377d7ef, at 100x =
     10M events / 150k users, fresh-JVM medians): the previous form ran
     THREE event-scale exchanges (user first-event agg 1.44s, (user,
     week) distinct 2.50s, the re-shuffle feeding the attach join) for

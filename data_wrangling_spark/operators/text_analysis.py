@@ -305,7 +305,8 @@ def boilerplate_spans(
     (df >= min_docs) → rebuild span STRINGS only from the
     representative documents (a left_semi on doc ids, ~|candidates|
     docs, never the corpus) → exact top-k on (n_docs desc, span).
-    Round-7 A/B at 100x (scripts/bench_boilerplate_ab.py): the earlier
+    Round-7 A/B at 100x (measured at f6f2a6b; `scripts/ab.py
+    x_text_boilerplate_spans f6f2a6b^`): the earlier
     string-domain aggregate built 26M 3-gram strings that compact to
     27k distinct spans and the aggregate keyed on those strings —
     23.8s vs 16.7s hashed, identical top-20. No pairwise comparison
@@ -636,9 +637,10 @@ def token_entropy(
     against its shift, and n / distinct / Σ round(1e6·c·ln c) all fall
     out of one codegen-adjacent projection. At any cluster size the
     operator is a single map-only pass over the corpus (100x probe:
-    2.87s shipped → 2.02s, `scripts/bench_entropy_ab.py`, value-
-    identity asserted; the (doc, long) hashdom rework measured WORSE
-    at 3.96s — the win is removing the exchanges, not narrowing them).
+    2.87s shipped → 2.02s, measured at 93e38e4 with value identity
+    asserted, `scripts/ab.py x_text_entropy 93e38e4^`; the (doc, long)
+    hashdom rework measured WORSE at 3.96s — the win is removing the
+    exchanges, not narrowing them).
 
     Hash-collision caveat (the accepted lm_score/boilerplate pattern):
     two distinct tokens colliding in xxhash64 within one document
@@ -1197,10 +1199,11 @@ def dsir_importance(
     ``persist_tokens=True`` caches the tokenized (id, is_target,
     bucket) projection (MEMORY_AND_DISK) so pass 2 reads it back
     instead of re-running scan + tokenize + explode + md5: measured
-    23.9s -> 16.1s at 100x (scripts/bench_dsir_ab.py, fresh JVM,
-    value-hash parity checked) — DSIR's per-pass compute is costly
-    enough to FLIP the vec_outliers round-10 verdict that caching an
-    exploded corpus projection loses to recompute. One-shot scoring
+    23.9s -> 16.1s at 100x (measured at 90aa144, fresh JVM,
+    value-hash parity checked; `scripts/ab.py x_text_dsir 90aa144^`) —
+    DSIR's per-pass compute is costly enough to FLIP the vec_outliers
+    round-10 verdict that caching an exploded corpus projection loses
+    to recompute. One-shot scoring
     jobs (the production shape) should enable it; the default stays
     False because (a) the cache outlives the returned DataFrame's
     execution — callers own the unpersist — and (b) re-executing the

@@ -200,7 +200,8 @@ def x_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         "a 100 TB pipeline never runs (downstream consumes it keyed) "
         "— on Spark it even costs a second full execution of the "
         "upstream for the range-partitioner's sampling pass (stage "
-        "probe: 4.77s -> 3.21s at 100x, scripts/bench_diff_ab.py).",
+        "probe: 4.77s -> 3.21s at 100x, measured at 7451f6f; "
+        "`scripts/ab.py x_corpus_snapshot_diff 7451f6f^`).",
 )
 def x_corpus_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_spark.operators.diff import snapshot_diff
@@ -1309,7 +1310,8 @@ def x_multimodal_image_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bit_count(xor) <= 8 filter (operators/multimodal.py "
         "ahash_near_dup). The MinHash-LSH posture for rasters: "
         "candidates only, never the n^2 cross join. Round-13 rework "
-        "(scripts/bench_imgdedup_ab.py at 100x): decode is 1.9s of the "
+        "(measured at c4d5f06 at 100x; `scripts/ab.py "
+        "x_multimodal_image_dedup c4d5f06^`): decode is 1.9s of the "
         "wall — the cost was 232M band-join candidates from exact-dup "
         "hash groups (487k images, 4,660 distinct hashes) plus a "
         "30.2M-row output DISTINCT and presentation sort; banding "

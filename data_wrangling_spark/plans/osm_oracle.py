@@ -70,18 +70,16 @@ def _clean(key: str, value: str) -> str:
             if repl:
                 return " ".join(tokens[:-1] + [repl])
         return value
-    if key == "phone":
-        digits = re.sub(r"\D", "", value)
-        if len(digits) == 11 and digits.startswith("1"):
+    if key == "phone":  # S2:249-257, for any digit count
+        digits = re.sub(r"[^0-9]+", "", value)
+        if digits.startswith("1"):
             digits = digits[1:]
-        if len(digits) == 10:
-            return f"{digits[:3]}-{digits[3:6]}-{digits[6:]}"
-        return value
+        return f"{digits[:3]}-{digits[3:6]}-{digits[6:]}"
     if key == "postcode":
         m = re.search(r"\d{5}", value)
         return m.group(0) if m else ""
-    if key == "state":
-        return "Texas" if value.lower() in ("tx", "texas") else value
+    if key == "state":  # S2:276-279: only the exact 'TX'
+        return "Texas" if value == "TX" else value
     if key == "city":
         city = value.split(",")[0].strip()
         return "Round Rock" if city == "Round" else city

@@ -213,7 +213,7 @@ def _normalize_counts_oracle() -> str:
         "persisted raw, no table materialization (round 13; the "
         "former parse→persist→5-count-jobs shape measured 15.95s at "
         "100x vs 8.0s for the bare parse noop — this form runs AT the "
-        "parse floor, scripts/bench_osmnorm_ab.py; equivalence to the "
+        "parse floor, measured at 0379a6b; equivalence to the "
         "materializing count union is asserted against both fixtures "
         "and the 100x file, and normalize_counts' docstring derives "
         "why cleaning cannot change a count: every cleaner is "
@@ -224,9 +224,10 @@ def _normalize_counts_oracle() -> str:
         "row benches the counts-only twin — a CHANGED WORKLOAD vs the "
         "pre-r13 rows, not a speedup of the materializing fan-out "
         "(which keeps oracle coverage at fixture scale via "
-        "osm_pipeline_audit/quarantine and a bench-scale regression "
-        "canary in scripts/bench_osmnorm_ab.py's 'shipped' variant — "
-        "the pre-r13 persist+5-count materializing form). "
+        "osm_pipeline_audit/quarantine; at bench scale the pre-r13 "
+        "persist+5-count materializing form is this query at "
+        "0379a6b^, timed against this one by `scripts/ab.py "
+        "x_osm_scale_normalize 0379a6b^`). "
         "Falls back to the fixture at the driver dirs, "
         "where the VALUES oracle (counts derived arithmetically from "
         "the generator constants) asserts every table's row count.",

@@ -37,316 +37,63 @@ class QuerySpec:
 QUERIES: dict[str, QuerySpec] = {}
 
 #: The driver's correctness gate checks only the FIRST 50 entries of
-#: ``queries()`` (round-1 finding: 30 of 80 registered queries got no
-#: correctness row because registration order buried them). This list
-#: pins the window explicitly. ROUND-4 ROTATION (round-3 verdict gap 2):
-#: the 25 registered queries that had no driver correctness row across
-#: r1-r3 (all judge-replica-verified green at sf0.01 in round 3) are
-#: swapped IN so every registered query has >=1 driver row across
-#: r1-r4; their slots come from near-duplicates already proven green in
-#: three consecutive driver rounds. Kept representatives: every bench.py
-#: headline query (except q2_type_counts — same family as the kept q1,
-#: driver-proven three rounds running), every query whose implementation
-#: changed in round 4
-#: (ext_asof_latest_order struct carry, ext_deciles_scalable histogram
-#: quantiles, the two newly-oracled OSM queries), and one member of each
-#: operator family (audit, cleaning dispatch, tag split, roundtrip
-#: sinks, dedup, ANN, text, streaming, merge/skew/split). Demoted
-#: entries remain registered after the window — still pytest-oracled at
-#: sf0.001 every CI run and carrying r1-r3 driver rows.
-#: queries()/oracle_sql() emit this order; a registered name missing
-#: from both this list and the demoted tail fails loudly in
-#: _ordered_names().
+#: ``queries()``, so this list pins which 50 lead the iteration order;
+#: every other registered query follows in registration order and keeps
+#: its sf0.001 pytest oracle row. Slots rotate so every query earns
+#: driver rows over time (reference-surface operators first, then new
+#: or reworked plans, then the longest-unchecked); the per-round
+#: rotation history is in git and ROUNDLOG.md.
 DRIVER_WINDOW: list[str] = [
-    # -- representatives kept from the r1-r3 proven set --------------
-    # round 8: audit_fields (5 green rows r1-r5) hands the audit-family
-    # slot to the new one-pass ext_table_profile; op_tag_split (5 rows;
-    # cleaning family keeps clean_tag_dispatch), osm_pipeline_node_tags
-    # and x_stream_osm_ingest (2 rows each; the OSM reference surface
-    # stays via q1/q3/q4 and clean_tag_dispatch, streaming via
-    # x_stream_sessionize) also demote. All demoted entries keep their
-    # sf0.001 pytest oracle rows every CI run.
-    "ext_table_profile",
-    "clean_tag_dispatch",
-    # round 9 (r7 verdict item 3): the REFERENCE-SURFACE pipeline
-    # queries osm_pipeline_audit (OP-AGG-AUDIT) and
-    # osm_pipeline_quarantine (OP-VALIDATE permissive path) enter the
-    # window PERMANENTLY — reference operators hold window slots ahead
-    # of extension queries from now on (audit_fields' demotion in
-    # round 8 left OP-AGG-AUDIT with no current driver row; these two
-    # had NEVER earned one despite judge-green sf0.01 replicas)
-    "osm_pipeline_audit",
-    "osm_pipeline_quarantine",
-    "q1_type_counts_union",
-    "q3_join_filter",
-    "q4_top_users",
-    "ext_pricing_summary",
-    "ext_tpch_q3_shipping_priority",
-    "ext_asof_latest_order",    # implementation changed this round
-    # round 8: ext_percentiles_scalable (2 green rows; quantile family
-    # keeps ext_ntile_deciles, which drives the same exact_quantiles
-    # machinery) hands its slot to the new ordered-funnel operator;
-    # the cohort-retention matrix joins it (the freed audit slots)
-    "ext_funnel_steps",
-    "ext_cohort_retention",
-    # round 9: ext_asof_latest_order_bucketed (green r5+r6 rows) and
-    # x_dedup_exact (green r1-r6, six rows) hand their slots to the
-    # never-driver-checked x_multimodal_features + x_multimodal_frames
-    # (first registered in round 1; judge-green at sf0.01 since their
-    # oracles landed in round 4). The as-of family keeps plain +
-    # adaptive in the window; the dedup family keeps minhash/semantic/
-    # incremental/leakage-safe.
-    "x_multimodal_features",
-    # "x_multimodal_frames" — demoted round 12 (slot to
-    # x_osm_scale_audit, see below); stays in EXTRA_QUERIES-adjacent
-    # multimodal coverage and keeps its sf0.001 pytest oracle row
-    # round 12 (r11 verdict item 3): the reference pipeline's SCALE pair
-    # — x_osm_scale_audit + x_osm_scale_normalize (split-parallel parse
-    # of the materialized osm_scaled.osm with fixture fallback at the
-    # driver dirs) — takes its first driver rows from x_multimodal_frames
-    # (green r9-r11; the multimodal family keeps features + audio's
-    # demoted-pytest row + image_hash + image_dedup in the window) and
-    # x_vec_outliers (green r8-r11, one of the longest current streaks;
-    # the vector family keeps x_sim_topk_ivf). Reference-surface
-    # operators hold slots ahead of extensions per the round-9 policy.
-    "x_osm_scale_audit",
-    "x_osm_scale_normalize",
-    # round 10: x_sim_topk_bruteforce and x_text_stats (green r1-r9,
-    # the window's two longest streaks after the round-10 sessionize
-    # handoff) hand their slots to the two NEW round-10 queries — new
-    # registrations earn a fresh driver row per the round-4 precedent.
-    # Both demoted entries stay bench headlines (timed every round)
-    # and keep their sf0.001 pytest oracle rows every CI run; the ANN
-    # family keeps x_sim_topk_ivf in the window, the text family keeps
-    # a dozen members.
-    "x_eval_calibration",
-    "x_dedup_containment",
-    # round 10 (second rotation): x_text_curation_pipeline (green
-    # r1-r9) hands its slot to x_text_dsir — implemented round 6 but
-    # left OFF the registry until round 10, so it has never had any
-    # verification row and outranks every streak. The pipeline stays a
-    # bench headline timed every round and keeps its sf0.001 pytest
-    # oracle row per CI run.
-    "x_text_dsir",
-    # -- first-ever driver rows (round-4 rotation set) ---------------
-    # round 8: x_vec_normalize (2 green rows) hands the vector-family
-    # slot to the new exact-integer embedding-outlier audit
-    # "x_vec_outliers" — demoted round 12 (slot to x_osm_scale_normalize,
-    # see above); stays in EXTRA_QUERIES (timed every regeneration) and
-    # keeps its sf0.001 pytest oracle row every CI run
-    # round 12 (r11 verdict item 7): the daily-refresh composition —
-    # snapshot_diff gating dedup_incremental — takes its first driver
-    # row from x_multimodal_audio (green r7-r11, the window's longest
-    # extension streak; the multimodal family keeps features +
-    # image_hash + image_dedup). New registrations earn a fresh driver
-    # row per the round-4 precedent.
-    "x_dedup_incremental_diff",
-    "x_sketch_hll_weekly_users",
-    # round 7: x_multimodal_audio (the real WAV encode→decode path and
-    # the multimodal family's FIRST driver row — the other three
-    # multimodal queries are judge/pytest-verified) swaps in for
-    # x_sim_topk_mllib_brp (green r4-r6 driver rows; the ANN family
-    # keeps bruteforce + ivf in the window)
-    # "x_multimodal_audio" — demoted round 12 (slot to
-    # x_dedup_incremental_diff, see above); stays in EXTRA_QUERIES and
-    # keeps its sf0.001 pytest oracle row every CI run
-    # round 6: x_text_lm_score (new bigram-LM perplexity filter) swaps
-    # in for ext_tpch_q5_local_supplier (green r4+r5 driver rows; the
-    # TPC-H family keeps 15+ members in the window)
-    # "x_text_lm_score" — demoted round 9 (fairness rotation, see above)
-    "op_jsonl_roundtrip",
-    # round 7: x_corpus_source_overlap (new slice-level redundancy
-    # diagnostic) swaps in for ext_anti_join (green r4-r6 driver rows;
-    # the join-shape family keeps semi/anti coverage via
-    # ext_tpch_q21/q22 and the TPC-H block)
-    # "x_corpus_source_overlap" — demoted round 9 (fairness rotation, see above)
-    # round 10: x_stream_sessionize (green r1-r9, the window's longest
-    # streak) hands the streaming slot to x_stream_sessionize_custom —
-    # the LAST never-driver-checked registered query (ROUNDLOG round-9
-    # fairness table); the sessionize family stays represented by the
-    # custom form itself (row-identical to native by equivalence
-    # pytest) and native keeps its sf0.001 pytest oracle row every CI
-    # run
-    "x_stream_sessionize_custom",
-    # round 8: x_dedup_clusters (2 green rows) hands its slot to the
-    # new incremental batch-vs-index dedup; the iterative-components
-    # machinery stays driver-covered inside x_dataset_split_leakage_safe
-    "x_dedup_incremental",
-    # round 7: x_multimodal_video (real AVI decode — completes the
-    # image/audio/video trifecta) swaps in for x_graph_pagerank (green
-    # r4-r6 driver rows; the iterative-computation family stays
-    # represented by x_dedup_clusters, and pagerank keeps its chained-
-    # CTE oracle row in the sf0.001 pytest suite)
-    # "x_multimodal_video" — demoted round 9 (fairness rotation, see above)
-    # -- round-5 widening: nine new queries (six TPC-H-shaped joins +
-    # three training-pipeline ops) take their first driver rows; their
-    # slots come from nine entries each holding 1-4 green driver rows
-    # with a same-family representative still in the window
-    # (ext_range_join_attribution -> _bucketed; ext_dataset_split ->
-    # ext_stratified_sample + the new mixture; ext_sql_api ->
-    # ext_correlated_subquery's SQL front-end; ext_skew_salted_distinct
-    # -> ext_asof_latest_order_bucketed; x_dedup_ngram_jaccard -> six
-    # other dedup forms; ext_argmax_agg/ext_stats_agg ->
-    # ext_pricing_summary; x_sketch_hll_bound ->
-    # x_sketch_hll_weekly_users; x_stream_dedup -> x_stream_sessionize
-    # + x_stream_osm_ingest) --------------------------------------
-    # round 6: the eight queries completing the TPC-H 22-shape family
-    # (Q2/Q9/Q11/Q12/Q15/Q16/Q20/Q21, five on the derived partsupp
-    # relation) take their first driver rows; their slots come from
-    # eight entries each holding a green r5 driver row with the TPC-H
-    # family keeping 8+ other members in the window (q7 -> q21's
-    # multi-fact shape; q8 -> q15's scalar-compare; q13 -> q16's
-    # grouped counts; q19 -> q12's conditional split; q4 -> q21 shares
-    # its lateness semi logic; q6 -> q20's pushdown+having;
-    # chunk_overlap / temperature_mixture -> the text family keeps
-    # stats/curation/boilerplate/bm25)
-    # round 10: ext_tpch_q2_min_cost_supplier, ext_tpch_q11_important_
-    # parts, and ext_tpch_q20_excess_stock_suppliers (green r6+r7 rows
-    # each; the TPC-H family keeps q3/q17/q21/q22 in the window, q21
-    # covering multi-fact EXISTS shapes and q17 scalar-compare) hand
-    # their slots to the two NEW classifier-evaluation operators (exact
-    # per-source ROC-AUC + PR threshold sweep) and to the reworked
-    # x_text_sequence_pack (two-pass distributed prefix sum replaced
-    # its global-window cumsum — the changed plan earns a fresh driver
-    # row; green r2+r3 rows predate the rework)
-    # round 11: x_eval_auc_quality (green r8-r10 rows; the eval family
-    # keeps pr_sweep + calibration + ece in the window) hands its slot
-    # to the NEW x_eval_brier — new registrations earn a fresh driver
-    # row per the round-4 precedent
-    "x_eval_brier",
-    "x_eval_pr_sweep",
-    "x_text_sequence_pack",
-    # round 9: four of the round-6 TPC-H completions (q9, q12, q15,
-    # q16 — each holding a green r6 driver row, with the TPC-H family
-    # keeping q2/q3/q11/q17/q20/q21/q22 in the window and q2+q11
-    # covering the derived-partsupp and scalar-compare shapes) hand
-    # their slots to the never-driver-checked x_text_novelty,
-    # x_text_collocations, x_corpus_source_cap, and ext_ohlc_bars
-    # (whose group-key implementation also changed this round — the
-    # truncated-timestamp fix deserves a fresh driver row)
-    "x_text_novelty",
-    "x_text_collocations",
-    "x_corpus_source_cap",
-    "ext_ohlc_bars",
-    "ext_tpch_q21_waiting_suppliers",
-    # round 10: ext_rolling_event_features (green r6+r7 rows; the
-    # windowed-temporal family keeps ext_ohlc_bars + the three as-of
-    # forms) hands its slot to the NEW corpus snapshot diff
-    # round 11 (r10 verdict item 3): the diff family's slot passes to
-    # the NEW realistic-churn variant — the 1–10% regime the raw-hash
-    # short-circuit is designed for becomes the headline row; the
-    # mod-3 27%-churn adversarial form (green r10 row) stays
-    # registered as the documented stress case with its sf0.001
-    # pytest oracle row every CI run
-    "x_corpus_snapshot_diff_realistic",
-    # round 9: ext_tpch_q22_dormant_customers (green r6 row; the TPC-H
-    # family keeps seven members in the window) demotes to make room
-    # for the permanent reference-surface slots above
-    "x_text_boilerplate_spans",
-    # round 8: ext_correlated_subquery (2 green rows; the decorrelated-
-    # subquery family keeps Q17's scalar-compare and Q21's EXISTS pair)
-    # and ext_fuzzy_join_snm (2 green rows; approximate-matching family
-    # stays represented by the new cross-relation-Jaccard
-    # x_dedup_incremental) hand their slots to the new hashed linear
-    # quality classifier and the CCNet-style boilerplate removal
-    "x_text_quality_classifier",
-    "ext_ntile_deciles",
-    "x_text_boilerplate_removal",
-    # round 6: x_text_bm25_search (new BM25 retrieval primitive) swaps
-    # in for x_text_lexical_diversity (green r5 driver row; the text
-    # family keeps stats/curation/chunking/boilerplate in the window)
-    # round 10: x_text_bm25_search (green r6-r9 rows) hands its slot
-    # back to x_text_lm_score, whose implementation CHANGED this round
-    # (hash-domain bigram rework — changed plans earn a fresh driver
-    # row per the round-4 precedent); the retrieval family keeps its
-    # sf0.001 pytest oracle row every CI run
-    "x_text_lm_score",
-    # round 9 fairness rotation (r8 verdict item 7 — the full
-    # name -> last-driver-round table is in ROUNDLOG.md round 9; every
-    # tail query was judge-replica-verified green at sf0.01 in round 8
-    # and is pytest-oracled at sf0.001 every CI run): the NEW
-    # collapse-then-prefix Jaccard composition takes its first row from
-    # x_text_entropy (green r6-r8; the text-signal family keeps
-    # boilerplate_spans + quality_classifier + lm-adjacent stats), and
-    # three reference-surface queries whose last driver rows date to r1
-    # re-enter per the reference-first policy above: clean_phone (the
-    # §2.5 cleaning family's only pure-Column phone normalizer; slot
-    # from x_text_lm_score, green r6-r8, text family still 8+ strong),
-    # q5a_oldest_ts (Q5 sort+limit surface; slot from
-    # x_multimodal_video, green r6-r8, multimodal family keeps
-    # audio/image_hash/image_dedup/features/frames), and
-    # op_posexplode_positions (OP-POSEXPLODE; slot from
-    # x_corpus_source_overlap, green r6-r8, corpus-diagnostic family
-    # keeps source_cap + shard_manifest + snapshot_diff)
-    "x_dedup_jaccard_collapsed",
-    "clean_phone",
-    "q5a_oldest_ts",
-    "op_posexplode_positions",
-    # round 9: ext_range_join_bucketed (green r5+r6 rows) demotes for
-    # the permanent reference-surface slots above; interval/temporal
-    # machinery stays driver-covered by the three as-of forms and
-    # ext_rolling_event_features
-    # round 7: x_text_entropy (new token-distribution entropy signal)
-    # swaps in for x_text_repetition (green r5+r6 driver rows; the
-    # repetition/diversity signal family keeps boilerplate_spans +
-    # lm_score in the window and the demoted entry stays in the sf0.001
-    # pytest oracle suite)
-    # "x_text_entropy" — demoted round 9 (fairness rotation, see above)
-    "x_sim_topk_ivf",
-    # -- round-5 rotation: the four newly golden-oracled seeded queries
-    # (plans/seeded_goldens.py) swap in for proven near-duplicates
-    # (ext_topn_per_group, ext_semi_join, ext_cube_counts,
-    # op_orc_roundtrip — each with 2+ green driver rows r1-r4 and a
-    # same-family representative still in the window) so every one of
-    # the 7 formerly rows-only queries has a hash-checked driver row --
-    # round 11: x_dedup_minhash_lsh (green r5-r10, six rows — the
-    # window's longest extension streak; the dedup family keeps
-    # semantic/incremental/containment/jaccard_prefix/
-    # jaccard_collapsed/leakage_safe) hands its slot to x_eval_ece —
-    # the ONLY registered query never driver-checked (registered after
-    # the r10 window rotation; r10 verdict item 4 says never-driven
-    # queries go first)
-    "x_eval_ece",
-    # round 8: x_dedup_simhash (1 green r5 row + judge replicas; the
-    # signature-sketch family keeps minhash_lsh) hands its slot to the
-    # real-decode perceptual image hash; the banded-Hamming image
-    # near-dup join and the shard manifest take the slots of
-    # ext_percentiles_scalable's pair (see above) and simhash's
-    # neighbor
-    "x_multimodal_image_hash",
-    "x_multimodal_image_dedup",
-    "x_corpus_shard_manifest",
-    # round 7: x_dedup_semantic (new SemDeDup operator — k-means +
-    # within-cluster cosine prune, independent chained-CTE SQL oracle)
-    # swaps in for x_dedup_embedding_cosine (green r5+r6 driver rows;
-    # the embedding-dedup family stays represented by x_dedup_semantic,
-    # which subsumes the cosine-verify semantics, and the demoted entry
-    # keeps its independent golden + sf0.001 pytest oracle row)
-    "x_dedup_semantic",
-    # round 7: x_dataset_split_leakage_safe (new group-aware split —
-    # near-dup components hash-bucketed as one unit) swaps in for
-    # ext_merge_upsert (green r4-r6 driver rows; the write-shape family
-    # stays represented by op_jsonl_roundtrip and the demoted entry
-    # keeps its sf0.001 pytest oracle row)
-    "x_dataset_split_leakage_safe",
-    # round 6: ext_asof_latest_order_adaptive (the new scale-default
-    # as-of form, this round's headline change) swaps in for
-    # x_sim_topk_lsh (green r5 driver row; ANN family still represented
-    # by bruteforce + ivf + mllib_brp in the window)
-    # round 11: ext_asof_latest_order_adaptive (green r6-r10, five
-    # rows; the as-of family keeps plain ext_asof_latest_order in the
-    # window and both demoted forms keep their sf0.001 pytest oracle
-    # rows) hands its slot to ext_tpch_q7_volume_shipping, whose
-    # implementation CHANGED this round (broadcast-hinted narrow
-    # customer/supplier projections — r10 verdict item 2; changed
-    # plans earn a fresh driver row per the round-4 precedent)
-    "ext_tpch_q7_volume_shipping",
-    # round 10: ext_tpch_q17_small_quantity (green r6+r7 rows after its
-    # round-6 rework; TPC-H family keeps q3/q21/q22, q21 covering the
-    # EXISTS/semi shapes) hands its slot to the NEW prefix-filtered
-    # exact Jaccard join (AllPairs/PPJoin candidate pruning,
-    # output-identical to x_dedup_ngram_jaccard by theorem + oracle)
-    "x_dedup_jaccard_prefix",
+    "ext_table_profile",                 # audit family: one-pass profile
+    "clean_tag_dispatch",                # cleaning family: per-key dispatch
+    "osm_pipeline_audit",                # reference surface: OP-AGG-AUDIT
+    "osm_pipeline_quarantine",           # reference surface: OP-VALIDATE
+    "q1_type_counts_union",              # reference query
+    "q3_join_filter",                    # reference query
+    "q4_top_users",                      # reference query
+    "ext_pricing_summary",               # bench headline
+    "ext_tpch_q3_shipping_priority",     # bench headline
+    "ext_asof_latest_order",             # as-of family: plain form
+    "ext_funnel_steps",                  # ordered funnel
+    "ext_cohort_retention",              # cohort matrix
+    "x_multimodal_features",             # multimodal family
+    "x_osm_scale_audit",                 # reference surface at scale
+    "x_osm_scale_normalize",             # reference surface at scale
+    "x_eval_calibration",                # eval family
+    "x_dedup_containment",               # dedup family: n-gram containment
+    "x_text_dsir",                       # DSIR importance weighting
+    "x_dedup_incremental_diff",          # daily refresh: diff gates dedup
+    "x_sketch_hll_weekly_users",         # sketch family
+    "op_jsonl_roundtrip",                # sink round trip
+    "x_stream_sessionize_custom",        # streaming family
+    "x_dedup_incremental",               # batch-vs-index dedup
+    "x_eval_brier",                      # eval family
+    "x_eval_pr_sweep",                   # eval family
+    "x_text_sequence_pack",              # distributed prefix sum
+    "x_text_novelty",                    # text family
+    "x_text_collocations",               # text family
+    "x_corpus_source_cap",               # corpus family
+    "ext_ohlc_bars",                     # windowed temporal
+    "ext_tpch_q21_waiting_suppliers",    # TPC-H EXISTS/semi shapes
+    "x_corpus_snapshot_diff_realistic",  # diff family: 1-10% churn
+    "x_text_boilerplate_spans",          # text family
+    "x_text_quality_classifier",         # hashed linear classifier
+    "ext_ntile_deciles",                 # quantile family
+    "x_text_boilerplate_removal",        # CCNet-style removal
+    "x_text_lm_score",                   # bigram LM perplexity
+    "x_dedup_jaccard_collapsed",         # exact Jaccard: collapse+prefix
+    "clean_phone",                       # reference surface: phone cleaner
+    "q5a_oldest_ts",                     # reference query: sort+limit
+    "op_posexplode_positions",           # reference surface: OP-POSEXPLODE
+    "x_sim_topk_ivf",                    # ANN family
+    "x_eval_ece",                        # eval family
+    "x_multimodal_image_hash",           # perceptual image hash
+    "x_multimodal_image_dedup",          # banded-Hamming image near-dups
+    "x_corpus_shard_manifest",           # corpus family
+    "x_dedup_semantic",                  # SemDeDup
+    "x_dataset_split_leakage_safe",      # group-aware split
+    "ext_tpch_q7_volume_shipping",       # TPC-H multi-fact join
+    "x_dedup_jaccard_prefix",            # exact Jaccard: prefix filter
 ]
 
 

@@ -26,14 +26,13 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-def _table_disk_bytes(sf_dir: str, name: str) -> int:
+def _table_disk_bytes(sf_dir: str, name: str) -> int | None:
     """On-disk parquet size of a table (file or directory) — the cheap,
-    estimator-independent input for size-gating a broadcast HINT. A
-    hint overrides every Catalyst/AQE threshold, so any hinted relation
-    must be provably small from ACTUAL data, not from the join-output
-    size estimates the hint exists to correct. Filesystem metadata
-    only; no Spark job. Non-local/missing paths return 2**62 (gate
-    shut — fall back to the adaptive plan)."""
+    estimator-independent input for size-gating a join HINT. A hint
+    overrides every Catalyst/AQE threshold, so any hinted relation must
+    be provably sized from ACTUAL data, not from the join-output size
+    estimates the hint exists to correct. Filesystem metadata only; no
+    Spark job. None for a non-local or missing path (size unknown)."""
     import os
 
     p = os.path.join(sf_dir, f"{name}.parquet")
@@ -45,7 +44,16 @@ def _table_disk_bytes(sf_dir: str, name: str) -> int:
             for root, _dirs, files in os.walk(p)
             for f in files
         )
-    return 2**62
+    return None
+
+
+def _size_gate(sf_dir: str, name: str, lo: int = 0, hi: int | None = None) -> bool:
+    """True when ``name``'s measured on-disk size is in ``[lo, hi)``.
+    An unknown size keeps the gate SHUT, so a hinted plan never rests
+    on a size nobody measured: the query falls back to its adaptive
+    plan."""
+    size = _table_disk_bytes(sf_dir, name)
+    return size is not None and size >= lo and (hi is None or size < hi)
 
 
 #: revenue in exact integer cents — ONE definition for every lineitem
@@ -347,8 +355,9 @@ def x_text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         "range exchange whose sampling pass re-executed the window "
         "upstream (the round-12 snapshot_diff find); dropped on BOTH "
         "engines (driver value-hash sorts rows, so the result is "
-        "unchanged): 4.20s -> 2.94s solo at 100x "
-        "(scripts/bench_rolling_ab.py).",
+        "unchanged): 4.20s -> 2.94s solo at 100x (measured at "
+        "32472ee; `scripts/ab.py ext_rolling_event_features "
+        "32472ee^` re-times it).",
 )
 def ext_rolling_event_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_spark.operators.temporal import (
@@ -2858,8 +2867,9 @@ def x_sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "The resulting plan is the measured two-fact floor — stage "
         "probes: li scan+filter 0.9s, orders SMJ customer 1.8s, "
         "li shuffle + merge + agg ~1.6s (SCALING.md q7 floor note). "
-        "Round-14 re-probe (verdict item 2, bench_q7_ab.py shj* "
-        "variants): the 1996-1998 shipdate window IS in the lineitem "
+        "Round-14 re-probe (verdict item 2, unshipped shj* variants; "
+        "probe script at 6482cf1:scripts/bench_q7_ab.py): the "
+        "1996-1998 shipdate window IS in the lineitem "
         "PushedFilters (plans/r14 before dump — the suspected miss "
         "was unfounded), and SHUFFLE_HASH-hinting either or both "
         "fact joins measured a WASH across 6 interleaved fresh-JVM "
@@ -2904,7 +2914,7 @@ def ext_tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     # on disk; past the gate the plan stays adaptive (see docstring)
     supp_hinted = (
         F.broadcast(supp)
-        if _table_disk_bytes(sf_dir, "supplier") < (64 << 20)
+        if _size_gate(sf_dir, "supplier", hi=64 << 20)
         else supp
     )
     return (
@@ -2961,8 +2971,9 @@ def ext_tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         "int cents and the ppm share is floor(a/b*1e6) of bit-identical "
         "IEEE doubles, so the driver hash is stable. Dims broadcast; "
         "the part/customer side joins are unhinted for AQE at scale. "
-        "Round-13 stage probe (scripts/bench_q8_ab.py, fresh-JVM "
-        "medians at 100x): full 3.86s == li-side scan+project 1.75s + "
+        "Round-13 stage probe (unshipped variants, probe script at "
+        "377d7ef:scripts/bench_q8_ab.py; fresh-JVM medians at "
+        "100x): full 3.86s == li-side scan+project 1.75s + "
         "orders-side filter+region-semi 2.04s; the li x orders SMJ "
         "stage alone reproduces the full wall (4.12s) and "
         "broadcast-hinting the ~0.9M-row filtered orders side is a "
@@ -3042,7 +3053,8 @@ def ext_tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         "LEFT join + coalesce(0) recovers order-less customers, second "
         "tiny agg builds the histogram. Same result as the textbook "
         "outer-join-then-count formulation the oracle uses. Round-13 "
-        "stage probe (scripts/bench_q13_ab.py, 100x solo): the "
+        "stage probe (unshipped variants, probe script at "
+        "32472ee:scripts/bench_q13_ab.py; 100x solo): the "
         "per-custkey orders aggregate ALONE is 2.52s of the query's "
         "2.68s — a 15M-row, 1.5M-group hash aggregate, the "
         "engine-constant floor also documented on q4_top_users; "
@@ -3682,7 +3694,8 @@ def ext_tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame
         "map-side partials. Round 14: that join is SHUFFLE_HASH-hinted "
         "past broadcast scale (size-gated on orders' disk bytes, the "
         "q21 pattern) — neither fact side is sorted; local A/B "
-        "marginal (2.56 vs 2.66s median at 100x, bench_q9_ab.py), "
+        "marginal (2.56 vs 2.66s median at 100x, measured at 6482cf1; "
+        "`scripts/ab.py ext_tpch_q9_product_type_profit 6482cf1^`), "
         "shipped on the sort-removal structural argument.",
 )
 def ext_tpch_q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3716,15 +3729,15 @@ def ext_tpch_q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFra
     # join (guide §3.1) — builds the 2-column orders projection per
     # partition and sorts NEITHER side. Same size-gate-from-below as
     # q21: only hint past broadcast scale, where the unhinted plan
-    # degrades to the sorted SMJ. Honest local A/B (bench_q9_ab.py,
-    # interleaved fresh-JVM pairs at 100x): 2/1/1 win/tie/loss,
+    # degrades to the sorted SMJ. Honest local A/B (measured at
+    # 6482cf1, interleaved fresh-JVM pairs at 100x): 2/1/1 win/tie/loss,
     # medians 2.56 vs 2.66s, pooled mins 2.37 vs 2.50 — a marginal
     # local win; shipped on the structural argument that the deleted
     # per-partition sorts are O(n log n) state that grows with
     # partition size while the hash build is the smaller projection
     # (the q21 rework measured the same sort removal at -45% where the
     # sort was the wall).
-    if _table_disk_bytes(sf_dir, "orders") >= (32 << 20):
+    if _size_gate(sf_dir, "orders", lo=32 << 20):
         orders = orders.hint("shuffle_hash")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
@@ -3771,7 +3784,8 @@ def ext_tpch_q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFra
         "enters the aggregate (5 regions, uniform suppliers): the "
         "catalog aggregate alone measured 4.62s full vs 2.15s pushed "
         "at 100x, full query 4.21s -> 2.24s solo "
-        "(scripts/bench_q11_ab.py, value-identity asserted).",
+        "(measured at 32472ee, value-identity asserted; "
+        "`scripts/ab.py ext_tpch_q11_important_parts 32472ee^`).",
 )
 def ext_tpch_q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     s_asia = _region_suppliers(spark, sf_dir, "ASIA").select("s_suppkey")
@@ -4078,8 +4092,9 @@ def ext_tpch_q20_excess_stock_suppliers(spark: SparkSession, sf_dir: str) -> Dat
         "exactly as the reference's l1 multiplicity does. The oracle "
         "keeps the literal EXISTS form so DuckDB derives the answer "
         "independently; the supplier/nation/region chain broadcasts. "
-        "Round-12 stage probes (scripts/bench_q21_ab.py, fresh JVM "
-        "per variant at 100x): li scan 0.43s + F-orders scan 0.25s; "
+        "Round-12 stage probes (probe script at "
+        "1974d3b:scripts/bench_q21_ab.py, fresh JVM per variant at "
+        "100x): li scan 0.43s + F-orders scan 0.25s; "
         "the li x F-orders SMJ ALONE measures 5.5s median — at the "
         "full query's own wall — and the groupBy(l_orderkey) "
         "SortAggregate rework over the SAME SMJ was a wash. Round 14 "
@@ -4124,7 +4139,7 @@ def ext_tpch_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFram
     # inputs (sf0.1: 2.6 MB orders) the F-orders projection broadcasts
     # for free — only hint once orders is provably past broadcast size
     # on disk, where the unhinted plan degrades to the sorted SMJ.
-    if _table_disk_bytes(sf_dir, "orders") >= (32 << 20):
+    if _size_gate(sf_dir, "orders", lo=32 << 20):
         orders = orders.hint("shuffle_hash")
     lo = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
@@ -4143,9 +4158,11 @@ def ext_tpch_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFram
     # asserted identity vs the oracle). Riding the UNSORTED SHJ output
     # this plans as a HashAggregate on the join's partitioning — with
     # the SMJ it planned as a SortAggregate and measured a wash (the
-    # sorts were the cost, not the window buffers: see
-    # scripts/bench_q21_ab.py round-14 numbers — interleaved A/B
-    # window/agg/agg_shj 6.95/4.14/3.80s, pooled mins 4.33/3.98/3.66).
+    # sorts were the cost, not the window buffers: round-14 numbers
+    # measured at 6482cf1 — interleaved A/B window/agg/agg_shj
+    # 6.95/4.14/3.80s, pooled mins 4.33/3.98/3.66; the shipped form
+    # against the window form: `scripts/ab.py
+    # ext_tpch_q21_waiting_suppliers 6482cf1^`).
     late_s = F.when(F.col("_late"), F.col("l_suppkey"))
     per_order = (
         lo.groupBy("l_orderkey")
@@ -4863,8 +4880,9 @@ def x_eval_brier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "registry, a coverage hole this row closes). Round 11: "
         "persist_tokens=True — pass 2 reads the cached tokenized "
         "projection instead of re-running explode+md5 (22.1s -> 13.3s "
-        "at 100x, scripts/bench_dsir_ab.py; value-hash parity "
-        "checked). The timing harness REBUILDS the plan and clears the "
+        "at 100x, measured at 90aa144, value-hash parity checked; "
+        "`scripts/ab.py x_text_dsir 90aa144^`). The timing harness "
+        "REBUILDS the plan and clears the "
         "cache per timed run (time_suite, fixed round 12 per the "
         "advisor: clearCache() also unregisters the persist, so the "
         "r11-published 21.7s row was the fully-UNCACHED recompute "
@@ -5097,7 +5115,8 @@ def x_vec_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         "One lazy plan: per step a filtered user-keyed min(ts) hash "
         "aggregate joined to the shrinking survivor set; the lag window "
         "runs over O(steps) rows, never the event stream. Round-13 "
-        "probe (scripts/bench_funnel_ab.py, 100x solo): shipped 2.86s; "
+        "probe (unshipped variants, probe script at "
+        "32472ee:scripts/bench_funnel_ab.py; 100x solo): shipped 2.86s; "
         "the step-1 aggregate ALONE is 1.30s (events scan 0.36s) and "
         "the three chained stages cannot beat ~2x that floor — fusing "
         "all steps onto one user-keyed exchange measured 2.64s (a "
@@ -5150,7 +5169,8 @@ def ext_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
         "weeks rows), and the first-event table is min(week) derived "
         "from it (date_trunc monotonic => value-identical); attach "
         "join + matrix aggregate read the cached set. 4.39s -> 2.26s "
-        "at 100x (scripts/bench_cohort_ab.py). No window over the "
+        "at 100x (measured at 377d7ef; `scripts/ab.py "
+        "ext_cohort_retention 377d7ef^`). No window over the "
         "event stream.",
 )
 def ext_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5330,7 +5350,10 @@ def ext_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "multiplies every shingle's df, and at 10x the dense shingles "
         "sit JUST under max_df=100 (worst case: maximal un-pruned "
         "fan-out) while at 20x+ they cross it and prune. Round-12 "
-        "stage probes (scripts/bench_incr_ab.py) dismantled the r11 "
+        "stage probes (probe script at "
+        "2ddd56a:scripts/bench_incr_ab.py; the normalized() fix: "
+        "`scripts/ab.py x_dedup_incremental 2ddd56a^`) dismantled "
+        "the r11 "
         "committed 36.0s/2.1x row: it was 2-task scan starvation "
         "(single-row-group bench layout, fixed by layout v2) stacked "
         "on the regexp failure-path cliff in normalized() (negated "

@@ -163,8 +163,9 @@ EXTRA_QUERIES = [
     # in, per the r8 verdict item-4 audit)
     "x_corpus_snapshot_diff",
     # round-9 addition: the collapse-then-prefix exact-Jaccard default
-    # (its duplicate-dense A/B lives in scripts/bench_jaccard_ab.py;
-    # this row times the registered query's corpus)
+    # (its duplicate-dense A/B script is in git at
+    # 7c14ca9:scripts/bench_jaccard_ab.py; this row times the
+    # registered query's corpus)
     "x_dedup_jaccard_collapsed",
     # round-10 additions: calibration reliability table + asymmetric
     # containment join (registered BEFORE this round's regeneration

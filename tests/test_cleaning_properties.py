@@ -14,6 +14,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from data_wrangling_spark.functions import cleaning as C
+from data_wrangling_spark.plans.osm_oracle import _clean
 
 #: adversarial seeds mixed into the random corpus: reference dirty values
 #: (FIXTURES.md §3) + structural edge cases
@@ -50,6 +51,9 @@ def test_cleaners_total_and_invariant(spark, values):
         C.clean_city(C.clean_city("v")).alias("city2"),
         C.clean_state(C.clean_state("v")).alias("state2"),
         C.clean_street(C.clean_street("v")).alias("street2"),
+        # the dispatch the pipeline runs, for the oracle comparison
+        C.clean_tag_value(F.lit("phone"), "v").alias("tv_phone"),
+        C.clean_tag_value(F.lit("state"), "v").alias("tv_state"),
     ).collect()
 
     for r in rows:
@@ -76,6 +80,11 @@ def test_cleaners_total_and_invariant(spark, values):
         else:
             assert r.ttype == "regular"
             assert r.tkey == r.v
+
+        # the independent golden oracle (plans/osm_oracle) agrees with
+        # the Spark dispatch on the reference phone and state rules
+        assert r.tv_phone == _clean("phone", r.v), (r.v, r.tv_phone)
+        assert r.tv_state == _clean("state", r.v), (r.v, r.tv_state)
 
         # idempotence
         assert r.postcode2 == r.postcode

@@ -462,3 +462,20 @@ def test_sequence_pack_plan_is_distributed(spark):
     assert all(len(g) == 3 for g in windows), (
         f"cumsum window lost its partition spec: {windows}"
     )
+
+
+@pytest.mark.parametrize(
+    "name", ["ext_tpch_q9_product_type_profit", "ext_tpch_q21_waiting_suppliers"]
+)
+@pytest.mark.parametrize("size, hinted", [(None, False), (64 << 20, True)])
+def test_shuffle_hash_gate_shut_on_unknown_size(spark, monkeypatch, name, size, hinted):
+    """The q9/q21 SHUFFLE_HASH hint on orders is gated on its measured
+    on-disk size (>= 32 MB). A size that cannot be measured must keep
+    the gate shut, so the plan stays adaptive; a measured large size
+    opens it (the control showing the check can see the hint)."""
+    from data_wrangling_spark.plans import scale_queries
+
+    monkeypatch.setattr(scale_queries, "_table_disk_bytes", lambda *_: size)
+    df = QUERIES[name].spark(spark, SF_DIR)
+    plan = df._jdf.queryExecution().analyzed().toString()
+    assert ("shuffle_hash" in plan.lower()) == hinted, plan
