@@ -282,6 +282,63 @@ def ngram_jaccard_pairs(
     )
 
 
+def _prefix_postings(
+    df: DataFrame, id_col: str, text_col: str, n: int, threshold: float
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The prefix-filter builder behind both exact gram joins
+    (:func:`jaccard_pairs_prefix`, :func:`containment_pairs`). Returns
+
+    - ``gram_sets`` (doc, _grams): each non-NULL document's DISTINCT
+      64-bit gram hashes, documents with no gram dropped;
+    - ``sh`` (doc, n_sh, gram): the full postings;
+    - ``prefix`` (doc, gram): each document's PREFIX postings — its
+      first ``|S| - ceil(t·|S|) + 1`` grams under the global order
+      (ascending document frequency, rarest first, ties by gram).
+
+    ``ceil(t·|S|)`` is computed as ``ceil(t·|S| - 1e-9)``: float
+    rounding may only LENGTHEN the prefix (extra candidates — safe),
+    never shorten it (false negatives — wrong).
+
+    Scale shape: one df aggregate (map-side partials collapse to the
+    vocabulary) and one per-DOC row_number window (bounded by document
+    length). Gram identity rides as hashes end to end, so strings never
+    shuffle."""
+    from pyspark.sql import Window
+
+    gram_sets = (
+        df.filter(F.col(text_col).isNotNull())
+        .select(F.col(id_col).alias("doc"), tokens(text_col).alias("_toks"))
+        .select(
+            "doc", gram_hashes_from_tokens(F.col("_toks"), n).alias("_grams")
+        )
+        .filter(F.size("_grams") >= 1)
+    )
+    # per-doc set size rides the explode as a projected column — no
+    # separate sizes aggregate + join (the arrays are distinct, so
+    # size(_grams) IS the posting count). explode_OUTER + manual null
+    # filter, NOT plain explode: plain explode lets
+    # InferFiltersFromGenerate add a non-null/size filter below the
+    # Generate, and its pushdown re-inlines the whole gram-hash chain
+    # (tokenize + n zip_with levels) into duplicated expressions —
+    # measured 14.4s vs 0.9s on a 200-doc slice at the 100x dir
+    # (round-10 probe)
+    sh = gram_sets.select(
+        "doc",
+        F.size("_grams").alias("n_sh"),
+        F.explode_outer("_grams").alias("gram"),
+    ).filter(F.col("gram").isNotNull())
+    dfreq = sh.groupBy("gram").agg(F.count(F.lit(1)).alias("_df"))
+    w = Window.partitionBy("doc").orderBy("_df", "gram")
+    ranked = sh.join(dfreq, "gram").withColumn("_pos", F.row_number().over(w))
+    prefix = ranked.filter(
+        F.col("_pos")
+        <= F.col("n_sh")
+        - F.ceil(F.lit(threshold) * F.col("n_sh") - F.lit(1e-9))
+        + F.lit(1)
+    ).select("doc", "gram")
+    return gram_sets, sh, prefix
+
+
 def jaccard_pairs_prefix(
     df: DataFrame,
     id_col: str,
@@ -309,13 +366,8 @@ def jaccard_pairs_prefix(
     frequent shingles sort to the suffix and never generate
     candidates, yet still count in verification.
 
-    ``ceil(t·|S|)`` is computed as ``ceil(t·|S| - 1e-9)``: float
-    rounding may only LENGTHEN the prefix (extra candidates — safe),
-    never shorten it (false negatives — wrong).
-
-    Scale shape: postings → one df aggregate (map-side partials
-    collapse to the vocabulary) → per-DOC row_number window (bounded
-    by document length) → prefix⋈prefix candidate join → verification
+    Scale shape: the prefix postings of ``_prefix_postings`` →
+    prefix⋈prefix candidate join → verification
     by ``array_intersect`` over the two documents' gram ARRAYS (two
     narrow joins attaching one array per side, O(|S_a| + |S_b|)
     per-pair vectorized work — NOT a posting-level join: the round-8
@@ -341,37 +393,7 @@ def jaccard_pairs_prefix(
     Reference scope: the reference engine has no similarity join at
     all (S2 is an imperative cleaning pipeline); §2.11 X-DEDUP-FUZZY
     extension surface."""
-    from pyspark.sql import Window
-
-    from data_wrangling_spark.functions.text import tokens
-
-    gram_sets = (
-        df.filter(F.col(text_col).isNotNull())
-        .select(
-            F.col(id_col).alias("doc"), tokens(text_col).alias("_toks")
-        )
-        .select(
-            "doc", gram_hashes_from_tokens(F.col("_toks"), n).alias("_grams")
-        )
-        .filter(F.size("_grams") >= 1)
-    )
-    # per-doc set size rides the explode as a projected column — no
-    # separate sizes aggregate + join (the arrays are distinct, so
-    # size(_grams) IS the posting count)
-    sh = gram_sets.select(
-        "doc",
-        F.size("_grams").alias("n_sh"),
-        F.explode_outer("_grams").alias("gram"),
-    ).filter(F.col("gram").isNotNull())
-    dfreq = sh.groupBy("gram").agg(F.count(F.lit(1)).alias("_df"))
-    w = Window.partitionBy("doc").orderBy("_df", "gram")
-    ranked = sh.join(dfreq, "gram").withColumn("_pos", F.row_number().over(w))
-    prefix = ranked.filter(
-        F.col("_pos")
-        <= F.col("n_sh")
-        - F.ceil(F.lit(threshold) * F.col("n_sh") - F.lit(1e-9))
-        + F.lit(1)
-    ).select("doc", "gram")
+    gram_sets, _, prefix = _prefix_postings(df, id_col, text_col, n, threshold)
     cand = (
         prefix.alias("pa")
         .join(
@@ -439,21 +461,17 @@ def containment_pairs(
     |G_dst|), so candidates come from prefix(src) ⋈ FULL postings of
     dst — the frequent grams every document shares sort to src
     suffixes and never seed candidates, which is what bounds the join
-    fan-out. ``ceil(t·|S|)`` is ``ceil(t·|S| - 1e-9)``: float rounding
-    may only lengthen the prefix (extra candidates — safe), never
-    shorten it (false negatives — wrong).
+    fan-out.
 
-    Scale shape: the jaccard_pairs_prefix discipline end to end — gram
-    identity rides as 64-bit hashes (strings never shuffle), one df
-    aggregate (map-side partials collapse to the vocabulary), one
-    per-doc row_number window bounded by document length, the
-    prefix⋈postings candidate join on a long key, verification by
-    ``array_intersect`` over the two documents' gram arrays
-    (per-pair-linear, never a posting-level join). Candidate-count
-    honesty: on duplicate-dense corpora compose with exact-dup
-    collapse first (jaccard_pairs_collapsed's structure) — a large
-    exact-dup group makes the true directed-pair output itself
-    quadratic in group size.
+    Scale shape: the jaccard_pairs_prefix discipline end to end — the
+    same ``_prefix_postings`` (hashed grams, one df aggregate, one
+    per-doc row_number window), the prefix⋈postings candidate join on
+    a long key, verification by ``array_intersect`` over the two
+    documents' gram arrays (per-pair-linear, never a posting-level
+    join). Candidate-count honesty: on duplicate-dense corpora compose
+    with exact-dup collapse first (jaccard_pairs_collapsed's structure)
+    — a large exact-dup group makes the true directed-pair output
+    itself quadratic in group size.
 
     Returns (src_doc, dst_doc, n_common, n_src, n_dst, containment),
     src_doc != dst_doc, containment = n_common / n_src (one IEEE
@@ -464,41 +482,10 @@ def containment_pairs(
     Reference scope: no counterpart in the reference engine (S2 is an
     imperative cleaning pipeline); §2.11 X-DEDUP-FUZZY extension
     surface."""
-    from pyspark.sql import Window
-
-    from data_wrangling_spark.functions.text import tokens
-
-    gram_sets = (
-        df.filter(F.col(text_col).isNotNull())
-        .select(F.col(id_col).alias("doc"), tokens(text_col).alias("_toks"))
-        .select(
-            "doc", gram_hashes_from_tokens(F.col("_toks"), n).alias("_grams")
-        )
-        .filter(F.size("_grams") >= 1)
-    )
-    # explode_OUTER + manual null filter, NOT plain explode: plain
-    # explode lets InferFiltersFromGenerate add a non-null/size filter
-    # below the Generate, and its pushdown re-inlines the whole
-    # gram-hash chain (tokenize + n zip_with levels) into duplicated
-    # expressions — measured 14.4s vs 0.9s on a 200-doc slice at the
-    # 100x dir (round-10 probe; the exact trap jaccard_pairs_prefix
-    # already dodges the same way)
-    sh = gram_sets.select(
-        "doc",
-        F.size("_grams").alias("n_sh"),
-        F.explode_outer("_grams").alias("gram"),
-    ).filter(F.col("gram").isNotNull())
-    dfreq = sh.groupBy("gram").agg(F.count(F.lit(1)).alias("_df"))
-    w = Window.partitionBy("doc").orderBy("_df", "gram")
-    ranked = sh.join(dfreq, "gram").withColumn("_pos", F.row_number().over(w))
-    prefix = ranked.filter(
-        F.col("_pos")
-        <= F.col("n_sh")
-        - F.ceil(F.lit(threshold) * F.col("n_sh") - F.lit(1e-9))
-        + F.lit(1)
-    ).select(F.col("doc").alias("src"), "gram")
+    gram_sets, sh, prefix = _prefix_postings(df, id_col, text_col, n, threshold)
     cand = (
-        prefix.join(
+        prefix.select(F.col("doc").alias("src"), "gram")
+        .join(
             sh.select(F.col("doc").alias("dst"), "gram"),
             ["gram"],
         )

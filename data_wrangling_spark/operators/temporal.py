@@ -23,14 +23,18 @@ key) — the 100 TB-safe shape:
 Skew note: both partition by the entity key; the window is linear in
 the key's row count but runs as ONE task per key — the one skew shape
 AQE cannot split. ``asof_join_adaptive`` is the scale-safe default:
-one cheap hash-bucket counting job detects heavy keys, and ONE carry
-window runs on (key, time-bucket) for those keys and (key, 0) for the
-uniform mass — plain ``asof_join``'s pipeline plus a tiny broadcast.
+one cheap hash-bucket counting job detects heavy keys; with none it
+returns plain ``asof_join``'s plan, otherwise ONE carry window runs on
+(key, time-bucket) for those keys and (key, 0) for the uniform mass,
+routed by a literal ``isin`` predicate — no join, no broadcast. Both
+skew-safe forms share one builder, ``_bucketed_carry``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -170,6 +174,191 @@ def asof_join(
     )
 
 
+def _bucketed_carry(
+    left: DataFrame,
+    right: DataFrame,
+    on: str,
+    left_time: str,
+    right_time: str,
+    payload: dict[str, str],
+    bucket_seconds: int,
+    direction: str,
+    right_tiebreak: str | None,
+    is_heavy: Callable[[Column], Column],
+) -> DataFrame:
+    """The one (key, time-bucket) carry window behind both skew-safe
+    as-of joins; results are EXACTLY plain ``asof_join``'s.
+
+    ``is_heavy`` maps the key column to a boolean Column. Rows of heavy
+    keys run the carry per (key, floor(time / bucket_seconds)), each
+    bucket seeded by a boundary row holding the latest (direction-wise)
+    right payload over all strictly-earlier buckets of the key; all
+    other rows run plain ``asof_join``'s whole-key window as bucket 0.
+    ``asof_join_bucketed`` passes an always-true predicate, which
+    Catalyst folds out of the filter and the ``when``;
+    ``asof_join_adaptive`` passes its literal heavy-bucket ``isin``.
+
+    A predicate that hashes the key must see it at ONE type at every
+    site: xxhash64 hashes IntegerType and LongType differently (4- vs
+    8-byte primitive paths), so hashing each side's native dtype would
+    bucket the SAME key value differently across detection, the thin
+    pre-pass and the wide routing when the sides' key dtypes differ —
+    splitting a key's mass across detection buckets (false negatives)
+    and, worse, routing wide rows into bucketed partitions whose
+    boundary seeds the pre-pass never built (the round-6 review find).
+    The canonical type is the union-promoted key type, the one ``_k``
+    carries here.
+
+    ``direction='forward'`` reuses the backward machinery on negated
+    time (max -t with -rt <= -lt IS min rt with rt >= lt; the
+    greatest-tiebreak rule is direction-invariant).
+
+    Pipeline: ONE thin union of the heavy rows (key, scaled time,
+    marker, tiebreak, payload — no left carry columns) feeds the
+    per-(key, bucket) summary, whose partial max_by runs ON THE SCAN
+    TASKS, so the summary shuffle carries only per-task per-bucket
+    partials. Left rows ride the thin union too (outranked by any right
+    row), which gives LEFT-ONLY buckets a summary row — and therefore
+    boundary coverage — without a separate distinct pass. The boundary
+    window over summaries is O(touched buckets), and boundary rows are
+    UNIONED into the big exchange as seed rows (marker -1, time -inf,
+    sorting first in their partition) — no join back, so the wide data
+    flows scan -> one exchange on (key, bucket) -> window -> project,
+    plain ``asof_join``'s pipeline on a finer key.
+
+    NULL times of heavy keys get a sentinel bucket at the START of the
+    traversal — bucket -2^63 going backward but +2^63-1 going forward,
+    because plain asof_join orders by _t asc (nulls FIRST) backward and
+    _t desc (nulls LAST) forward: backward, a null-time right row is
+    'earliest' and carries into every later row until superseded;
+    forward, null-time rows trail the whole traversal and only see each
+    other plus the final boundary (SQL's one NULL group would sort first
+    both ways, which diverged forward — pinned by the null-time
+    equivalence test).
+
+    The bucket index is clamped to +-4e18 before the long cast: ANY
+    monotone-in-time bucket assignment is semantically safe (buckets
+    only split the carry; merging distant buckets is harmless), and the
+    clamp keeps extreme-but-finite numeric times (e.g. raw nanos with
+    tiny bucket_seconds) from overflowing the ANSI cast. NaN/+-inf times
+    remain a precondition violation: they fail loudly at the cast under
+    ANSI (the session default) instead of silently misordering."""
+    sign = 1.0 if direction == "backward" else -1.0
+    lcols = list(left.columns)
+    # the key is not stored twice when _k can exactly reconstruct it
+    # (same guard as plain asof_join: a union type promotion would
+    # otherwise change the output schema); _s is sign-scaled double, so
+    # left_time always rides as a carry column here
+    key_reconstructable = left.schema[on].dataType == right.schema[on].dataType
+    carry_cols = [c for c in lcols if c != on or not key_reconstructable]
+    w_lit = float(bucket_seconds)
+    null_bucket = -(2**63) if direction == "backward" else 2**63 - 1
+    # greatest/least SKIP NULLs (they would swallow the sentinel), so
+    # the NULL branch is an explicit when, not a coalesce
+    bucket_of = F.when(
+        F.col("_s").isNull(), F.lit(null_bucket).cast("long")
+    ).otherwise(
+        F.least(
+            F.greatest(F.floor(F.col("_s") / w_lit), F.lit(-4e18)), F.lit(4e18)
+        ).cast("long")
+    )
+    tb = ["_tb"] if right_tiebreak else []
+    tb_null = (
+        [F.lit(None).cast(right.schema[right_tiebreak].dataType).alias("_tb")]
+        if right_tiebreak else []
+    )
+    null_lc = [
+        F.lit(None).cast(left.schema[c].dataType).alias(f"_lc_{c}")
+        for c in carry_cols
+    ]
+    r_rows = right.select(
+        F.col(on).alias("_k"),
+        (_seconds(right, right_time) * sign).alias("_s"),
+        F.lit(0).alias("_m"),
+        *null_lc,
+        F.struct(*[F.col(s).alias(d) for s, d in payload.items()]).alias("_p"),
+        *([F.col(right_tiebreak).alias("_tb")] if right_tiebreak else []),
+    )
+    l_rows = left.select(
+        F.col(on).alias("_k"),
+        (_seconds(left, left_time) * sign).alias("_s"),
+        F.lit(1).alias("_m"),
+        *[F.col(c).alias(f"_lc_{c}") for c in carry_cols],
+        F.lit(None).cast(r_rows.schema["_p"].dataType).alias("_p"),
+        *tb_null,
+    )
+    wide = l_rows.unionByName(r_rows)
+
+    # THIN pre-pass over heavy rows: per-(key, bucket) winning right
+    # payload; among right rows the greatest (time, tiebreak) wins,
+    # matching the carry window's (_s asc, _m, _tb asc) + last() order.
+    # No repartition here: the partial max_by compacts on the scan
+    # tasks, so the shuffle is O(buckets/task).
+    ord_fields = [(F.lit(1) - F.col("_m")).alias("r"), F.col("_s").alias("s")]
+    if right_tiebreak:
+        ord_fields.append(F.col("_tb").alias("t"))
+    summary = (
+        wide.select("_k", "_s", "_m", "_p", *tb)
+        .filter(is_heavy(F.col("_k")))
+        .withColumn("_bk", bucket_of)
+        .groupBy("_k", "_bk")
+        .agg(F.max_by("_p", F.struct(*ord_fields)).alias("_pb"))
+    )
+    # boundary payload for bucket b = latest summary among buckets
+    # strictly before b — O(touched buckets) rows through this window
+    carry_w = (
+        Window.partitionBy("_k")
+        .orderBy("_bk")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    b_rows = summary.select(
+        "_k",
+        F.lit(float("-inf")).alias("_s"),
+        "_bk",
+        F.lit(-1).alias("_m"),
+        *null_lc,
+        F.last("_pb", ignorenulls=True).over(carry_w).alias("_p"),
+        *tb_null,
+    ).filter(F.col("_p").isNotNull())
+
+    # WIDE pass: one union, one exchange; routing is a map-side
+    # predicate, no join. Light partitions mix NULL and real times, so
+    # the NULL placement must match plain's traversal: first going
+    # backward (asc), last going forward (desc on unnegated time);
+    # heavy partitions hold no NULL _s except in the sentinel bucket,
+    # where rows tie and _m orders boundary < right < left as always.
+    flagged = wide.withColumn(
+        "_bk",
+        F.when(is_heavy(F.col("_k")), bucket_of).otherwise(F.lit(0).cast("long")),
+    ).unionByName(b_rows)
+    s_order = (
+        F.col("_s").asc_nulls_first()
+        if direction == "backward"
+        else F.col("_s").asc_nulls_last()
+    )
+    order_cols = [s_order, F.col("_m")] + (
+        [F.col("_tb").asc_nulls_first()] if right_tiebreak else []
+    )
+    w = (
+        Window.partitionBy("_k", "_bk")
+        .orderBy(*order_cols)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    carried = flagged.select(
+        "_m",
+        "_k",
+        *[f"_lc_{c}" for c in carry_cols],
+        F.last("_p", ignorenulls=True).over(w).alias("_c"),
+    )
+    return carried.filter(F.col("_m") == 1).select(
+        *[
+            F.col("_k" if c == on and key_reconstructable else f"_lc_{c}").alias(c)
+            for c in lcols
+        ],
+        *[F.col(f"_c.{dst}").alias(dst) for dst in payload.values()],
+    )
+
+
 def asof_join_bucketed(
     left: DataFrame,
     right: DataFrame,
@@ -187,18 +376,12 @@ def asof_join_bucketed(
     The plain operator partitions the carry window by the join key: a
     key holding 1% of a 100 TB event stream puts 1 TB of rows through
     ONE task, and AQE cannot split a window partition the way it splits
-    a skewed join partition. Here the shuffle/window key is
-    (key, floor(time / bucket_seconds)), so a hot key's rows spread
-    across its time buckets; what crosses bucket boundaries is one
-    pre-aggregated payload row per (key, bucket) — never the raw data.
-
-    Results are EXACTLY ``asof_join``'s (pinned by equivalence tests):
-    within a bucket the same union-marker carry runs, seeded by a
-    boundary row holding the latest (direction-wise) right payload over
-    all strictly-earlier buckets. ``direction='forward'`` reuses the
-    backward machinery on negated time (max -t with -rt <= -lt IS min
-    rt with rt >= lt; the greatest-tiebreak rule is direction-
-    invariant).
+    a skewed join partition. Here every key is treated as heavy: the
+    shuffle/window key is (key, floor(time / bucket_seconds)), so a hot
+    key's rows spread across its time buckets; what crosses bucket
+    boundaries is one pre-aggregated payload row per (key, bucket) —
+    never the raw data. Results are EXACTLY ``asof_join``'s (pinned by
+    equivalence tests); the machinery is ``_bucketed_carry``.
 
     Cost vs ``asof_join``: one extra NARROW pre-pass, nothing else.
     Two earlier shapes measured 2.3-3.2x the plain form on uniform keys
@@ -215,19 +398,6 @@ def asof_join_bucketed(
       explicit repartition also defeating the summary's map-side
       partial aggregation (full-width shuffle before the agg).
 
-    This form: ONE thin union (key, scaled time, marker, tiebreak,
-    payload — no left carry columns) feeds the per-(key, bucket)
-    summary, whose partial max_by runs ON THE SCAN TASKS so the
-    summary shuffle carries only per-task per-bucket partials; left
-    rows ride the thin union too (outranked by any right row), which
-    is what gives LEFT-ONLY buckets a summary row — and therefore
-    boundary coverage — without round 5's separate distinct pass. The
-    boundary window over summaries is O(touched buckets), and boundary
-    rows are UNIONED into the big exchange as seed rows (marker -1,
-    NULL time, sorting first in each (key, bucket) partition) — no
-    join back, so the wide data flows scan -> one exchange -> window
-    -> project, exactly the plain operator's pipeline on a finer key.
-
     Equal (key, time, tiebreak) right rows with different payloads are
     nondeterministic in BOTH operators — make the tiebreak unique.
     Pick ``bucket_seconds`` so a hot key's densest bucket fits a task
@@ -236,142 +406,9 @@ def asof_join_bucketed(
         raise ValueError("direction must be 'backward' or 'forward'")
     if bucket_seconds <= 0:
         raise ValueError("bucket_seconds must be positive")
-
-    sign = 1.0 if direction == "backward" else -1.0
-    lcols = list(left.columns)
-    # the key is not stored twice when _k can exactly reconstruct it
-    # (same guard as plain asof_join: a union type promotion would
-    # otherwise change the output schema); _s is sign-scaled double, so
-    # left_time always rides as a carry column here
-    key_reconstructable = (
-        left.schema[on].dataType == right.schema[on].dataType
-    )
-    carry_cols = [c for c in lcols if c != on or not key_reconstructable]
-    w_lit = float(bucket_seconds)
-
-    l_s = (_seconds(left, left_time) * sign).alias("_s")
-    r_s = (_seconds(right, right_time) * sign).alias("_s")
-    tb_type = right.schema[right_tiebreak].dataType if right_tiebreak else None
-
-    # NULL times get a sentinel bucket at the START of the traversal —
-    # which is bucket -2^63 going backward but +2^63-1 going forward,
-    # because plain asof_join orders by _t asc (nulls FIRST) backward
-    # and _t desc (nulls LAST) forward: backward, a null-time right row
-    # is 'earliest' and carries into every later row until superseded;
-    # forward, null-time rows trail the whole traversal and only see
-    # each other plus the final boundary. The sentinel reproduces both
-    # orderings exactly (pinned by the null-time equivalence test; the
-    # round-5 review caught the forward case diverging when NULLs
-    # grouped into SQL's one NULL bucket, which sorts first both ways).
-    null_bucket = -(2**63) if direction == "backward" else 2**63 - 1
-    # bucket index clamped to +-4e18 before the long cast: ANY monotone-
-    # in-time bucket assignment is semantically safe (buckets only split
-    # the carry; merging distant buckets is harmless), and the clamp
-    # keeps extreme-but-finite numeric times (e.g. raw nanos with tiny
-    # bucket_seconds) from overflowing the ANSI cast. NaN/+-inf times
-    # remain a documented precondition violation: they fail loudly at
-    # the cast under ANSI (the session default) instead of silently
-    # misordering.
-    # greatest/least SKIP NULLs (they would swallow the sentinel), so
-    # the NULL branch is an explicit when, not a coalesce
-    bucket_of = lambda s: F.when(  # noqa: E731
-        s.isNull(), F.lit(null_bucket).cast("long")
-    ).otherwise(
-        F.least(
-            F.greatest(F.floor(s / w_lit), F.lit(-4e18)), F.lit(4e18)
-        ).cast("long")
-    )
-    p_expr = F.struct(
-        *[F.col(src).alias(dst) for src, dst in payload.items()]
-    )
-    tb_r = [F.col(right_tiebreak).alias("_tb")] if right_tiebreak else []
-    tb_null = (
-        [F.lit(None).cast(tb_type).alias("_tb")] if right_tiebreak else []
-    )
-
-    # THIN pre-pass: per-(key, bucket) winning right payload. Any right
-    # row outranks every left row (left rows ride the thin union only
-    # so LEFT-ONLY buckets still get a summary row — _pb NULL there —
-    # which is what lets the boundary window cover them without a
-    # separate distinct pass); among right rows, greatest (time,
-    # tiebreak) wins, matching the carry window's (_s asc, _m, _tb asc)
-    # + last() order exactly. No repartition here: the partial max_by
-    # compacts on the scan tasks, so the shuffle is O(buckets/task).
-    r_thin = right.select(
-        F.col(on).alias("_k"), r_s, F.lit(0).alias("_m"),
-        p_expr.alias("_p"), *tb_r,
-    ).withColumn("_bk", bucket_of(F.col("_s")))
-    p_type = r_thin.schema["_p"].dataType
-    l_thin = left.select(
-        F.col(on).alias("_k"), l_s, F.lit(1).alias("_m"),
-        F.lit(None).cast(p_type).alias("_p"), *tb_null,
-    ).withColumn("_bk", bucket_of(F.col("_s")))
-    ord_fields = [(F.lit(1) - F.col("_m")).alias("r"), F.col("_s").alias("s")]
-    if right_tiebreak:
-        ord_fields.append(F.col("_tb").alias("t"))
-    summary = (
-        l_thin.unionByName(r_thin)
-        .groupBy("_k", "_bk")
-        .agg(F.max_by("_p", F.struct(*ord_fields)).alias("_pb"))
-    )
-    # boundary payload for bucket b = latest summary among buckets
-    # strictly before b — O(touched buckets) rows through this window
-    carry_w = (
-        Window.partitionBy("_k")
-        .orderBy("_bk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    boundary = summary.select(
-        "_k",
-        "_bk",
-        F.last("_pb", ignorenulls=True).over(carry_w).alias("_p"),
-    ).filter(F.col("_p").isNotNull())
-
-    # WIDE pass: boundary seed rows union into the one big exchange.
-    # Marker order inside a (key, bucket) partition: boundary(-1) first
-    # (NULL _s + asc_nulls_first also sorts it before real rows), then
-    # right(0) before left(1) at equal times — identical to asof_join.
-    null_lc = [
-        F.lit(None).cast(left.schema[c].dataType).alias(f"_lc_{c}")
-        for c in carry_cols
-    ]
-    b_rows = boundary.select(
-        "_k", F.lit(None).cast("double").alias("_s"), "_bk",
-        F.lit(-1).alias("_m"), *null_lc, "_p", *tb_null,
-    )
-    r_rows = right.select(
-        F.col(on).alias("_k"), r_s, F.lit(0).alias("_m"), *null_lc,
-        p_expr.alias("_p"), *tb_r,
-    ).withColumn("_bk", bucket_of(F.col("_s"))).select(*b_rows.columns)
-    l_rows = left.select(
-        F.col(on).alias("_k"), l_s, F.lit(1).alias("_m"),
-        *[F.col(c).alias(f"_lc_{c}") for c in carry_cols],
-        F.lit(None).cast(p_type).alias("_p"), *tb_null,
-    ).withColumn("_bk", bucket_of(F.col("_s"))).select(*b_rows.columns)
-
-    order_cols = [F.col("_s").asc_nulls_first(), F.col("_m")] + (
-        [F.col("_tb").asc_nulls_first()] if right_tiebreak else []
-    )
-    w = (
-        Window.partitionBy("_k", "_bk")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = b_rows.unionByName(r_rows).unionByName(l_rows).select(
-        "_m",
-        "_k",
-        *[f"_lc_{c}" for c in carry_cols],
-        F.last("_p", ignorenulls=True).over(w).alias("_c"),
-    )
-    return carried.filter(F.col("_m") == 1).select(
-        *[
-            (
-                F.col("_k") if c == on and key_reconstructable
-                else F.col(f"_lc_{c}")
-            ).alias(c)
-            for c in lcols
-        ],
-        *[F.col(f"_c.{dst}").alias(dst) for dst in payload.values()],
+    return _bucketed_carry(
+        left, right, on, left_time, right_time, payload, bucket_seconds,
+        direction, right_tiebreak, is_heavy=lambda c: F.lit(True),
     )
 
 
@@ -424,16 +461,10 @@ def asof_join_adaptive(
     summary rows from 5M inputs at weekly buckets on uniform bench
     data).
 
-    Ordering is plain ``asof_join``'s within every partition: light
-    partitions hold a whole key (time asc, NULLs first going backward /
-    last going forward — matching plain's asc/desc traversal exactly);
-    heavy partitions hold one bucket, seeded by a boundary row carrying
-    the latest right payload from all strictly-earlier buckets
-    (``_s = -inf`` so the seed sorts first; real timestamps are finite).
-    Heavy NULL-time rows isolate in the direction-appropriate sentinel
-    bucket, same as ``asof_join_bucketed``. Result-identical to plain
-    by construction (pinned by equivalence tests, including NULL keys,
-    NULL times, and both directions).
+    Ordering, boundary seeds and NULL-time sentinel buckets are
+    ``_bucketed_carry``'s, shared with ``asof_join_bucketed``.
+    Result-identical to plain by construction (pinned by equivalence
+    tests, including NULL keys, NULL times, and both directions).
 
     Detection runs EAGERLY at call time: one O(buckets) aggregate whose
     result — the set of heavy bucket ids, usually empty — is collected
@@ -484,44 +515,11 @@ def asof_join_adaptive(
     if detection_buckets <= 0:
         raise ValueError("detection_buckets must be positive")
 
-    sign = 1.0 if direction == "backward" else -1.0
-    lcols = list(left.columns)
-    key_reconstructable = (
-        left.schema[on].dataType == right.schema[on].dataType
-    )
-    carry_cols = [c for c in lcols if c != on or not key_reconstructable]
-    w_lit = float(bucket_seconds)
-    null_bucket = -(2**63) if direction == "backward" else 2**63 - 1
-    # bucket index clamped to +-4e18 before the long cast: ANY monotone-
-    # in-time bucket assignment is semantically safe (buckets only split
-    # the carry; merging distant buckets is harmless), and the clamp
-    # keeps extreme-but-finite numeric times (e.g. raw nanos with tiny
-    # bucket_seconds) from overflowing the ANSI cast. NaN/+-inf times
-    # remain a documented precondition violation: they fail loudly at
-    # the cast under ANSI (the session default) instead of silently
-    # misordering.
-    # greatest/least SKIP NULLs (they would swallow the sentinel), so
-    # the NULL branch is an explicit when, not a coalesce
-    bucket_of = lambda s: F.when(  # noqa: E731
-        s.isNull(), F.lit(null_bucket).cast("long")
-    ).otherwise(
-        F.least(
-            F.greatest(F.floor(s / w_lit), F.lit(-4e18)), F.lit(4e18)
-        ).cast("long")
-    )
-
     # ---- detection: heavy hash-buckets, one eager O(buckets) job -------
     # xxhash64(NULL) is the (non-null) seed hash, so NULL keys land in a
     # bucket like any value — no null-safe machinery needed anywhere.
-    # EVERY hash site must see the key at ONE type: xxhash64 hashes
-    # IntegerType and LongType differently (4- vs 8-byte primitive
-    # paths), so hashing each side's native dtype would bucket the SAME
-    # key value differently across detection / thin pre-pass / wide
-    # routing when the sides' key dtypes differ — splitting a key's mass
-    # across detection buckets (false negatives) and, worse, routing
-    # wide rows into bucketed partitions whose boundary seeds the thin
-    # pass never built (the round-6 review find). The canonical type is
-    # the union-promoted key type, the one the wide pass carries.
+    # Every hash site sees the key at the union-promoted type, the one
+    # the wide pass carries (why: ``_bucketed_carry``'s docstring).
     key_type = (
         left.select(F.col(on).alias("_k"))
         .unionByName(right.select(F.col(on).alias("_k")))
@@ -555,118 +553,10 @@ def asof_join_adaptive(
         )
     # literal predicate (Catalyst converts long isin lists to an O(1)
     # InSet above the conversion threshold); no broadcast join anywhere
-    is_heavy = lambda c: hb_of(c).isin(heavy_ids)  # noqa: E731
-
-    l_s = (_seconds(left, left_time) * sign).alias("_s")
-    r_s = (_seconds(right, right_time) * sign).alias("_s")
-    tb_type = right.schema[right_tiebreak].dataType if right_tiebreak else None
-    p_expr = F.struct(
-        *[F.col(src).alias(dst) for src, dst in payload.items()]
-    )
-    tb_r = [F.col(right_tiebreak).alias("_tb")] if right_tiebreak else []
-    tb_null = (
-        [F.lit(None).cast(tb_type).alias("_tb")] if right_tiebreak else []
-    )
-
-    # ---- thin boundary pre-pass over HEAVY rows only -------------------
-    # same summary/boundary machinery as asof_join_bucketed, but the
-    # heavy-bucket filter makes the aggregate genuinely compact
-    r_thin = (
-        right.select(
-            F.col(on).alias("_k"), r_s, F.lit(0).alias("_m"),
-            p_expr.alias("_p"), *tb_r,
-        )
-        .filter(is_heavy(F.col("_k")))
-        .withColumn("_bk", bucket_of(F.col("_s")))
-    )
-    p_type = r_thin.schema["_p"].dataType
-    l_thin = (
-        left.select(
-            F.col(on).alias("_k"), l_s, F.lit(1).alias("_m"),
-            F.lit(None).cast(p_type).alias("_p"), *tb_null,
-        )
-        .filter(is_heavy(F.col("_k")))
-        .withColumn("_bk", bucket_of(F.col("_s")))
-    )
-    ord_fields = [(F.lit(1) - F.col("_m")).alias("r"), F.col("_s").alias("s")]
-    if right_tiebreak:
-        ord_fields.append(F.col("_tb").alias("t"))
-    summary = (
-        l_thin.unionByName(r_thin)
-        .groupBy("_k", "_bk")
-        .agg(F.max_by("_p", F.struct(*ord_fields)).alias("_pb"))
-    )
-    carry_w = (
-        Window.partitionBy("_k")
-        .orderBy("_bk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    boundary = summary.select(
-        "_k",
-        "_bk",
-        F.last("_pb", ignorenulls=True).over(carry_w).alias("_p"),
-    ).filter(F.col("_p").isNotNull())
-
-    # ---- wide pass: one union, one flag join, one exchange -------------
-    null_lc = [
-        F.lit(None).cast(left.schema[c].dataType).alias(f"_lc_{c}")
-        for c in carry_cols
-    ]
-    # boundary seeds are heavy by construction; -inf sorts before every
-    # real time in both directions' orderings (see docstring)
-    b_rows = boundary.select(
-        "_k", F.lit(float("-inf")).alias("_s"), "_bk",
-        F.lit(-1).alias("_m"), *null_lc, "_p", *tb_null,
-    )
-    r_rows = right.select(
-        F.col(on).alias("_k"), r_s, F.lit(0).alias("_m"), *null_lc,
-        p_expr.alias("_p"), *tb_r,
-    )
-    l_rows = left.select(
-        F.col(on).alias("_k"), l_s, F.lit(1).alias("_m"),
-        *[F.col(c).alias(f"_lc_{c}") for c in carry_cols],
-        F.lit(None).cast(p_type).alias("_p"), *tb_null,
-    )
-    # routing is a map-side literal predicate — no join, no broadcast
-    wide = l_rows.unionByName(r_rows)
-    flagged = wide.withColumn(
-        "_bk",
-        F.when(is_heavy(F.col("_k")), bucket_of(F.col("_s")))
-        .otherwise(F.lit(0).cast("long")),
-    ).unionByName(b_rows)
-    # light partitions mix NULL and real times, so the NULL placement
-    # must match plain's traversal: first going backward (asc), last
-    # going forward (desc on unnegated time); heavy partitions hold no
-    # NULL _s except in the sentinel bucket, where rows tie and _m
-    # orders boundary < right < left as always
-    s_order = (
-        F.col("_s").asc_nulls_first()
-        if direction == "backward"
-        else F.col("_s").asc_nulls_last()
-    )
-    order_cols = [s_order, F.col("_m")] + (
-        [F.col("_tb").asc_nulls_first()] if right_tiebreak else []
-    )
-    w = (
-        Window.partitionBy("_k", "_bk")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = flagged.select(
-        "_m",
-        "_k",
-        *[f"_lc_{c}" for c in carry_cols],
-        F.last("_p", ignorenulls=True).over(w).alias("_c"),
-    )
-    return carried.filter(F.col("_m") == 1).select(
-        *[
-            (
-                F.col("_k") if c == on and key_reconstructable
-                else F.col(f"_lc_{c}")
-            ).alias(c)
-            for c in lcols
-        ],
-        *[F.col(f"_c.{dst}").alias(dst) for dst in payload.values()],
+    return _bucketed_carry(
+        left, right, on, left_time, right_time, payload, bucket_seconds,
+        direction, right_tiebreak,
+        is_heavy=lambda c: hb_of(c).isin(heavy_ids),
     )
 
 

@@ -68,9 +68,9 @@ def x_dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_fingerprint(docs, "text", "doc_id").orderBy("doc_id")
 
 
-@register(
-    "x_dedup_ngram_jaccard",
-    oracle=r"""
+# plain pair-join re-derivation in the STRING-shingle domain, shared
+# by every exact Jaccard form
+_NGRAM_JACCARD_ORACLE = r"""
         WITH docs AS (
             SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
             FROM documents WHERE doc_id < 200
@@ -94,7 +94,12 @@ def x_dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
                      JOIN sizes sb ON p.doc_b = sb.doc_id
         WHERE CAST(p.n_common AS DOUBLE) / (sa.n + sb.n - p.n_common) >= 0.3
         ORDER BY doc_a, doc_b
-    """,
+    """
+
+
+@register(
+    "x_dedup_ngram_jaccard",
+    oracle=_NGRAM_JACCARD_ORACLE,
     doc="X-DEDUP-FUZZY exact form: word-trigram Jaccard ≥ 0.3 via shingle "
         "inverted-index join (no n² grid). Restricted to doc_id < 200 to "
         "bound the oracle's pair count; the operator itself is unbounded.",
@@ -282,31 +287,7 @@ def x_corpus_snapshot_diff_realistic(
     # in the STRING-shingle domain): prefix filtering is a candidate
     # PRUNING scheme, provably output-identical — a dropped true pair or
     # a gram-hash collision would surface as a driver hash mismatch here
-    oracle=r"""
-        WITH docs AS (
-            SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
-            FROM documents WHERE doc_id < 200
-        ), sh AS (
-            SELECT doc_id, unnest(list_distinct(
-                list_transform(range(1, greatest(len(toks) - 1, 1)),
-                               i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-            )) AS shingle
-            FROM docs WHERE len(toks) >= 3
-        ), sizes AS (
-            SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id
-        ), pairs AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-            FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY 1, 2
-        )
-        SELECT p.doc_a, p.doc_b, p.n_common,
-               sa.n AS n_a, sb.n AS n_b,
-               CAST(p.n_common AS DOUBLE) / (sa.n + sb.n - p.n_common) AS jaccard
-        FROM pairs p JOIN sizes sa ON p.doc_a = sa.doc_id
-                     JOIN sizes sb ON p.doc_b = sb.doc_id
-        WHERE CAST(p.n_common AS DOUBLE) / (sa.n + sb.n - p.n_common) >= 0.3
-        ORDER BY doc_a, doc_b
-    """,
+    oracle=_NGRAM_JACCARD_ORACLE,
     doc="X-DEDUP-FUZZY, prefix-filtered exact form (AllPairs/PPJoin): "
         "identical output to x_dedup_ngram_jaccard, but the candidate "
         "join runs over each document's rarest (1-t)-fraction PREFIX "

@@ -68,15 +68,18 @@ def osm_pipeline_node_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.nodes_tags.orderBy("id", "key")
 
 
-@register(
-    "osm_pipeline_audit",
-    # independent dual implementation of the audit bucketing over the
-    # fixture's raw tag corpus (plans/osm_oracle.py expected_audit_rows)
-    oracle=f"""
+# independent dual implementation of the audit bucketing over the
+# fixture's raw tag corpus (plans/osm_oracle.py expected_audit_rows)
+_OSM_AUDIT_ORACLE = f"""
         SELECT field, bucket, "values", n_values
         FROM read_parquet('{oracle_parquet("audit")}')
         ORDER BY field, bucket
-    """,
+    """
+
+
+@register(
+    "osm_pipeline_audit",
+    oracle=_OSM_AUDIT_ORACLE,
     doc="OP-AGG-AUDIT over real OSM-shaped input: audit the raw (uncleaned) "
         "tag values, returning (field, bucket, values, n_values) — the "
         "reference's Step-1 workflow as one declarative job. Hash-checked "
@@ -152,11 +155,7 @@ def _scale_or_fixture_path(sf_dir: str) -> str:
     # surface) — the bench records the Spark wall with a footnote, and
     # the competitor anchor is the reference-shaped ONE-TASK iterparse
     # of the same file (scripts/bench_osm_split.py one-task config).
-    oracle=f"""
-        SELECT field, bucket, "values", n_values
-        FROM read_parquet('{oracle_parquet("audit")}')
-        ORDER BY field, bucket
-    """,
+    oracle=_OSM_AUDIT_ORACLE,
     doc="OP-AGG-AUDIT at bench scale (round-11 verdict item 3: the "
         "reference's own pipeline had no row in the multi-scale table): "
         "split-parallel parse of {sf_dir}/osm_scaled.osm (8 MB "

@@ -115,9 +115,9 @@ def ext_tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@register(
-    "ext_asof_latest_order",
-    oracle="""
+# one oracle for all three as-of strategy pins: the forms are
+# result-identical by construction
+_ASOF_LATEST_ORDER_ORACLE = """
         WITH ord AS (
             SELECT o_custkey, o_orderdate, max(o_orderkey) AS o_orderkey
             FROM orders GROUP BY 1, 2
@@ -127,7 +127,12 @@ def ext_tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame
         ASOF LEFT JOIN ord o
           ON e.user_id = o.o_custkey AND e.ts >= o.o_orderdate
         ORDER BY e.event_id
-    """,
+    """
+
+
+@register(
+    "ext_asof_latest_order",
+    oracle=_ASOF_LATEST_ORDER_ORACLE,
     doc="As-of (temporal) join: each event gets the user's most recent "
         "order at-or-before its timestamp; (custkey, date) ties resolve "
         "to the max orderkey via the operator's right_tiebreak, which "
@@ -195,17 +200,7 @@ def ext_asof_first_event(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ext_asof_latest_order_bucketed",
-    oracle="""
-        WITH ord AS (
-            SELECT o_custkey, o_orderdate, max(o_orderkey) AS o_orderkey
-            FROM orders GROUP BY 1, 2
-        )
-        SELECT e.event_id, e.user_id, e.ts, o.o_orderkey AS last_orderkey
-        FROM events e
-        ASOF LEFT JOIN ord o
-          ON e.user_id = o.o_custkey AND e.ts >= o.o_orderdate
-        ORDER BY e.event_id
-    """,
+    oracle=_ASOF_LATEST_ORDER_ORACLE,
     doc="ext_asof_latest_order through the SKEW-SAFE bucketed form: same "
         "result (same oracle), but the carry window partitions on "
         "(user, weekly time bucket) instead of user alone, so a hot "
@@ -230,17 +225,7 @@ def ext_asof_latest_order_bucketed(spark: SparkSession, sf_dir: str) -> DataFram
 
 @register(
     "ext_asof_latest_order_adaptive",
-    oracle="""
-        WITH ord AS (
-            SELECT o_custkey, o_orderdate, max(o_orderkey) AS o_orderkey
-            FROM orders GROUP BY 1, 2
-        )
-        SELECT e.event_id, e.user_id, e.ts, o.o_orderkey AS last_orderkey
-        FROM events e
-        ASOF LEFT JOIN ord o
-          ON e.user_id = o.o_custkey AND e.ts >= o.o_orderdate
-        ORDER BY e.event_id
-    """,
+    oracle=_ASOF_LATEST_ORDER_ORACLE,
     doc="ext_asof_latest_order through the ADAPTIVE form — the "
         "recommended default at scale: one hash-bucket counting job "
         "(bucket cardinality caps the partial-agg output per task, so "
@@ -1417,12 +1402,16 @@ def ext_pivot_status_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("priority")
 
 
-@register(
-    "op_csv_roundtrip",
-    oracle="""
+# a lossless round trip returns the source rows
+_NATION_ROUNDTRIP_ORACLE = """
         SELECT n_nationkey, n_name, n_regionkey
         FROM nation ORDER BY n_nationkey
-    """,
+    """
+
+
+@register(
+    "op_csv_roundtrip",
+    oracle=_NATION_ROUNDTRIP_ORACLE,
     doc="OP-SRC-CSV + OP-SNK-CSV round-trip as one oracled query: the "
         "nation table is written to CSV with headers (the reference's "
         "Step-2 export format, S2:282-332) and read back with an explicit "
@@ -1476,10 +1465,7 @@ def op_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "op_orc_roundtrip",
-    oracle="""
-        SELECT n_nationkey, n_name, n_regionkey
-        FROM nation ORDER BY n_nationkey
-    """,
+    oracle=_NATION_ROUNDTRIP_ORACLE,
     doc="ORC source/sink round-trip (Spark's second built-in columnar "
         "format — zero extra deps): write + read back must be lossless.",
 )
@@ -1569,16 +1555,14 @@ def ext_sql_api(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_SQL_API_QUERY)
 
 
-@register(
-    "x_stream_sessionize",
-    # Full ANSI oracle (round-2 verdict item 3): batch gap-sessionization
-    # plus the EXACT emission rule of the bounded drain — every session is
-    # emitted except each user's trailing one when its event-time timeout
-    # (session_end + gap, ms-truncated as Spark computes timeouts) has not
-    # been STRICTLY passed by the final watermark (max ts - 30 min delay,
-    # also ms-truncated). Exact-set equality is additionally pinned
-    # Spark-side in tests/test_streaming_sessionize.py.
-    oracle="""
+# Full ANSI oracle (round-2 verdict item 3): batch gap-sessionization
+# plus the EXACT emission rule of the bounded drain — every session is
+# emitted except each user's trailing one when its event-time timeout
+# (session_end + gap, ms-truncated as Spark computes timeouts) has not
+# been STRICTLY passed by the final watermark (max ts - 30 min delay,
+# also ms-truncated). Exact-set equality is additionally pinned
+# Spark-side in tests/test_streaming_sessionize.py.
+_STREAM_SESSIONIZE_ORACLE = """
         WITH flagged AS (
             SELECT user_id, event_id, ts,
                    CASE WHEN lag(ts) OVER w IS NULL
@@ -1609,7 +1593,12 @@ def ext_sql_api(spark: SparkSession, sf_dir: str) -> DataFrame:
                    AND epoch_us(a.session_end) // 1000 + 1800000
                        >= wm.watermark_ms)
         ORDER BY a.user_id, a.session_start
-    """,
+    """
+
+
+@register(
+    "x_stream_sessionize",
+    oracle=_STREAM_SESSIONIZE_ORACLE,
     doc="Streaming gap sessionization, STATE-AWARE (round-8): "
         "sessionize_stream_auto picks between the two row-identical "
         "forms by the backlog's parquet-footer row count. Under the "
@@ -1653,38 +1642,7 @@ def x_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x_stream_sessionize_custom",
     # identical emission semantics to x_stream_sessionize (equivalence
     # pinned in tests/test_streaming_sessionize.py), so the same oracle
-    oracle="""
-        WITH flagged AS (
-            SELECT user_id, event_id, ts,
-                   CASE WHEN lag(ts) OVER w IS NULL
-                             OR ts - lag(ts) OVER w > INTERVAL '30 minutes'
-                        THEN 1 ELSE 0 END AS new_s
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        ), sess AS (
-            SELECT user_id, ts,
-                   SUM(new_s) OVER (PARTITION BY user_id
-                                    ORDER BY ts, event_id
-                                    ROWS UNBOUNDED PRECEDING) AS session_no
-            FROM flagged
-        ), agg AS (
-            SELECT user_id, session_no, CAST(COUNT(*) AS BIGINT) AS n_events,
-                   min(ts) AS session_start, max(ts) AS session_end
-            FROM sess GROUP BY user_id, session_no
-        ), wm AS (
-            SELECT epoch_us(max(ts)) // 1000 - 1800000 AS watermark_ms
-            FROM events
-        ), last_s AS (
-            SELECT user_id, max(session_no) AS last_no
-            FROM agg GROUP BY user_id
-        )
-        SELECT a.user_id, a.session_start, a.session_end, a.n_events
-        FROM agg a JOIN last_s l USING (user_id), wm
-        WHERE NOT (a.session_no = l.last_no
-                   AND epoch_us(a.session_end) // 1000 + 1800000
-                       >= wm.watermark_ms)
-        ORDER BY a.user_id, a.session_start
-    """,
+    oracle=_STREAM_SESSIONIZE_ORACLE,
     doc="Custom stateful streaming operator (applyInPandasWithState, "
         "event-time timeouts): gap sessionization with per-user "
         "(start, end, n) state — state bounded by ACTIVE USERS, not "

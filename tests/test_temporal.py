@@ -305,30 +305,41 @@ def test_asof_adaptive_equals_plain_mixed_keys_both_directions(spark):
     """asof_join_adaptive must be row-identical to asof_join when the
     threshold splits the keyspace: heavy keys (above threshold) route
     through the bucketed path, the rest stay plain, and the union is
-    exactly the plain result."""
+    exactly the plain result. Also run without ``right_tiebreak`` (the
+    boundary pre-pass then orders by time alone), for the adaptive heavy
+    path and asof_join_bucketed; the right side is deduplicated per
+    (k, rt) by max payload first so the expected rows are deterministic."""
+    from pyspark.sql import functions as F
+
     from data_wrangling_spark.operators.temporal import (
         asof_join,
         asof_join_adaptive,
+        asof_join_bucketed,
     )
 
     ldf, rdf = _random_asof_frames(spark, seed=19, n_left=300, n_keys=4)
+    rdf_dedup = rdf.groupBy("k", "rt").agg(F.max("payload").alias("payload"))
     # n_left=300 over 4 keys -> ~75 left rows/key; threshold 60 makes
     # some (not all) keys heavy
-    for direction in ("backward", "forward"):
-        want = _rows(
-            asof_join(ldf, rdf, on="k", left_time="t", right_time="rt",
-                      payload={"payload": "p"}, direction=direction,
-                      right_tiebreak="payload")
-        )
-        got = _rows(
-            asof_join_adaptive(
-                ldf, rdf, on="k", left_time="t", right_time="rt",
-                payload={"payload": "p"}, bucket_seconds=60,
-                direction=direction, right_tiebreak="payload",
-                heavy_threshold=60,
-            )
-        )
-        assert got == want, direction
+    for tiebreak, right in (("payload", rdf), (None, rdf_dedup)):
+        for direction in ("backward", "forward"):
+            args = dict(on="k", left_time="t", right_time="rt",
+                        payload={"payload": "p"}, direction=direction,
+                        right_tiebreak=tiebreak)
+            want = _rows(asof_join(ldf, right, **args))
+            # hour buckets hold several right rows each, so the
+            # pre-pass's time order picks the boundary seed
+            for width in (60, 3600):
+                got = _rows(
+                    asof_join_adaptive(ldf, right, bucket_seconds=width,
+                                       heavy_threshold=60, **args)
+                )
+                assert got == want, (tiebreak, direction, width)
+                if tiebreak is None:
+                    got = _rows(
+                        asof_join_bucketed(ldf, right, bucket_seconds=width, **args)
+                    )
+                    assert got == want, ("bucketed", direction, width)
 
 
 def test_asof_adaptive_no_heavy_keys_collapses_to_plain_at_build(spark):
