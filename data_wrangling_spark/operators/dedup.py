@@ -529,7 +529,8 @@ def jaccard_pairs_collapsed(
     equivalence pinned in tests), and the scalable default on real
     corpora.
 
-    Why the composition (round-8 A/B, SCALING.md round-8 addendum):
+    Why the composition (round-8 A/B, round-8 addendum in
+    104d720:SCALING.md):
     prefix filtering prunes per-document FREQUENT grams, but on a
     corpus dense in exact-duplicate GROUPS even each document's rarest
     grams are shared by its whole group, so prefix candidates approach

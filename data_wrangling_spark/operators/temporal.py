@@ -498,8 +498,8 @@ def asof_join_adaptive(
 
     ``heavy_threshold`` is the max rows a single carry-window task
     should absorb: the 1M default sorts ~tens of MB per task. Size it
-    DOWN for wide rows and benchmark rigs (SCALING.md's GB-scale skew
-    section shrinks it the same way it shrinks the AQE skew
+    DOWN for wide rows and benchmark rigs (the GB-scale skew section of
+    104d720:SCALING.md shrinks it the same way it shrinks the AQE skew
     thresholds). Size ``detection_buckets`` (default 2^16) so expected
     bucket mass total_rows / buckets stays well under heavy_threshold
     (keeps false positives rare) while staying under ~rows-per-task

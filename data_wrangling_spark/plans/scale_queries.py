@@ -240,7 +240,7 @@ def ext_asof_latest_order_bucketed(spark: SparkSession, sf_dir: str) -> DataFram
         "erasure form left ~0.6s of inert machinery). Same oracle as "
         "the plain/bucketed forms (result-identical by construction). "
         "heavy_threshold (50k) and detection_buckets (4096) are "
-        "bench-sized the same way SCALING.md's skew section shrinks "
+        "bench-sized the same way the skew section of 104d720:SCALING.md shrinks "
         "the AQE thresholds to GB scale. "
         "operators/temporal.py asof_join_adaptive.",
 )
@@ -1605,7 +1605,7 @@ _STREAM_SESSIONIZE_ORACLE = """
         "2M-row state budget it runs the NATIVE session_window "
         "aggregation — the faster form per the round-7 A/B (20x: 8.4s "
         "vs the custom stateful op's 23.7s; 100x: 50.2s vs 60.2s, "
-        "SCALING.md streaming section): JVM-side window merge, no "
+        "104d720:SCALING.md streaming section): JVM-side window merge, no "
         "Arrow transfer. Over budget (a large bounded-backlog replay, "
         "where native state holds ~every event: measured 9.5M rows at "
         "100x vs the custom op's 150k user-bounded triples) it runs "
@@ -1616,7 +1616,7 @@ _STREAM_SESSIONIZE_ORACLE = """
         "execution strategy. CROSSOVER GUIDANCE (round-11, r10 verdict "
         "item 8): the safety pick is not free — at 100x the custom "
         "form pays ~2.6-4x the native wall (48.1s vs 18.3s dedicated "
-        "this round; 45.2 vs 10.9 round 10 — SCALING.md streaming "
+        "this round; 45.2 vs 10.9 round 10 — 104d720:SCALING.md streaming "
         "table) to cap state at user cardinality (150k "
         "triples vs 9.5M per-event rows, a ~64x state reduction). "
         "Pass force='native' when the state store can hold the "
@@ -1649,7 +1649,7 @@ def x_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "events (measured: 150k state rows while events grew 100x), "
         "the memory-safe form for continuous streams; ~20% slower than "
         "the native session_window registered as x_stream_sessionize "
-        "(round-7 A/B, SCALING.md streaming section). Emits exactly the "
+        "(round-7 A/B, 104d720:SCALING.md streaming section). Emits exactly the "
         "sessions the batch operator computes; sessions still open at "
         "the final watermark stay in state.",
 )
@@ -2824,7 +2824,7 @@ def x_sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "narrow orders projection is cheaper than the build+probe. "
         "The resulting plan is the measured two-fact floor — stage "
         "probes: li scan+filter 0.9s, orders SMJ customer 1.8s, "
-        "li shuffle + merge + agg ~1.6s (SCALING.md q7 floor note). "
+        "li shuffle + merge + agg ~1.6s (104d720:SCALING.md q7 floor note). "
         "Round-14 re-probe (verdict item 2, unshipped shj* variants; "
         "probe script at 6482cf1:scripts/bench_q7_ab.py): the "
         "1996-1998 shipdate window IS in the lineitem "

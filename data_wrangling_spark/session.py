@@ -78,8 +78,9 @@ def get_spark(
     # default driver heap is the first scale cliff a single-JVM local
     # run hits — 32 concurrent hash-agg tasks get ~18 MB of execution
     # memory each and large-SF aggregates die with UNABLE_TO_ACQUIRE_
-    # MEMORY (found at the 100x scale point, see SCALING.md). On a real
-    # cluster this is spark-submit's --executor-memory, not code.
+    # MEMORY (found at the 100x scale point, see 104d720:SCALING.md).
+    # On a real cluster this is spark-submit's --executor-memory, not
+    # code.
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
     if driver_mem:
         builder = builder.config("spark.driver.memory", driver_mem)

@@ -383,9 +383,8 @@ def dedup_stream(
     sf_dir: str,
     watermark: str = "2 hours",
     table_name: str = "stream_dedup",
-    sink: str = "memory",
     progress_out: dict | None = None,
-) -> DataFrame | None:
+) -> DataFrame:
     """Streaming exact deduplication: the landing directory is staged with
     the events file(s) TWICE (modeling the at-least-once re-delivery every
     real ingest pipeline sees), and ``dropDuplicatesWithinWatermark`` on
@@ -397,10 +396,9 @@ def dedup_stream(
     Output == the distinct source rows, so this op carries a full DuckDB
     oracle (x_stream_dedup) despite being a streaming job.
 
-    ``sink='noop'`` executes the full stream without materializing rows
-    (scale benchmarking; returns None). ``progress_out`` receives
-    ``state_rows_peak`` — the max ``numRowsTotal`` across the run's state
-    operators, the measured state-boundedness evidence."""
+    ``progress_out`` receives ``state_rows_peak`` — the max
+    ``numRowsTotal`` across the run's state operators, the measured
+    state-boundedness evidence."""
     from data_wrangling_spark.sources.tables import ensure_utc
 
     ensure_utc(spark)
@@ -414,14 +412,22 @@ def dedup_stream(
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "user_id", "event_type")
     )
-    writer = stream.writeStream.outputMode("append").trigger(availableNow=True)
-    if sink == "noop":
-        q = writer.format("noop").start()
-    else:
-        q = writer.format("memory").queryName(table_name).start()
+    return _drain_to_memory(spark, stream, table_name, progress_out)
+
+
+def _drain_to_memory(
+    spark: SparkSession, stream: DataFrame, table_name: str,
+    progress_out: dict | None,
+) -> DataFrame:
+    """Run ``stream`` to completion (availableNow) into the in-memory
+    table ``table_name``, record its state peak, and return the table."""
+    q = (
+        stream.writeStream.outputMode("append").trigger(availableNow=True)
+        .format("memory").queryName(table_name).start()
+    )
     q.awaitTermination()
     _record_state_rows(q, progress_out)
-    return None if sink == "noop" else spark.table(table_name)
+    return spark.table(table_name)
 
 
 def _record_state_rows(q, progress_out: dict | None) -> None:
@@ -563,9 +569,8 @@ def sessionize_stream(
     gap_minutes: int = 30,
     watermark: str = "30 minutes",
     table_name: str = "stream_sessions",
-    sink: str = "memory",
     progress_out: dict | None = None,
-) -> DataFrame | None:
+) -> DataFrame:
     """Custom stateful streaming operator (SURVEY.md §2.10's
     ``applyInPandasWithState`` escape hatch): gap-based sessionization
     with event-time timeouts.
@@ -577,20 +582,11 @@ def sessionize_stream(
     state — exactly the rows a resumed stream would still be allowed to
     extend. At scale this is the state-bounded path: memory holds one
     (start, end, n) triple per active user, not per event —
-    ``progress_out['state_rows_peak']`` reports the measured peak, and
-    ``sink='noop'`` runs the full stream without materializing output
-    (scale benchmarking; returns None).
+    ``progress_out['state_rows_peak']`` reports the measured peak.
     """
     events = read_events_stream(spark, sf_dir).withWatermark("ts", watermark)
     out = _sessionize_plan_custom(events, gap_minutes)
-    writer = out.writeStream.outputMode("append").trigger(availableNow=True)
-    if sink == "noop":
-        q = writer.format("noop").start()
-    else:
-        q = writer.format("memory").queryName(table_name).start()
-    q.awaitTermination()
-    _record_state_rows(q, progress_out)
-    return None if sink == "noop" else spark.table(table_name)
+    return _drain_to_memory(spark, out, table_name, progress_out)
 
 
 def sessionize_stream_native(
@@ -599,14 +595,13 @@ def sessionize_stream_native(
     gap_minutes: int = 30,
     watermark: str = "30 minutes",
     table_name: str = "stream_sessions_native",
-    sink: str = "memory",
     progress_out: dict | None = None,
-) -> DataFrame | None:
+) -> DataFrame:
     """Gap sessionization via Spark's NATIVE ``session_window``
     aggregation — the A/B twin of :func:`sessionize_stream` (round-7
     verdict item: measure which form wins at which state size, like
-    the advisory-size analysis; numbers in SCALING.md's streaming
-    section).
+    the advisory-size analysis; numbers in the streaming section of
+    104d720:SCALING.md).
 
     Row-identical output by construction: ``session_window``'s window
     end is last-event + gap, so ``session_end`` aggregates ``max(ts)``
@@ -625,21 +620,14 @@ def sessionize_stream_native(
     """
     events = read_events_stream(spark, sf_dir).withWatermark("ts", watermark)
     out = _sessionize_plan_native(events, gap_minutes)
-    writer = out.writeStream.outputMode("append").trigger(availableNow=True)
-    if sink == "noop":
-        q = writer.format("noop").start()
-    else:
-        q = writer.format("memory").queryName(table_name).start()
-    q.awaitTermination()
-    _record_state_rows(q, progress_out)
-    return None if sink == "noop" else spark.table(table_name)
+    return _drain_to_memory(spark, out, table_name, progress_out)
 
 
 #: default ceiling on native session_window per-event state rows: above
 #: this the custom user-bounded operator is the memory-safe choice (the
 #: measured trade: native held 9.5M state rows at the 100x bench scale
-#: vs the custom op's 150k user-bounded triples, SCALING.md streaming
-#: section)
+#: vs the custom op's 150k user-bounded triples, streaming section of
+#: 104d720:SCALING.md)
 SESSIONIZE_STATE_BUDGET_ROWS = 2_000_000
 
 
@@ -649,11 +637,10 @@ def sessionize_stream_auto(
     gap_minutes: int = 30,
     watermark: str = "30 minutes",
     table_name: str = "stream_sessions",
-    sink: str = "memory",
     progress_out: dict | None = None,
     state_budget_rows: int = SESSIONIZE_STATE_BUDGET_ROWS,
     force: str | None = None,
-) -> DataFrame | None:
+) -> DataFrame:
     """State-aware selection between the two row-identical sessionize
     forms (round-7 verdict item 5): the native ``session_window``
     aggregation wins wall-clock (JVM-side merge, no Arrow transfer) but
@@ -697,7 +684,6 @@ def sessionize_stream_auto(
         gap_minutes=gap_minutes,
         watermark=watermark,
         table_name=table_name,
-        sink=sink,
         progress_out=progress_out,
     )
 
@@ -838,12 +824,9 @@ class LiveSessionize:
         checkpoint_dir: str | None = None,
         state_budget_rows: int = SESSIONIZE_STATE_BUDGET_ROWS,
         initial_form: str = "native",
-        sink: str = "memory",
     ) -> None:
         if initial_form not in ("native", "custom"):
             raise ValueError(f"unknown form: {initial_form!r}")
-        if sink not in ("memory", "noop"):
-            raise ValueError(f"unsupported sink: {sink!r}")
         self._spark = spark
         self._source_fn = source_fn
         self._gap_minutes = gap_minutes
@@ -851,7 +834,6 @@ class LiveSessionize:
         self._table_prefix = table_prefix
         self._checkpoint_dir = checkpoint_dir
         self._budget = state_budget_rows
-        self._sink = sink
         self.form = initial_form
         self.query = None
         #: decision log: one dict per poll that saw a usable estimate,
@@ -874,8 +856,6 @@ class LiveSessionize:
             writer = writer.option(
                 "checkpointLocation", f"{self._checkpoint_dir}/{form}"
             )
-        if self._sink == "noop":
-            return writer.format("noop").start()
         return (
             writer.format("memory")
             .queryName(f"{self._table_prefix}_{form}")

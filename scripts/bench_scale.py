@@ -1,62 +1,48 @@
 #!/usr/bin/env python3
-"""Reproducible multi-scale benchmark: the headline queries at sf0.01,
-sf0.1, and a materialized 20x blow-up of sf0.1 (~12M lineitem rows).
+"""Regenerate SCALING.md: bench.py's numbers at sf0.01, sf0.1 and
+key-shifted copies of sf0.1.
 
-One command regenerates SCALING.md:
+    python3 scripts/bench_scale.py [MULT ...]      (default: 10)
 
-    python scripts/bench_scale.py            # writes /root/repo/SCALING.md
+Each ×MULT copy of sf0.1 is written under ``$SPARK_GRAFT_SCALE_WORKDIR``
+(default /tmp/dws-scale) as ``mult<MULT>/`` — parquet tables plus a
+scaled OSM extract, ``osm_scaled.osm`` — and reused by later runs. At each
+scale point this script takes every number from ``bench.py``:
 
-Why this exists (round-2 verdict, "Next round" item 1): the 100x scale
-claims rested on plan shapes alone — no committed, reproducible scaling
-curve. This script IS that curve: it materializes the scaled data, times
-every bench query at each scale with the same methodology as bench.py
-(prepared plan, one untimed warmup, median of 3), captures the
-AQE-final physical plan of the heaviest join query at 20x (showing the
-runtime broadcast decision), and writes the whole table to SCALING.md.
+- one ``bench.py`` run with ``SPARK_GRAFT_SF_DIR`` set to the point's
+  directory gives the headline rows and their DuckDB anchor;
+- one fresh-JVM ``bench.py --solo`` worker per ``perfbench`` mix query
+  gives the mix rows, and ``bench.duckdb_anchor`` times their oracles.
 
-Scaled data construction (key-shifted replication):
-- fact/entity tables (customer, orders, lineitem, events, documents,
-  embeddings) are replicated MULT times; every entity-id column is
-  shifted by copy_index * 1e9 so intra-copy join relationships
-  (orders.o_custkey -> customer.c_custkey, lineitem.l_orderkey ->
-  orders.o_orderkey, ...) are preserved while copies never collide —
-  join fan-out per key stays constant as data grows, which is what makes
-  the per-query time curve interpretable as a scaling curve.
-- dimension tables (region, nation, part, supplier) are copied as-is
-  (constant, as in TPC-H): joins against them grow fan-IN
-  proportionally, the realistic shape.
-- timestamps are left unchanged: more rows per day, same date range.
-- layout (v2, round 12): each scaled table is written as multi-file
-  parquet split whenever EITHER ~4 MB of on-disk bytes OR ~4k rows
-  accumulate (file count = max of the two, cap 256) — see materialize()
-  and SCALING.md. Parquet cannot be split below row-group granularity, so
-  the v1 rows-only formula (~500k rows/file, cap 64) wrote wide-in-
-  memory/tiny-on-disk tables (documents@100x) as 2 single-row-group
-  files, starving every scan to 2 tasks in BOTH engines. NOTE: the
-  driver's sf0.01/sf0.1 inputs
-  are single-row-group single files (single-task scans); the 20x point
-  is therefore the first one where intra-query parallelism is even
-  possible. SCALING.md calls this out.
+It then rewrites SCALING.md in the repo root. It keeps no history: a
+regression at scale is checked with
+``scripts/ab.py QUERY REV --sf $SPARK_GRAFT_SCALE_WORKDIR/mult10``.
 
-Environment knobs: SPARK_GRAFT_SCALE_MULTS (comma-separated, default
-"20" — e.g. "10,20,100" adds an sf1-equivalent point and a 60M-lineitem
-point), SPARK_GRAFT_SCALE_WORKDIR (default /tmp/dws-scale),
-SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_SCALE_SKEW=0 to skip the
-zipf-hot-key skew section, SPARK_GRAFT_SCALE_DUCKDB=0 to skip the
-DuckDB head-to-head columns, SPARK_GRAFT_EXTRAS_BATCH (default 6) for
-the fresh-JVM extras worker batch size, SPARK_GRAFT_SCALE_EXTRAS=0 to
-skip the extras section entirely.
+Scaled data (``materialize``): fact and entity tables (customer, orders,
+lineitem, events, documents, embeddings) are replicated MULT times, and
+copy i adds ``i * STRIDE`` to every entity-id column, so join
+relationships hold within a copy and never collide across copies; per-key
+join fan-out stays constant as the data grows. Dimension tables (region,
+nation, part, supplier) are copied as-is, as in TPC-H, and timestamps are
+unchanged. Each scaled table is written as several parquet files, one per
+~4 MB on disk or ~4k rows, whichever gives more files, capped at 256:
+parquet cannot be split below a row group, so a table of few large files
+would cap every scan at a few tasks in both engines.
+
+This module is imported by the benchmark's input builder
+(``perfbench/inputs.py``) for ``STRIDE``, ``SHIFT_COLS`` and
+``DIM_TABLES``, so its import loads neither pyspark nor duckdb.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import statistics
+import subprocess
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 STRIDE = 1_000_000_000  # key shift per copy; far above any base key
 
@@ -75,6 +61,16 @@ DIM_TABLES = ["region", "nation", "part", "supplier"]
 #: change (v2: bytes+rows file-count formula — see materialize())
 LAYOUT_VERSION = 2
 
+#: the commit whose SCALING.md still holds the sections measured on the
+#: 32-core box of rounds 1-14 (skew, streaming, advisory-size A/B,
+#: cross-round diff, round-13 addendum, XML split, AQE-final plan)
+ROUND_ERA_SCALING = "104d720:SCALING.md"
+
+BASE_DIRS = (
+    ("sf0.01", "/root/testdata/sf0.01"),
+    ("sf0.1", "/root/testdata/sf0.1"),
+)
+
 
 def _path_bytes(path: str) -> int:
     """Total bytes of a parquet file or directory (fs metadata only)."""
@@ -86,234 +82,12 @@ def _path_bytes(path: str) -> int:
             total += os.path.getsize(os.path.join(root, f))
     return total
 
-#: AQE-final plan is captured for this query at the top multiplier
-PLAN_QUERY = "ext_tpch_q3_shipping_priority"
 
-#: round-5 widening queries (registered + oracled but not bench
-#: headlines) timed at every scale point in their own section. Disable
-#: with SPARK_GRAFT_SCALE_EXTRAS=0.
-EXTRA_QUERIES = [
-    "ext_tpch_q7_volume_shipping",
-    "ext_tpch_q8_market_share",
-    "ext_tpch_q13_order_distribution",
-    "ext_tpch_q14_promo_revenue",
-    "ext_tpch_q19_disjunctive_pushdown",
-    "ext_tpch_q22_dormant_customers",
-    "x_text_chunk_overlap",
-    "x_corpus_temperature_mixture",
-    "x_text_boilerplate_spans",
-    # second widening batch — added AFTER the committed round-5
-    # SCALING.md capture (its extras table shows the first nine); the
-    # next regeneration picks these up automatically
-    "ext_tpch_q4_late_shipments",
-    "ext_tpch_q6_forecast_revenue",
-    "ext_tpch_q17_small_quantity",
-    # round-6 additions (after the committed round-6 capture): RangeFrame
-    # rolling features, BM25 retrieval, the adaptive as-of form
-    "ext_rolling_event_features",
-    "x_text_bm25_search",
-    "ext_asof_latest_order_adaptive",
-    # round-6 second batch: the eight shapes completing the TPC-H
-    # 22-query family (five on the derived partsupp relation)
-    "ext_tpch_q2_min_cost_supplier",
-    "ext_tpch_q9_product_type_profit",
-    "ext_tpch_q11_important_parts",
-    "ext_tpch_q12_late_priority_lines",
-    "ext_tpch_q15_top_supplier",
-    "ext_tpch_q16_supplier_part_counts",
-    "ext_tpch_q20_excess_stock_suppliers",
-    "ext_tpch_q21_waiting_suppliers",
-    "x_text_lm_score",
-    # round-7 additions: SemDeDup semantic dedup, token-entropy signal,
-    # leakage-safe split
-    "x_dedup_semantic",
-    "x_text_entropy",
-    "x_dataset_split_leakage_safe",
-    "x_corpus_source_overlap",
-    "x_multimodal_audio",
-    "x_multimodal_video",
-    "x_text_novelty",
-    # round-7 second batch: curation-operator widening
-    "x_text_boilerplate_removal",
-    "x_text_quality_classifier",
-    "x_text_collocations",
-    "x_corpus_shard_manifest",
-    "x_corpus_source_cap",
-    "x_vec_outliers",
-    "x_multimodal_image_hash",
-    "x_multimodal_image_dedup",
-    "ext_funnel_steps",
-    "ext_cohort_retention",
-    "ext_table_profile",
-    "x_dedup_incremental",
-    "ext_ohlc_bars",
-    # round-8 additions: the de-globalized sequence packer (two-pass
-    # distributed prefix sum — the round-7 verdict's last scale-killer,
-    # now needing its committed multi-scale row)
-    "x_text_sequence_pack",
-    # round-8 second batch (registered mid-round, AFTER the round's main
-    # regeneration launched; their first multi-scale rows come from the
-    # same-methodology addendum run — scripts/bench_scale_addendum.py)
-    "x_eval_auc_quality",
-    "x_eval_pr_sweep",
-    "x_dedup_jaccard_prefix",
-    # (x_corpus_snapshot_diff belongs to the same round-8 late batch —
-    # it was missing from this list when the addendum promise was
-    # written; restored round 9 so the full regeneration folds all four
-    # in, per the r8 verdict item-4 audit)
-    "x_corpus_snapshot_diff",
-    # round-9 addition: the collapse-then-prefix exact-Jaccard default
-    # (its duplicate-dense A/B script is in git at
-    # 7c14ca9:scripts/bench_jaccard_ab.py; this row times the
-    # registered query's corpus)
-    "x_dedup_jaccard_collapsed",
-    # round-10 additions: calibration reliability table + asymmetric
-    # containment join (registered BEFORE this round's regeneration
-    # launched, so their first rows land in the main table directly)
-    "x_eval_calibration",
-    "x_dedup_containment",
-    # round-10 late registrations: DSIR importance weights + the ECE
-    # fold of the calibration table. The round-10 regeneration was
-    # RELAUNCHED after these registered (the first launch was also
-    # contaminated by concurrent probe sessions), so their first
-    # multi-scale rows land in the main table directly — no addendum
-    # fork this round.
-    "x_text_dsir",
-    "x_eval_ece",
-    # round-11 additions (registered BEFORE this round's regeneration
-    # launched): the realistic-churn snapshot-diff headline (r10
-    # verdict item 3) — the adversarial 27%-churn sibling keeps its
-    # row too so the table shows both ends of the churn-scaling story
-    # — and the Brier proper-scoring-rule fold
-    "x_corpus_snapshot_diff_realistic",
-    "x_eval_brier",
-    # round-12 additions (registered BEFORE this round's regeneration):
-    # the reference pipeline's first multi-scale rows (r11 verdict item
-    # 3 — parse {sf_dir}/osm_scaled.osm, written by materialize_osm) —
-    # DuckDB has no XML surface, so both sit in DUCK_ORACLE_SKIP and
-    # the competitor anchor is the one-task iterparse of the same file
-    "x_osm_scale_audit",
-    "x_osm_scale_normalize",
-    # round-12: the daily-refresh composition (diff-gated incremental
-    # dedup, r11 verdict item 7) — its realistic-churn scale row is the
-    # point of the query
-    "x_dedup_incremental_diff",
-]
-
-# ---------------------------------------------------------------- skew --
-#: bench queries that shuffle on the keys the skewed variant makes hot
-SKEW_QUERIES = [
-    "q4_top_users",                    # groupBy events.user_id
-    "ext_pricing_summary",             # lineitem agg (low-card keys)
-    "ext_tpch_q3_shipping_priority",   # SMJ lineitem.l_orderkey = o_orderkey
-    "ext_asof_latest_order",           # window partitionBy events.user_id
-    "ext_asof_latest_order_bucketed",  # same query, (key, bucket) window
-    "ext_asof_latest_order_adaptive",  # heavy keys bucketed, rest plain
-]
-HOT_KEYS = 8       # zipf support size: rank r holds share ∝ 1/r of hot mass
-HOT_FRAC = 0.25    # fraction of fact rows remapped onto the hot keys
-
-#: AQE skew-join thresholds for the skew section, sized to this bench's
-#: GB-scale data the same way a real cluster sizes them to TB-scale
-#: partitions: the defaults (256 MB skewedPartitionThresholdInBytes)
-#: only fire when a partition exceeds 256 MB — true at 100 TB, never at
-#: bench scale, so without scaling the knob the demo would be
-#: structurally impossible rather than handled. Applied to the UNIFORM
-#: skew-section runs too, so the skew-vs-uniform comparison shares one
-#: config.
-SKEW_CONFS = {
-    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "16m",
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m",
-    # with only 32 shuffle partitions over 60M rows the median partition
-    # is already fat, so the hot partition lands under the 5x default
-    # factor despite carrying ~9% of all rows; 2x matches how a cluster
-    # with thousands of partitions would see this skew
-    "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
-    # REQUIRED for this plan shape, not a tuning nicety: the q3 SMJ's
-    # output partitioning (l_orderkey) is reused by the downstream
-    # aggregate, and OptimizeSkewedJoin refuses any split that would
-    # force a re-shuffle — so without force the hot partition stays
-    # whole no matter the thresholds (measured: no skew=true marker,
-    # 4.3s; forced: marker present, ~2.9s at 100x skewed)
-    "spark.sql.adaptive.forceOptimizeSkewedJoin": "true",
-}
-
-
-def _zipf_hot_key(key_col: str, hash_cols: list[str], hot_keys: list[int]):
-    """Column expr remapping HOT_FRAC of rows onto ``hot_keys`` with a
-    zipf(1) profile (rank r gets share ∝ 1/r), else the original value.
-    The draw is a deterministic per-row hash, so re-materialization is
-    reproducible and the remap runs JVM-side."""
-    from pyspark.sql import functions as F
-
-    h_norm = sum(1.0 / r for r in range(1, len(hot_keys) + 1))
-    u = (
-        F.pmod(
-            F.xxhash64(*[F.col(c) for c in hash_cols], F.lit(41)),
-            F.lit(1_000_000),
-        )
-        / 1_000_000.0
-    )
-    out = F.col(key_col)
-    cum, thresholds = 0.0, []
-    for r, k in enumerate(hot_keys, start=1):
-        cum += (1.0 / r) / h_norm
-        thresholds.append((cum * HOT_FRAC, k))
-    # outermost WHEN must test the smallest threshold: build inside-out
-    for thresh, k in reversed(thresholds):
-        out = F.when(u < thresh, F.lit(k)).otherwise(out)
-    return out
-
-
-def materialize_skewed(spark, base_dir: str, out_dir: str, mult: int) -> dict:
-    """Key-shifted MULT-times blow-up with zipf-hot join keys: after the
-    uniform shift, HOT_FRAC of events rows get a hot ``user_id`` and
-    HOT_FRAC of lineitem rows a hot ``l_orderkey``, both drawn zipf(1)
-    from ``HOT_KEYS`` keys that exist in the UNSHIFTED copy of orders —
-    so every remapped row still joins. The rank-1 key holds
-    HOT_FRAC * (1/1)/H(8) ≈ 9.2% of ALL fact rows — at mult 100 that is
-    ~5.5M lineitem rows on one join key against ~10 on a uniform key
-    (the same magnitude the SCALING.md section states). Other tables
-    replicate uniformly. Returns {rows: {...}, hot_orderkeys: [...],
-    hot_custkeys: [...]}."""
-    base_orders = spark.read.parquet(os.path.join(base_dir, "orders.parquet"))
-    hot_orderkeys = [
-        r.o_orderkey
-        for r in base_orders.select("o_orderkey").orderBy("o_orderkey")
-        .limit(HOT_KEYS).collect()
-    ]
-    hot_custkeys = [
-        r.o_custkey
-        for r in base_orders.select("o_custkey").distinct()
-        .orderBy("o_custkey").limit(HOT_KEYS).collect()
-    ]
-    remap = {
-        "events": ("user_id", ["event_id", "_copy"], hot_custkeys),
-        "lineitem": ("l_orderkey", ["l_orderkey", "l_linenumber", "_copy"],
-                     hot_orderkeys),
-    }
-    return materialize(
-        spark, base_dir, out_dir, mult, remap=remap,
-        extra_meta={"hot_orderkeys": hot_orderkeys,
-                    "hot_custkeys": hot_custkeys},
-    )
-
-
-def materialize(
-    spark,
-    base_dir: str,
-    out_dir: str,
-    mult: int,
-    remap: dict | None = None,
-    extra_meta: dict | None = None,
-) -> dict:
-    """Write the key-shifted MULT-times blow-up of base_dir into out_dir
-    (ONE implementation for the uniform and skewed variants — review
-    find: two copies of the replication loop would silently
-    desynchronize the comparison they exist to make). ``remap`` maps
-    table -> (key_col, hash_cols, hot_keys) applied after the shift.
-    Idempotent: skips when a marker recording (base_dir, mult) exists.
-    Returns the marker meta dict ({"rows": {table: n}, ...})."""
+def materialize(spark, base_dir: str, out_dir: str, mult: int) -> dict:
+    """Write the key-shifted MULT-times copy of ``base_dir`` into
+    ``out_dir`` (see the module docstring). Idempotent: skips when a
+    marker recording (base_dir, mult, layout) exists. Returns the marker
+    meta dict ({"rows": {table: n}, ...})."""
     from pyspark.sql import functions as F
 
     from data_wrangling_spark.sources.tables import ensure_utc
@@ -334,47 +108,24 @@ def materialize(
     rows: dict[str, int] = {}
     copies = spark.range(mult).withColumnRenamed("id", "_copy")
     for table, shift_cols in SHIFT_COLS.items():
-        df = spark.read.parquet(os.path.join(base_dir, f"{table}.parquet"))
+        src = os.path.join(base_dir, f"{table}.parquet")
+        df = spark.read.parquet(src)
         scaled = df.crossJoin(F.broadcast(copies)).select(
             *[
                 (F.col(c) + F.col("_copy") * F.lit(STRIDE)).alias(c)
                 if c in shift_cols
                 else F.col(c)
                 for c in df.columns
-            ],
-            "_copy",
+            ]
         )
-        if remap and table in remap:
-            key_col, hash_cols, hot = remap[table]
-            scaled = scaled.withColumn(
-                key_col, _zipf_hot_key(key_col, hash_cols, hot)
-            )
-        scaled = scaled.drop("_copy")
         n_base = df.count()
-        # File-count formula v2 (round-12 find): the old row-only
-        # formula (rows // 500k) wrote documents@100x as TWO files of
-        # one 250k-row row group each and embeddings@100x as ONE —
-        # parquet cannot be split below row-group granularity, so every
-        # scan stage over those tables ran on 1-2 of 32 threads in BOTH
-        # engines (Spark task = file, DuckDB thread = row group); the
-        # x_dedup_incremental "36s fingerprint wall" was 2-task scan
-        # starvation, not compute. A real 100 TB corpus is thousands of
-        # files; the bench layout must not make file count the
-        # parallelism ceiling. v2 sizes by BOTH on-disk bytes (≥~4 MB
-        # of scan work per file) and rows (wide-in-memory, tiny-on-disk
-        # tables like float-array embeddings need row-based splits),
-        # capped at 256.
-        base_bytes = _path_bytes(os.path.join(base_dir, f"{table}.parquet"))
-        n_files = max(
-            1,
-            min(
-                256,
-                max(
-                    (base_bytes * mult) // (4 << 20),
-                    (n_base * mult) // 4_000,
-                ),
-            ),
-        )
+        # file count: >= ~4 MB of scan work per file, or ~4k rows per
+        # file for wide-in-memory, tiny-on-disk tables (float-array
+        # embeddings), whichever gives more files, capped at 256
+        n_files = max(1, min(256, max(
+            (_path_bytes(src) * mult) // (4 << 20),
+            (n_base * mult) // 4_000,
+        )))
         dst = os.path.join(out_dir, f"{table}.parquet")
         scaled.repartition(n_files).write.mode("overwrite").parquet(dst)
         rows[table] = n_base * mult
@@ -382,13 +133,7 @@ def materialize(
         df = spark.read.parquet(os.path.join(base_dir, f"{table}.parquet"))
         df.write.mode("overwrite").parquet(os.path.join(out_dir, f"{table}.parquet"))
         rows[table] = df.count()
-    meta = {
-        "base": base_dir,
-        "mult": mult,
-        "rows": rows,
-        "layout": LAYOUT_VERSION,
-        **(extra_meta or {}),
-    }
+    meta = {"base": base_dir, "mult": mult, "rows": rows, "layout": LAYOUT_VERSION}
     with open(marker, "w") as f:
         json.dump(meta, f)
     return meta
@@ -418,1137 +163,160 @@ def materialize_osm(out_dir: str, mult: int) -> str:
     return path
 
 
-def _run(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
+def row_counts(sf_dir: str) -> dict[str, int]:
+    """Rows per table at ``sf_dir``, summed from parquet footers."""
+    import pyarrow.dataset as ds
 
-
-def time_suite(
-    spark, specs, sf_dir: str, conc: bool = True
-) -> tuple[dict[str, float], float]:
-    """bench.py methodology: prepared plans, one untimed warmup, then
-    per-query median-of-3 sequential; plus concurrent-suite median-of-3
-    (skipped with ``conc=False`` for sections that never report it —
-    review find: the extras loop paid 3 full concurrent passes per
-    scale point for a number it threw away)."""
-    prepared = {name: spec.spark(spark, sf_dir) for name, spec in specs.items()}
-    for df in prepared.values():
-        _run(df)
-        # drop any plan-internal cache (x_text_dsir persist_tokens):
-        # without this, re-executions of the same prepared plan would
-        # read the warmup's cache and the median would price warm
-        # re-runs instead of the one-shot cost a production scoring
-        # job pays. No-op for the (vast) non-caching majority.
-        spark.catalog.clearCache()
-    timings: dict[str, float] = {}
-    for name, spec in specs.items():
-        runs = []
-        for _ in range(3):
-            # REBUILD the plan per timed run (outside the timed window):
-            # clearCache() unregisters plan-internal persists entirely
-            # (not just their blocks), so re-running the warmup's
-            # prepared object would time the fully-uncached recompute
-            # path, not the persisted one-shot cost the query doc
-            # prices (x_text_dsir's persist_tokens). A fresh build
-            # re-registers the persist; each timed run then pays cache
-            # write + read exactly once, matching a production one-shot.
-            df = spec.spark(spark, sf_dir)
-            t0 = time.perf_counter()
-            _run(df)
-            runs.append(time.perf_counter() - t0)
-            spark.catalog.clearCache()
-        timings[name] = round(statistics.median(runs), 3)
-    if not conc:
-        return timings, float("nan")
-    from concurrent.futures import ThreadPoolExecutor
-
-    runs_c = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        with ThreadPoolExecutor(max_workers=len(prepared)) as ex:
-            list(ex.map(_run, prepared.values()))
-        runs_c.append(time.perf_counter() - t0)
-    return timings, round(statistics.median(runs_c), 3)
-
-
-#: oracles whose DuckDB re-derivation is PATHOLOGICAL at scale, skipped
-#: at multiplier >= the value (recorded as missing, footnoted in
-#: SCALING.md): x_dedup_semantic's oracle is an independent chained-CTE
-#: Lloyd + within-cluster pair join — quadratic intermediates that
-#: spilled >70 GB at 20x under a 40 GB memory cap (267s single-run at
-#: 10x). The SPARK side is the scale path (Arrow matmul assignment);
-#: the oracle exists for correctness at driver scales, not speed.
-DUCK_ORACLE_SKIP: dict[str, int] = {
-    "x_dedup_semantic": 20,
-    # DuckDB has no XML reader at all: the registered oracles for the
-    # OSM scale pair assert the FIXTURE-fallback output (driver dirs),
-    # so re-timing them at a scaled dir would time a VALUES literal /
-    # tiny golden read, not comparable work. Skipped at every extras
-    # mult; the published competitor anchor is the reference-shaped
-    # one-task iterparse of the same scaled file (bench_osm_split.py).
-    "x_osm_scale_audit": 2,
-    "x_osm_scale_normalize": 2,
-}
-
-
-def semantic_scale_invariant(spark, sf_dir: str) -> dict:
-    """Replacement verification signal for x_dedup_semantic at the scale
-    points where its DuckDB oracle is DUCK_ORACLE_SKIPped (round-7
-    verdict item 3): the scaled corpus replicates every base embedding
-    MULT times bit-identically (key-shifted ids, same values), and
-    identical vectors provably land in the same k-means cell (identical
-    integer squared-L2 to every centroid, deterministic tie-break) with
-    pairwise cosine exactly 1 ≥ threshold — so SemDeDup must keep AT
-    MOST ONE row per distinct embedding. Checked corpus-wide with one
-    join + one hash aggregate keyed on xxhash64(embedding):
-
-    - ``violations``: distinct embeddings with ≥2 copies that kept ≥2
-      rows (MUST be 0 — a planted-duplicate recall failure);
-    - ``recall``: pruned / expected-prunable over exact-copy groups
-      (expected ~1.0 by the argument above; may exceed 1.0 slightly
-      because CROSS-group prunes — the 5 planted x1.1-scaled rows,
-      which are singleton groups — count in the numerator. Reported,
-      not asserted, so a drift shows up as a number instead of a
-      crash).
-
-    O(n) cost vs the oracle's quadratic chained-CTE spill — the check
-    the harness can afford at every scale point.
-    """
-    from pyspark.sql import functions as F
-
-    from data_wrangling_spark.plans.registry import QUERIES
-
-    out = QUERIES["x_dedup_semantic"].spark(spark, sf_dir)
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).select(
-        "vec_id", "embedding"
-    )
-    # the registered query plants 5 extra x1.1 rows (vec_id+1000000);
-    # reconstruct the SAME input so every output id joins a vector
-    planted = emb.filter(F.col("vec_id") < 5).select(
-        (F.col("vec_id") + 1000000).alias("vec_id"),
-        F.transform(
-            F.col("embedding").cast("array<double>"), lambda x: x * 1.1
-        ).cast("array<float>").alias("embedding"),
-    )
-    inp = emb.unionByName(planted)
-    g = (
-        out.join(inp, "vec_id")
-        .groupBy(F.xxhash64("embedding").alias("_k"))
-        .agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.sum(F.col("kept").cast("long")).alias("_kept"),
-        )
-    )
-    stats = g.agg(
-        F.sum(
-            ((F.col("_n") >= 2) & (F.col("_kept") > 1)).cast("long")
-        ).alias("violations"),
-        F.sum(F.greatest(F.col("_n") - 1, F.lit(0))).alias("expected_prunable"),
-        F.sum(F.col("_n") - F.col("_kept")).alias("pruned"),
-    ).collect()[0]
-    exp = int(stats["expected_prunable"] or 0)
     return {
-        "violations": int(stats["violations"] or 0),
-        "expected_prunable": exp,
-        "pruned": int(stats["pruned"] or 0),
-        "recall": round(int(stats["pruned"] or 0) / exp, 6) if exp else None,
+        t: ds.dataset(os.path.join(sf_dir, f"{t}.parquet")).count_rows()
+        for t in [*SHIFT_COLS, *DIM_TABLES]
     }
 
 
-# ------------------------------------------------- extras isolation --
-# Round-11 rework (r10 verdict item 1): the round-10 regeneration ran
-# all ~50 extras queries x 5 scale labels inside ONE long-lived JVM and
-# published rows inflated by up to 22x (committed ext_tpch_q19 11.39s
-# vs 0.52s dedicated) — long-suite GC/codegen-cache pressure, not code.
-# Two defenses, both automatic:
-#   1. extras timings come from FRESH-JVM worker subprocesses (small
-#      batches, parent Spark session stopped first), so no query's
-#      number can inherit another's JVM state;
-#   2. every number is diffed against the previous committed table
-#      (scripts/scaling_extras_baseline.json); any query moving >1.5x
-#      (and >=0.5s absolute) triggers a DEDICATED solo re-run whose
-#      number replaces the suite one, and the diff is published in
-#      SCALING.md so a drift can never again land unremarked.
-
-RERUN_RATIO = 1.5
-RERUN_MIN_ABS = 0.5    # seconds — don't chase noise on sub-second rows
-_WORKER_TAG = "EXTRAS_WORKER_JSON:"
-
-
-def _extras_baseline_path() -> str:
-    return os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        "scaling_extras_baseline.json")
-
-
-def extras_worker(sf_dir: str, names: list[str]) -> None:
-    """Subprocess entry: time ``names`` at ``sf_dir`` in a fresh JVM
-    with the suite methodology and print one tagged JSON line."""
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
-    from data_wrangling_spark.plans.registry import QUERIES, _load_all
-    from data_wrangling_spark.session import get_spark
-
-    _load_all()
-    spark = get_spark(app_name="dws-extras-worker")
-    spark.sparkContext.setLogLevel("ERROR")
-    specs = {n: QUERIES[n] for n in names}
-    timings, _ = time_suite(spark, specs, sf_dir, conc=False)
-    spark.stop()
-    print(_WORKER_TAG + json.dumps(timings), flush=True)
-
-
-def _spawn_extras_worker(sf_dir: str, names: list[str]) -> dict[str, float]:
-    import subprocess
-
-    cmd = [sys.executable, os.path.abspath(__file__),
-           "--extras-worker", sf_dir, *names]
-    proc = subprocess.run(cmd, capture_output=True, text=True)
-    if proc.returncode != 0:
-        print(proc.stderr[-4000:], file=sys.stderr)
-        raise RuntimeError(f"extras worker failed for {names} at {sf_dir}")
-    for line in proc.stdout.splitlines():
-        if line.startswith(_WORKER_TAG):
-            return json.loads(line[len(_WORKER_TAG):])
-    print(proc.stdout[-2000:], file=sys.stderr)
-    raise RuntimeError(f"extras worker emitted no JSON for {names}")
-
-
-#: a solo run (fresh JVM, idle box) must never LOSE to the shared-JVM
-#: suite batch by more than noise — when it does, the solo itself is
-#: the contaminated number (round-12 find, memory lesson: the first
-#: solo batch after the 100x DuckDB temp-table suite published
-#: ext_funnel_steps 10x at 4.939s solo vs 1.923s in-suite while a
-#: later dedicated re-measure read 1.5s). Round 13 applies the rule at
-#: EVERY label (r12 covered only the 100x ratio>2 confirmations).
-SOLO_SANITY_RATIO = 1.5
-
-
-def _solo_sane(dirs, label: str, name: str, suite_sec: float,
-               solo_sec: float) -> tuple[float, dict | None]:
-    """Enforce the solo-never-loses-to-suite invariant: if the solo
-    number exceeds SOLO_SANITY_RATIO x its own suite number, re-run
-    once and publish the best dedicated number. Returns (published,
-    audit) with audit recording both solos when triggered."""
-    if suite_sec and suite_sec > 0 and solo_sec > suite_sec * SOLO_SANITY_RATIO:
-        print(f"SOLO SANITY {label}/{name}: solo={solo_sec} > "
-              f"{SOLO_SANITY_RATIO}x suite={suite_sec} — re-running",
-              file=sys.stderr)
-        solo2 = _spawn_extras_worker(dirs[label], [name])[name]
-        return min(solo_sec, solo2), {"first_solo": solo_sec,
-                                      "sanity_rerun": solo2}
-    return solo_sec, None
-
-
-def run_extras_isolated(scales, duck_on: bool, cpus: int) -> dict:
-    """Time every EXTRA_QUERIES entry at every scale label in
-    fresh-JVM worker batches, then apply the cross-round diff +
-    solo-re-run protocol. Call ONLY after the parent Spark session is
-    stopped (a live parent JVM is exactly the co-tenancy this exists
-    to remove)."""
-    from data_wrangling_spark.plans.registry import QUERIES, _load_all
-
-    _load_all()
-    batch = int(os.environ.get("SPARK_GRAFT_EXTRAS_BATCH", "6"))
-    dirs = {label: d for label, d, _ratio in scales}
-    ex_results: dict[str, dict[str, float]] = {}
-    ex_duck: dict[str, dict[str, float]] = {}
-    for label, d, _ratio in scales:
-        timings: dict[str, float] = {}
-        for i in range(0, len(EXTRA_QUERIES), batch):
-            timings.update(_spawn_extras_worker(d, EXTRA_QUERIES[i:i + batch]))
-        ex_results[label] = timings
-        print(f"extras {label}: {json.dumps(timings)}", file=sys.stderr)
-        if duck_on:
-            mult = int(label.split("x")[0]) if label.endswith("x sf0.1") else 1
-            skip = {n for n, m in DUCK_ORACLE_SKIP.items() if mult >= m}
-            extra_specs = {n: QUERIES[n] for n in EXTRA_QUERIES}
-            ex_duck[label] = duckdb_time_suite(
-                extra_specs, d, threads=cpus, sink="table", skip=skip
-            )
-            print(f"extras {label} duckdb: {json.dumps(ex_duck[label])}",
-                  file=sys.stderr)
-
-    # ---- cross-round diff + dedicated re-runs ----
-    bp = _extras_baseline_path()
-    baseline: dict = {}
-    if os.path.exists(bp):
-        with open(bp) as f:
-            baseline = json.load(f).get("labels", {})
-    requeried: dict[str, dict[str, dict]] = {}
-    for label, timings in ex_results.items():
-        prev_t = baseline.get(label, {})
-        for name in list(timings):
-            prev, cur = prev_t.get(name), timings[name]
-            if prev is None or min(prev, cur) <= 0:
-                continue
-            if (max(prev, cur) / min(prev, cur) > RERUN_RATIO
-                    and abs(prev - cur) >= RERUN_MIN_ABS):
-                print(f"DIFF FLAG {label}/{name}: prev={prev} cur={cur} "
-                      f"— solo re-run", file=sys.stderr)
-                solo = _spawn_extras_worker(dirs[label], [name])[name]
-                solo, sanity = _solo_sane(dirs, label, name, cur, solo)
-                confirmed = (
-                    min(prev, solo) > 0
-                    and max(prev, solo) / min(prev, solo) > RERUN_RATIO
-                )
-                entry = {
-                    "prev": prev, "suite": cur, "solo": solo,
-                    "moved_vs_prev": confirmed,
-                }
-                if sanity is not None:
-                    entry.update(sanity)
-                requeried.setdefault(label, {})[name] = entry
-                timings[name] = solo
-
-    # ---- second rule (round-11 amendment): every TOP-label row that
-    # publishes >2x vs DuckDB is solo-confirmed, regardless of the
-    # cross-round diff. Rationale: the diff cannot catch a row whose
-    # PREVIOUS number was contaminated the same way (adversarial
-    # snapshot_diff published 23s twice while dedicated is 12s), or a
-    # drift just under 1.5x — and >2x rows are exactly the ones the
-    # scale story is judged on, so they must carry dedicated numbers.
-    top_label = scales[-1][0]
-    if duck_on and top_label in ex_duck:
-        for name, sec in list(ex_results[top_label].items()):
-            d_t = ex_duck[top_label].get(name)
-            already = name in requeried.get(top_label, {})
-            if d_t and d_t > 0 and sec / d_t > 2.0 and not already:
-                print(f"RATIO FLAG {top_label}/{name}: {sec}s = "
-                      f"{sec / d_t:.1f}x DuckDB — solo confirmation",
-                      file=sys.stderr)
-                solo = _spawn_extras_worker(dirs[top_label], [name])[name]
-                solo, sanity = _solo_sane(dirs, top_label, name, sec, solo)
-                entry = {
-                    "prev": sec, "suite": sec, "solo": solo,
-                    "moved_vs_prev": (max(sec, solo)
-                                      / max(min(sec, solo), 1e-9)
-                                      > RERUN_RATIO),
-                    "reason": "ratio>2",
-                }
-                if sanity is not None:
-                    entry.update(sanity)
-                requeried.setdefault(top_label, {})[name] = entry
-                ex_results[top_label][name] = solo
-    # MERGE into the committed baseline rather than replace it: a
-    # partial regeneration (SPARK_GRAFT_SCALE_MULTS=10 smoke, a trimmed
-    # EXTRA_QUERIES) must not clobber the full table and silently
-    # disable the cross-round diff for everything it didn't run.
-    merged = {lab: dict(t) for lab, t in baseline.items()}
-    for label, timings in ex_results.items():
-        merged.setdefault(label, {}).update(timings)
-    with open(bp, "w") as f:
-        json.dump({"labels": merged,
-                   "note": "final (post-solo-re-run) extras timings of the "
-                           "last committed SCALING.md regeneration; the "
-                           "next regeneration diffs against these"},
-                  f, indent=1, sort_keys=True)
-    out = {"results": ex_results, "duck": ex_duck, "requeried": requeried}
-    # full section inputs persisted so amendments (late solo re-runs,
-    # late registrations) can re-render the extras section without a
-    # 2h regeneration (the round-10 addendum-fork problem)
-    with open(os.path.join(os.path.dirname(bp),
-                           "scaling_extras_last.json"), "w") as f:
-        json.dump(out, f, indent=1, sort_keys=True)
-    return out
-
-
-def duckdb_time_suite(
-    specs, sf_dir: str, threads: int, sink: str = "fetch",
-    skip: set[str] | None = None,
-) -> dict[str, float]:
-    """Time each bench query's ANSI oracle in DuckDB over the SAME
-    parquet files (views over the per-table file or directory), same
-    methodology: 1 warmup, median of 3, results fully fetched. This is
-    the single-node engine-vs-engine comparison the round-4 verdict's
-    stretch item asked for at sf1+, where Spark's ~0.12-0.15s per-job
-    scheduling floor stops dominating."""
-    import duckdb
-
-    con = duckdb.connect()
-    con.execute(f"SET threads={threads}")
-    # cap + spill: DuckDB's default memory_limit (~80% of RAM) plus the
-    # 24g Spark JVM invited the kernel OOM killer on the heaviest scaled
-    # oracles (the round-7 regeneration died mid 20x extras); capped,
-    # they spill to disk instead
-    con.execute("SET memory_limit='40GB'")
-    con.execute("SET temp_directory='/tmp/dws-duck-spill'")
-    for t in list(SHIFT_COLS) + DIM_TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        src = p if os.path.isfile(p) else os.path.join(p, "*.parquet")
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')"
-        )
-    timings: dict[str, float] = {}
-
-    def _consume(sql: str) -> None:
-        # "fetch" = results to the client (bench.py comparison basis —
-        # fine for the headline queries' small outputs); "table" = full
-        # materialization into a temp table without client transfer,
-        # the closer twin of Spark's noop sink for row-heavy outputs
-        # (the chunking extras emit millions of text rows at 100x).
-        if sink == "table":
-            con.execute(f"CREATE OR REPLACE TEMP TABLE _sink AS {sql}")
-        else:
-            con.execute(sql).fetchall()
-
-    for name, spec in specs.items():
-        if not spec.oracle:
-            continue
-        if skip and name in skip:
-            print(f"duckdb {name}: skipped (DUCK_ORACLE_SKIP)",
-                  file=sys.stderr)
-            continue
-        t0 = time.perf_counter()
-        _consume(spec.oracle)
-        warm = time.perf_counter() - t0
-        if warm > 60.0:
-            # slow-oracle fallback: a >60s oracle would cost 4+ minutes
-            # for a median-of-3 (the SemDeDup chained-CTE re-derivation
-            # runs ~173s at 10x); record the single measured run — a
-            # COLD one, so if anything it flatters DuckDB's ratio less
-            timings[name] = round(warm, 3)
-            print(f"duckdb {name}: single-run {warm:.1f}s (slow oracle)",
-                  file=sys.stderr)
-            continue
-        runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            _consume(spec.oracle)
-            runs.append(time.perf_counter() - t0)
-        timings[name] = round(statistics.median(runs), 3)
-    con.close()
-    return timings
-
-
-def final_plan(spark, df) -> str:
-    """AQE-final formatted physical plan (isFinalPlan=true): execute the
-    plan, then read the mutated AdaptiveSparkPlanExec off the SAME
-    QueryExecution object. collect() (not the noop write) because a write
-    action wraps the plan in a command with its OWN QueryExecution — the
-    DataFrame's would stay unexecuted / isFinalPlan=false. The query is
-    top-10, so collect is 10 rows (diagnostic-only; not a data path)."""
-    df.collect()
-    try:
-        return df._jdf.queryExecution().executedPlan().toString()
-    except Exception:  # pragma: no cover - py4j surface drift
-        import contextlib
-        import io
-
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain()
-        return buf.getvalue()
-
-
-def main() -> None:
-    from data_wrangling_spark.plans.registry import bench_queries
-    from data_wrangling_spark.session import get_spark
-
-    mults = [
-        int(m) for m in os.environ.get("SPARK_GRAFT_SCALE_MULTS", "20").split(",")
-    ]
-    workdir = os.environ.get("SPARK_GRAFT_SCALE_WORKDIR", "/tmp/dws-scale")
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-    # the 100x point needs a real heap: Spark's 1g local-mode default
-    # gives 32 task threads ~18 MB of execution memory each and the
-    # large aggregates OOM (the first genuine cliff this script found —
-    # documented in SCALING.md). Overridable via SPARK_GRAFT_DRIVER_MEM.
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
-    spark = get_spark(app_name="dws-bench-scale")
-    spark.sparkContext.setLogLevel("ERROR")
-    specs = bench_queries()
-
-    mat_s = 0.0
-    rows_by_mult: dict[int, dict[str, int]] = {}
-    scales = [
-        ("sf0.01", "/root/testdata/sf0.01", 0.1),
-        ("sf0.1", "/root/testdata/sf0.1", 1.0),
-    ]
-    for mult in mults:
-        scaled_dir = os.path.join(workdir, f"mult{mult}")
-        t0 = time.perf_counter()
-        rows_by_mult[mult] = materialize(
-            spark, "/root/testdata/sf0.1", scaled_dir, mult
-        )["rows"]
-        mat_s += round(time.perf_counter() - t0, 1)
-        print(f"materialized {mult}x at {scaled_dir} in {mat_s}s", file=sys.stderr)
-        # the OSM scale pair silently falls back to the tiny fixture if
-        # the scaled XML is missing — materialize it here so a direct
-        # regeneration can never time the wrong input
-        materialize_osm(scaled_dir, mult)
-        scales.append((f"{mult}x sf0.1", scaled_dir, float(mult)))
-
-    results: dict[str, dict[str, float]] = {}
-    conc_totals: dict[str, float] = {}
-    duck_results: dict[str, dict[str, float]] = {}
-    duck_on = os.environ.get("SPARK_GRAFT_SCALE_DUCKDB", "1") != "0"
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    for label, d, _ratio in scales:
-        timings, conc = time_suite(spark, specs, d)
-        results[label] = timings
-        conc_totals[label] = conc
-        print(f"{label}: conc={conc}s {json.dumps(timings)}", file=sys.stderr)
-        if duck_on:
-            duck_results[label] = duckdb_time_suite(specs, d, threads=cpus)
-            print(f"{label} duckdb: {json.dumps(duck_results[label])}",
-                  file=sys.stderr)
-
-    # ---- round-5 extras: timed AFTER spark.stop() in fresh-JVM
-    # worker subprocesses (round-11 co-tenancy rework — see the
-    # "extras isolation" block above). Only the semantic-dedup O(n)
-    # invariant runs here, on the parent session: it is a
-    # verification signal, not a timing, so co-tenancy cannot corrupt
-    # it, and it needs a Spark session that would otherwise have to be
-    # a dedicated worker launch.
-    extras_enabled = os.environ.get("SPARK_GRAFT_SCALE_EXTRAS", "1") != "0"
-    ex_inv: dict[str, dict] = {}
-    if extras_enabled and duck_on:
-        for label, d, _ratio in scales:
-            mult = int(label.split("x")[0]) if label.endswith("x sf0.1") else 1
-            skip = {n for n, m in DUCK_ORACLE_SKIP.items() if mult >= m}
-            if "x_dedup_semantic" in skip:
-                ex_inv[label] = semantic_scale_invariant(spark, d)
-                print(f"semantic invariant {label}: "
-                      f"{json.dumps(ex_inv[label])}", file=sys.stderr)
-
-    top_mult = mults[-1]
-    plan_txt = final_plan(
-        spark, specs[PLAN_QUERY].spark(spark, os.path.join(workdir, f"mult{top_mult}"))
+def run_bench(sf_dir: str) -> dict:
+    """One ``bench.py`` run at ``sf_dir``; returns its JSON line."""
+    proc = subprocess.run(
+        [sys.executable, os.path.join(REPO, "bench.py")],
+        env=dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir),
+        capture_output=True, text=True, cwd=REPO,
     )
-
-    # ---- skew section: same suite subset, zipf-hot join keys ----
-    skew_data = None
-    if os.environ.get("SPARK_GRAFT_SCALE_SKEW", "1") != "0":
-        # full registry, not bench_queries(): the bucketed as-of is a
-        # registered (oracled) query but not a bench headline
-        from data_wrangling_spark.plans.registry import QUERIES
-
-        skew_specs = {n: QUERIES[n] for n in SKEW_QUERIES}
-        prev_confs = {}
-        for k, v in SKEW_CONFS.items():
-            try:
-                prev_confs[k] = spark.conf.get(k)
-            except Exception:
-                prev_confs[k] = None
-            spark.conf.set(k, v)
-        skew_results: dict[int, dict[str, dict[str, float]]] = {}
-        for mult in mults:
-            skew_dir = os.path.join(workdir, f"mult{mult}skew")
-            t0 = time.perf_counter()
-            materialize_skewed(spark, "/root/testdata/sf0.1", skew_dir, mult)
-            print(
-                f"materialized skewed {mult}x in {time.perf_counter() - t0:.1f}s",
-                file=sys.stderr,
-            )
-            uni, _ = time_suite(
-                spark, skew_specs, os.path.join(workdir, f"mult{mult}"), conc=False
-            )
-            skw, _ = time_suite(spark, skew_specs, skew_dir, conc=False)
-            skew_results[mult] = {"uniform": uni, "skewed": skw}
-            print(f"skew {mult}x: uniform={uni} skewed={skw}", file=sys.stderr)
-        plan_skew = final_plan(
-            spark,
-            specs[PLAN_QUERY].spark(
-                spark, os.path.join(workdir, f"mult{top_mult}skew")
-            ),
-        )
-        for k, v in prev_confs.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-        skew_data = {
-            "results": skew_results,
-            "skew_split": "isSkew=true" in plan_skew or "skew=true" in plan_skew,
-        }
-
-    # ---- streaming section: stateful queries at every scale point ----
-    stream_data = None
-    if os.environ.get("SPARK_GRAFT_SCALE_STREAM", "1") != "0":
-        from data_wrangling_spark.streaming.events import (
-            dedup_stream,
-            sessionize_stream,
-            sessionize_stream_auto,
-            sessionize_stream_native,
-        )
-
-        stream_data = {}
-        for label, d, _ratio in scales:
-            point = {}
-            for fn, qname in (
-                (dedup_stream, "x_stream_dedup"),
-                # round-7 A/B twins (row-identical, pinned): the custom
-                # user-bounded stateful op vs the native session_window
-                # aggregation — which form wins at which state size
-                (sessionize_stream, "x_stream_sessionize_custom"),
-                (sessionize_stream_native, "sessionize_native_form"),
-                # round-8: the registered x_stream_sessionize is the
-                # STATE-AWARE selector — records which form it picked
-                (sessionize_stream_auto, "x_stream_sessionize"),
-            ):
-                prog: dict = {}
-                t0 = time.perf_counter()
-                fn(spark, d, sink="noop", progress_out=prog)
-                point[qname] = {
-                    "sec": round(time.perf_counter() - t0, 1),
-                    "state_rows_peak": prog.get("state_rows_peak"),
-                    "batches": prog.get("batches"),
-                }
-                if "form" in prog:
-                    point[qname]["form"] = prog["form"]
-            stream_data[label] = point
-            print(f"stream {label}: {json.dumps(point)}", file=sys.stderr)
-
-    # parent JVM down BEFORE the extras workers launch — a live parent
-    # is exactly the co-tenant the round-10 table was corrupted by
-    spark.stop()
-
-    extras_data = None
-    if extras_enabled:
-        extras_data = run_extras_isolated(scales, duck_on, cpus)
-        extras_data["invariants"] = ex_inv
-
-    write_scaling_md(
-        os.path.join(repo, "SCALING.md"),
-        top_mult, rows_by_mult, scales, results, conc_totals, plan_txt, mat_s,
-        skew_data, duck_results, extras_data, stream_data,
-    )
-    out = {"scales": {s: conc_totals[s] for s, _, _ in scales},
-           "queries": results[f"{top_mult}x sf0.1"]}
-    if duck_results:
-        out["duckdb"] = {s: round(sum(t.values()), 3)
-                         for s, t in duck_results.items()}
-    if skew_data:
-        out["skew"] = skew_data["results"][top_mult]
-        out["aqe_skew_split"] = skew_data["skew_split"]
-    print(json.dumps(out))
+    lines = proc.stdout.strip().splitlines()
+    if proc.returncode != 0 or not lines:
+        raise RuntimeError(f"bench.py failed at {sf_dir}: {proc.stderr[-2000:]}")
+    return json.loads(lines[-1])
 
 
-def write_scaling_md(path, mult, rows_by_mult, scales, results, conc_totals,
-                     plan_txt, mat_s, skew_data=None, duck_results=None,
-                     extras_data=None, stream_data=None) -> None:
-    base_label, top_label = scales[1][0], scales[-1][0]
-    names = list(results[base_label])
-    lines = []
-    a = lines.append
-    a("# SCALING — measured multi-scale benchmark evidence")
+def _cell(x) -> str:
+    return "—" if x is None else f"{x:.3f}"
+
+
+def _ratio(s, d) -> str:
+    return f"{s / d:.1f}x" if s is not None and d else "—"
+
+
+def render_scaling_md(header: dict, points: list[dict]) -> str:
+    """SCALING.md text. ``header`` holds ``command``, ``commit``,
+    ``cores``, ``cpus`` and ``driver_mem``; each point holds ``label``,
+    ``rows`` ({table: n}), ``bench`` (bench.py's JSON line), ``solo``
+    ({mix query: ``bench.py --solo`` line or None}) and ``duck`` ({mix
+    query: DuckDB seconds})."""
+    out: list[str] = []
+    a = out.append
+    a("# SCALING — bench.py at sf0.01, sf0.1 and scaled copies of sf0.1")
     a("")
-    mults_env = ",".join(str(m) for m in rows_by_mult)
-    a(f"Regenerate with: `SPARK_GRAFT_SCALE_MULTS={mults_env} python "
-      "scripts/bench_scale.py`")
-    a("(materializes the scaled data under `$SPARK_GRAFT_SCALE_WORKDIR`, default "
-      f"/tmp/dws-scale — {mat_s}s total —")
-    a("then times every bench query at each scale and rewrites this file).")
+    a(f"Generated by `{header['command']}` at commit `{header['commit']}` "
+      f"on `local[{header['cores']}]` ({header['cpus']} CPUs available), "
+      f"driver memory {header['driver_mem']}. "
+      "The file is the script's unedited output.")
     a("")
-    a("## Method")
-    a("")
-    a("Same methodology as `bench.py`: per query, the logical plan is built once,")
-    a("one untimed execution warms JVM/codegen/parquet footers, then the median of")
-    a("3 timed full executions (noop sink — every operator runs, including final")
-    a("sorts; nothing cached between runs). All runs on `local[32]`, AQE on.")
-    a("")
-    a(f"The {mult}x data is a key-shifted replication of sf0.1: entity-id columns")
-    a(f"are shifted by `copy * 1e9` per copy so join relationships are preserved")
-    a("within a copy and never collide across copies — per-key join fan-out stays")
-    a("constant as data grows, so the time curve is a genuine scaling curve, not a")
-    a("fan-out blow-up. Dimensions (region/nation/part/supplier) stay constant, as")
-    a("in TPC-H.")
-    a("")
-    a("**Layout v2 (round 12).** Scaled tables are written with a file count")
-    a("sized by BOTH bytes (>=~4 MB of scan work per file) and rows (>=~4k")
-    a("rows per file), capped at 256. The previous row-only formula (~500k")
-    a("rows/file) wrote documents@100x as TWO single-row-group files and")
-    a("embeddings@100x as ONE — and parquet cannot be split below row-group")
-    a("granularity, so every scan stage over those tables ran on 1-2 of 32")
-    a("threads in BOTH engines (a Spark task reads >=1 row group; DuckDB")
-    a("parallelizes across row groups). Round-12 stage probes traced")
-    a("x_dedup_incremental's committed '36s fingerprint wall' to exactly this")
-    a("starvation (fp_exact stage: 37.2s on the 2-task layout). A 100 TB")
-    a("deployment is thousands of files — file count must never be the")
-    a("parallelism ceiling in a scale bench. Consequence: document/embedding")
-    a("rows in this table are NOT comparable to rounds <= 11; the cross-round")
-    a("diff below flags every mover and the movement is the layout fix, for")
-    a("both engines. The driver's own sf0.01/sf0.1 dirs are untouched")
-    a("(read-only) and remain single-row-group — at those sizes one task is")
-    a("the right plan anyway.")
+    a("Every Spark number comes from `bench.py`. The headline rows are one")
+    a("`bench.py` run per scale point: per query, median of 5 timed runs")
+    a("after 2 warmups, each run on a freshly built plan with the cache")
+    a("cleared after it; a query whose trimmed spread exceeds 30% is")
+    a("measured again in a fresh JVM and the lower median is kept (marked")
+    a("*solo*). The mix rows are the `perfbench` query mix, one fresh-JVM")
+    a("`bench.py --solo` worker each, same loop. DuckDB runs each query's")
+    a("oracle SQL over the same parquet files at the same thread count")
+    a("(1 warmup, median of 3, results fetched). `×N sf0.1` is sf0.1")
+    a("replicated N times with entity ids shifted per copy and dimension")
+    a("tables constant (`materialize()` in `scripts/bench_scale.py`).")
+    a("Regressions at scale are checked with `scripts/ab.py QUERY REV --sf")
+    a("<scaled dir>`, not against this file.")
     a("")
     a("## Row counts")
     a("")
-    mult_labels = [f"{m}x sf0.1" for m in rows_by_mult]
-    a("| table | sf0.1 | " + " | ".join(mult_labels) + " |")
-    a("|---|---|" + "---|" * len(mult_labels))
-    base_rows = {"customer": 15000, "orders": 150000, "lineitem": 600000,
-                 "events": 100000, "documents": 5000, "embeddings": 2000}
-    for t, n in base_rows.items():
-        cells = " | ".join(
-            f"{rows_by_mult[m].get(t, n * m):,}" for m in rows_by_mult
-        )
-        a(f"| {t} | {n:,} | {cells} |")
-    a("| region/nation/part/supplier | dims | " + " | ".join(
-        "constant" for _ in mult_labels) + " |")
+    a("| table | " + " | ".join(p["label"] for p in points) + " |")
+    a("|---|" + "---|" * len(points))
+    for t in points[0]["rows"]:
+        a(f"| {t} | " + " | ".join(f"{p['rows'][t]:,}" for p in points) + " |")
     a("")
-    a("## Per-query latency (median of 3, seconds)")
+    a("## Summary (seconds)")
     a("")
-    hdr = "| query | " + " | ".join(s for s, _, _ in scales)
-    a(hdr + f" | {top_label} / {base_label} time | data ratio |")
-    a("|---|" + "---|" * (len(scales) + 2))
-    for n in names:
-        r = [results[s][n] for s, _, _ in scales]
-        ratio = r[-1] / r[1] if r[1] else float("nan")
-        a(f"| {n} | " + " | ".join(f"{x:.3f}" for x in r)
-          + f" | {ratio:.1f}x | {mult}x |")
-    a("")
-    seq = {s: round(sum(results[s].values()), 3) for s, _, _ in scales}
-    a("| total | " + " | ".join(f"{seq[s]:.3f}" for s, _, _ in scales)
-      + f" | {seq[top_label]/seq[base_label]:.1f}x | {mult}x |")
-    a("| concurrent suite | " + " | ".join(f"{conc_totals[s]:.3f}" for s, _, _ in scales)
-      + f" | {conc_totals[top_label]/conc_totals[base_label]:.1f}x | {mult}x |")
-    a("")
-    a("## Reading the curve")
-    a("")
-    a(f"- A query scaling perfectly linearly would show a {mult}.0x time ratio in")
-    a(f"  the `{top_label} / {base_label}` column; sublinear ratios mean the fixed")
-    a("  per-job cost (scheduling + single-task scan floor at small SFs, ~0.15-0.3s")
-    a("  in this container) dominated the small-scale number and the marginal")
-    a("  per-row cost is far below it.")
-    a("- Ratios well under the data ratio on the heavy queries are the evidence the")
-    a("  round-2 verdict asked for: the plans' costs grow with rows/cores, not with")
-    a("  plan pathology (no cartesian blow-up, no per-key collect, no skew cliff).")
-    a("- q2_type_counts' near-flat curve was audited round 12 (r11 verdict item 8,")
-    a("  'sub-linear to the point of suspicion'): SUM over its published counts at")
-    a("  100x equals exactly 10,000,000 — the full scaled events table is read; the")
-    a("  flatness is one dictionary-encoded column scanned by 32 threads with the")
-    a("  ~0.15s per-job floor dominating both endpoints, not a cached/pruned path.")
-    a("")
-    if duck_results:
-        _duckdb_section(a, scales, results, duck_results)
-    if extras_data:
-        _extras_section(a, scales, extras_data)
-    if skew_data:
-        _skew_section(a, skew_data)
-    if stream_data:
-        _stream_section(a, stream_data)
-    _advisory_ab_section(a)
-    _xml_split_section(a)
-    a("## Found-and-fixed cliff at 100x: local-JVM heap, not the plans")
-    a("")
-    a("The first 100x attempt died with `UNABLE_TO_ACQUIRE_MEMORY` during the")
-    a("large hash aggregates: Spark's DEFAULT local-mode driver heap is 1g, so")
-    a("32 concurrent task threads shared ~0.6g of execution memory (~18 MB per")
-    a("task) — fine through 20x, exhausted at 100x. This is a deployment sizing")
-    a("cliff, not a plan defect: every query's shape is unchanged, and the same")
-    a("plans complete at 100x once the heap is sized to the machine")
-    a("(`SPARK_GRAFT_DRIVER_MEM`, default 24g in this script; on a real cluster")
-    a("this is spark-submit `--executor-memory`, never code). Spill-to-disk also")
-    a("needs execution memory headroom per task to hold its sort buffers — the")
-    a("per-task floor is what the 1g heap violated.")
-    a("")
-    a(f"## AQE-final plan: {PLAN_QUERY} at {top_label}")
-    a("")
-    a("Captured AFTER execution (`isFinalPlan=true`) — shows the broadcast")
-    a("decisions AQE actually took at runtime, per the round-2 verdict ask:")
-    a("")
-    a("```")
-    keep = plan_txt.strip().splitlines()
-    a("\n".join(keep[:80]))
-    if len(keep) > 80:
-        a(f"... ({len(keep) - 80} more lines)")
-    a("```")
-    a("")
-    with open(path, "w") as f:
-        f.write("\n".join(lines))
-
-
-def _duckdb_section(a, scales, results, duck_results) -> None:
-    a("## Head-to-head vs DuckDB at every scale")
-    a("")
-    a("The same queries, both engines, same parquet files, same box, same")
-    a("thread count: Spark runs the registered DataFrame plan, DuckDB runs the")
-    a("query's ANSI `oracle_sql()` form (1 warmup, median of 3, results fully")
-    a("fetched). The 10x sf0.1 point is sf1-equivalent — the round-4 stretch")
-    a("item: at sf0.1 Spark's ~0.12-0.15s per-job floor dominates every cell;")
-    a("by 10x-100x the ratio column shows how much of that floor has")
-    a("amortized into real per-row work. DuckDB is an excellent single-node")
-    a("engine and stays ahead where a query is one tight scan-agg; the")
-    a("engine-level point is the TREND (ratio falling as data grows) plus the")
-    a("row Spark has that DuckDB doesn't: the same plans scale out to a")
-    a("multi-node cluster unchanged.")
-    a("")
-    for label, _d, _r in scales:
-        if label not in duck_results:
-            continue
-        a(f"### {label}")
-        a("")
-        a("| query | Spark (s) | DuckDB (s) | Spark/DuckDB |")
-        a("|---|---|---|---|")
-        tot_s = tot_d = 0.0
-        for name, d_t in duck_results[label].items():
-            s_t = results[label][name]
-            tot_s += s_t
-            tot_d += d_t
-            ratio = s_t / d_t if d_t else float("nan")
-            a(f"| {name} | {s_t:.3f} | {d_t:.3f} | {ratio:.1f}x |")
-        a(f"| **total (sequential)** | {tot_s:.3f} | {tot_d:.3f} | "
-          f"{tot_s / tot_d if tot_d else float('nan'):.1f}x |")
-        a("")
-
-
-def _extras_section(a, scales, extras_data) -> None:
-    ex_results, ex_duck = extras_data["results"], extras_data["duck"]
-    base_label, top_label = scales[1][0], scales[-1][0]
-    names = list(next(iter(ex_results.values())))
-    a("## Widening queries at scale")
-    a("")
-    a(f"The {len(names)} widening queries (TPC-H-shaped joins +")
-    a("training-pipeline operators), same per-query methodology as the")
-    a("headline table, but — since round 11 — each batch of 6 queries runs")
-    a("in its OWN fresh-JVM Spark subprocess with the parent session")
-    a("stopped (the round-10 long-suite shared JVM inflated committed rows")
-    a("by up to 22x via GC/codegen-cache pressure), and every number is")
-    a("diffed against the previous committed table with >1.5x movers")
-    a("re-measured solo (see the cross-round diff subsection).")
-    a("DuckDB column uses a temp-table sink (full materialization, no client")
-    a("transfer) because the chunking query emits millions of text rows at")
-    a(f"{top_label} — the closer twin of Spark's noop sink; the headline")
-    a("section's fetch-based numbers are unchanged. A `—` DuckDB cell means")
-    a("the oracle re-derivation is skipped at that scale (DUCK_ORACLE_SKIP:")
-    a("x_dedup_semantic's chained-CTE Lloyd spilled >70 GB at 20x under a")
-    a("40 GB memory cap — the oracle exists for correctness at driver")
-    a("scales; the Spark operator is the scale path). At each skipped point")
-    a("the O(n) planted-duplicate invariant runs instead (see below).")
-    a("The two x_osm_scale_* rows are also oracle-skipped at every scaled")
-    a("point for a different reason: DuckDB has no XML reader, so no")
-    a("comparable-work twin exists — their correctness oracles gate the")
-    a("fixture-fallback form at the driver dirs, and the competitor anchor")
-    a("for the scaled parse is the reference-shaped ONE-TASK iterparse of")
-    a("the same file. Measured round 12 on the 861 MB 100x osm_scaled.osm")
-    a("(fresh JVM, median of 2 after warmup): one-task 82.7s vs the")
-    a("8 MB-split parallel scan 5.3s (108 tasks, 15.6x) — so the published")
-    a("audit (parse + explode + bucketing) and 5-table normalize rows both")
-    a("complete several times over before a single-stream reference-shaped")
-    a("consumer finishes the bare parse.")
-    a("")
-    hdr = "| query | " + " | ".join(s for s, _, _ in scales)
-    has_duck = bool(ex_duck)
-    a(hdr + f" | {top_label} / {base_label} time"
-      + (f" | DuckDB {top_label} | Spark/DuckDB {top_label} |" if has_duck
-         else " |"))
-    a("|---|" + "---|" * (len(scales) + 1 + (2 if has_duck else 0)))
-    for n in names:
-        r = [ex_results[s][n] for s, _, _ in scales]
-        ratio = r[-1] / r[1] if r[1] else float("nan")
-        row = (f"| {n} | " + " | ".join(f"{x:.3f}" for x in r)
-               + f" | {ratio:.1f}x")
-        if has_duck:
-            d_t = ex_duck[top_label].get(n)
-            if d_t is not None:
-                row += (f" | {d_t:.3f} | "
-                        f"{(r[-1] / d_t) if d_t else float('nan'):.1f}x |")
-            else:
-                row += " | — | — |"
-        else:
-            row += " |"
-        a(row)
-    a("")
-    requeried = extras_data.get("requeried") or {}
-    a("### Cross-round regression diff")
-    a("")
-    a("Every extras timing is diffed against the previous committed")
-    a("table (`scripts/scaling_extras_baseline.json`); a query moving")
-    a(f">{RERUN_RATIO}x and >={RERUN_MIN_ABS}s absolute is re-measured")
-    a("SOLO (single query, fresh JVM, idle box) and the solo number is")
-    a("what the table above publishes. This is the audit trail the")
-    a("round-10 regeneration lacked — a corrupted row can no longer")
-    a("land unremarked. Round-13 addition, at EVERY label: a solo run")
-    a(f"that loses to its own shared-JVM suite number by >{SOLO_SANITY_RATIO}x")
-    a("is itself the contaminated measurement (a dedicated fresh JVM on")
-    a("an idle box cannot be slower than a batch sharing one JVM) — it")
-    a("is re-run once and the best dedicated number is published, with")
-    a("the discarded first solo recorded in the verdict column.")
-    a("")
-    if not any(requeried.values()):
-        a("No query moved >1.5x against the previous committed table —")
-        a("no solo re-runs were needed.")
-    else:
-        a("| scale | query | prev committed (s) | this suite (s) | "
-          "solo re-run (s) | verdict |")
-        a("|---|---|---|---|---|---|")
-        for label, qs in requeried.items():
-            for name, info in qs.items():
-                if info.get("reason") == "ratio>2":
-                    verdict = (
-                        "**>2x-vs-DuckDB row — solo-confirmed** (every "
-                        "top-label row over 2x carries a dedicated "
-                        "number regardless of the cross-round diff)"
-                    )
-                elif info["moved_vs_prev"]:
-                    verdict = (
-                        "**moved vs previous table — solo-confirmed** "
-                        "(code change this round, or the previous row "
-                        "was itself corrupt)"
-                    )
-                else:
-                    verdict = ("suite number was a co-tenancy/noise "
-                               "artifact — solo agrees with previous table")
-                if "sanity_rerun" in info:
-                    verdict += (
-                        f" — SANITY: first solo {info['first_solo']:.3f}s "
-                        f"lost to its own suite number, re-run read "
-                        f"{info['sanity_rerun']:.3f}s; best dedicated "
-                        "number published"
-                    )
-                a(f"| {label} | {name} | {info['prev']:.3f} | "
-                  f"{info['suite']:.3f} | {info['solo']:.3f} | {verdict} |")
-    a("")
-    invariants = extras_data.get("invariants") or {}
-    if invariants:
-        a("### x_dedup_semantic invariant at oracle-skipped scales")
-        a("")
-        a("The scaled corpus replicates every base embedding bit-identically")
-        a("(key-shifted ids), and identical vectors provably share a k-means")
-        a("cell with pairwise cosine 1 — so SemDeDup must keep AT MOST ONE")
-        a("row per distinct embedding. `violations` counts distinct vectors")
-        a("with >= 2 copies that kept >= 2 rows (pass = 0); `recall` is")
-        a("pruned / expected-prunable over exact-copy groups (expected 1.0).")
-        a("One join + one hash aggregate — the O(n) check the harness can")
-        a("afford where the quadratic oracle cannot run.")
-        a("")
-        a("| scale | violations | expected prunable | pruned | recall | verdict |")
-        a("|---|---|---|---|---|---|")
-        for label, inv in invariants.items():
-            verdict = "PASS" if inv["violations"] == 0 else "**FAIL**"
-            a(f"| {label} | {inv['violations']} | "
-              f"{inv['expected_prunable']:,} | {inv['pruned']:,} | "
-              f"{inv['recall']} | {verdict} |")
-        a("")
-
-
-#: mechanism that absorbs each skewed key, per skew-section query
-SKEW_HANDLED_BY = {
-    "q4_top_users": "map-side partial aggregation: the hot user collapses "
-                    "to one partial row per mapper before the shuffle",
-    "ext_pricing_summary": "control query — its keys (returnflag/linestatus) "
-                           "are not skewed; shows the variant costs nothing "
-                           "where no hot key is touched",
-    "ext_tpch_q3_shipping_priority": "AQE OptimizeSkewedJoin splits the hot "
-                                     "l_orderkey SMJ partition at runtime "
-                                     "once it exceeds the skew threshold "
-                                     "(see plan note below)",
-    "ext_asof_latest_order": "window partition = one task per key by "
-                             "construction; the hot key's partition is "
-                             "sorted/carried on a single thread — linear in "
-                             "the key's rows, the documented bound "
-                             "(operators/temporal.py skew note); the "
-                             "bucketed row below is the mitigation",
-    "ext_asof_latest_order_bucketed": "asof_join_bucketed: carry window on "
-                                      "(key, weekly bucket) — the hot key's "
-                                      "rows spread across its time buckets; "
-                                      "result-identical to the plain form",
-    "ext_asof_latest_order_adaptive": "asof_join_adaptive: one hash-bucket "
-                                      "counting job flags heavy keys, then "
-                                      "ONE carry window runs on (key, "
-                                      "weekly bucket) for those keys and "
-                                      "(key, 0) for the uniform mass — the "
-                                      "scale-default form (bench-sized "
-                                      "heavy_threshold 50k / 4096 buckets, "
-                                      "like the AQE thresholds above)",
-}
-
-
-def _skew_section(a, skew_data) -> None:
-    a("## Skewed keys: zipf-hot joins vs the uniform variant")
-    a("")
-    a("Same replication as above, but 25% of events rows are remapped onto")
-    a("8 hot `user_id`s and 25% of lineitem rows onto 8 hot `l_orderkey`s,")
-    a("zipf(1) within the hot set (rank r holds a share proportional to 1/r —")
-    a("the rank-1 key alone carries ~9.2% of ALL fact rows; at 100x that is")
-    a("~5.5M lineitem rows on one join key vs ~10 on a uniform key). Hot keys")
-    a("are drawn from the unshifted base orders, so every remapped row still")
-    a("joins. AQE skew thresholds are sized to the bench's GB-scale")
-    a("partitions (16m/8m vs the 256m defaults a TB-scale cluster would")
-    a("leave alone) and applied to BOTH columns of the comparison, plus")
-    a("`forceOptimizeSkewedJoin=true` — a finding, not a nicety: the Q3")
-    a("join's output partitioning feeds a same-key aggregate, and")
-    a("OptimizeSkewedJoin refuses any split that would force a re-shuffle,")
-    a("so without force the hot partition stays whole at ANY threshold.")
-    a("")
-    a("The bucketed as-of row is the library's answer to the one skew shape")
-    a("AQE cannot touch (a window partition must see all its rows): at bench")
-    a("scale its three extra control-plane shuffles cost more than the hot")
-    a("partition saves — honest overhead, visible below — but it is the only")
-    a("query FASTER on skewed data than uniform (the hot key's buckets")
-    a("parallelize), while the plain as-of degrades; at a 100 TB hot key the")
-    a("plain form's single hot task is unboundedly worse, the bucketed")
-    a("form's is bounded by bucket width.")
-    a("")
-    for mult, r in skew_data["results"].items():
-        a(f"### {mult}x sf0.1")
-        a("")
-        a("| query | uniform keys (s) | zipf-hot keys (s) | skew cost | handled by |")
-        a("|---|---|---|---|---|")
-        for name, uni_t in r["uniform"].items():
-            skw_t = r["skewed"][name]
-            ratio = skw_t / uni_t if uni_t else float("nan")
-            a(f"| {name} | {uni_t:.3f} | {skw_t:.3f} | {ratio:.2f}x | "
-              f"{SKEW_HANDLED_BY.get(name, '')} |")
-        a("")
-    split = "did" if skew_data["skew_split"] else "did NOT"
-    a(f"The AQE-final plan of the shipping-priority join on the skewed data "
-      f"{split} mark the hot SMJ partition `skew=true` (runtime skew split).")
-    a("")
-
-
-def _advisory_ab_section(a) -> None:
-    a("## Aggregate-shape floor at 100x: advisory-size A/B (round-6 item 8)")
-    a("")
-    a("The round-5 verdict flagged the pure groupBy-count shapes (q4_top_users,")
-    a("ext_tpch_q13) at ~10x DuckDB at 100x. A full-suite A/B of")
-    a("`spark.sql.adaptive.advisoryPartitionSizeInBytes` (median of 3 per query,")
-    a("`python /tmp -` variant of this script's method, 2026-08-14 box):")
-    a("")
-    a("| setting | 100x suite total | q4 @100x | q13 @100x | sf0.1 suite total | q13 @sf0.1 |")
+    a("| scale | concurrent suite | headline sequential | headline DuckDB "
+      "| mix Spark | mix DuckDB |")
     a("|---|---|---|---|---|---|")
-    a("| 16m (session default) | 64.2s | 1.98 | 2.13 | 5.79s | 0.28 |")
-    a("| 8m | 57.2s (-11%) | 1.30 (-34%) | 1.25 (-41%) | 7.22s (+25%) | 0.78 (2.8x) |")
+    for p in points:
+        b = p["bench"]
+        mix = [s["median"] for s in p["solo"].values() if s]
+        mix_s = sum(mix) if len(mix) == len(p["solo"]) else None
+        mix_d = sum(p["duck"].values()) if "error" not in p["duck"] else None
+        a(f"| {p['label']} | {_cell(b['value'])} | {_cell(b['sequential_total'])} "
+          f"| {_cell(b['duckdb_calibration_total'])} | {_cell(mix_s)} "
+          f"| {_cell(mix_d)} |")
     a("")
-    a("8m wins EVERY query at 100x and loses badly at sf0.1 — the advisory size")
-    a("is a per-deployment data-scale knob, not a universal constant: at GB-scale")
-    a("inputs 8m doubles the post-shuffle parallelism the 16m advisory strands,")
-    a("while at tiny inputs the extra tasks are pure scheduling overhead. The")
-    a("session default stays 16m (right for the driver's sf0.1 gate); the skew")
-    a("section's confs already use 8m for the GB-scale points, and a cluster")
-    a("deployment should size it to ~shuffle-bytes / (2-3x cores).")
-    a("")
-    a("Remaining q4 gap at 100x with the right advisory: 1.30s vs DuckDB ~0.155s")
-    a("(~8x). The plan is already optimal for the shape (map-side partial")
-    a("count -> one exchange of ~300k partials -> final agg -> TakeOrdered: no")
-    a("further shuffle to remove); the residual is Spark's row-based hash")
-    a("aggregate + shuffle write/read vs DuckDB's in-process perfect-hash over")
-    a("two raw int columns — an engine constant on a shape with ~zero")
-    a("arithmetic, not a plan defect. Documented as the floor analysis the")
-    a("round-6 brief asked for.")
-    a("")
+    for p in points:
+        b = p["bench"]
+        duck = b["duckdb_calibration"]
+        a(f"## {p['label']}")
+        a("")
+        a("| query | set | Spark (s) | trimmed spread | DuckDB (s) | Spark/DuckDB |")
+        a("|---|---|---|---|---|---|")
+        for name, sec in b["queries"].items():
+            solo = b["solo_remeasured"].get(name, {}).get("published") == "solo"
+            d = duck.get(name)
+            a(f"| {name} | headline{', *solo*' if solo else ''} | {sec:.3f} "
+              f"| {b['trimmed_spread_pct'][name]}% | {_cell(d)} | {_ratio(sec, d)} |")
+        for name, line in p["solo"].items():
+            sec = line["median"] if line else None
+            spread = f"{line['trimmed_pct']}%" if line else "failed"
+            d = p["duck"].get(name)
+            a(f"| {name} | mix | {_cell(sec)} | {spread} | {_cell(d)} "
+              f"| {_ratio(sec, d)} |")
+        a("")
+        if "error" in duck or "error" in p["duck"]:
+            a(f"DuckDB failed: {duck.get('error') or p['duck'].get('error')}")
+            a("")
+    a("The skew, streaming, advisory-size A/B, cross-round diff, round-13 "
+      "addendum, XML-split and AQE-plan sections were measured on a 32-core "
+      f"box in rounds 1-14 and remain at `{ROUND_ERA_SCALING}`.")
+    return "\n".join(out) + "\n"
 
 
-def _stream_section(a, stream_data) -> None:
-    a("## Streaming queries at scale (round-6 verdict item 6)")
-    a("")
-    a("The two stateful streaming queries run end-to-end (availableNow drain,")
-    a("noop sink — full execution, nothing materialized) at every scale point;")
-    a("ONE timed run each (streams re-read and re-build all state per run, and")
-    a("at 100x a run is tens of seconds, so the bench.py median-of-N armor is")
-    a("traded for wall-clock here). `state peak` is the MEASURED")
-    a("max `numRowsTotal` across the run's stateful operators from the query")
-    a("progress history — the evidence behind every 'state is bounded' claim,")
-    a("not an estimate:")
-    a("")
-    a("- `x_stream_dedup` reads the events file(s) staged TWICE (at-least-once")
-    a("  redelivery) through `dropDuplicatesWithinWatermark`; state holds one")
-    a("  row per key not yet past the watermark. The bounded drain runs in ~2")
-    a("  batches, so the watermark only advances once and the peak approaches")
-    a("  the full key count — on a real continuous stream the watermark")
-    a("  advances every batch and state holds only the trailing window's keys")
-    a("  (the 2h watermark ~ 2-3% of a year-long key range).")
-    a("- `x_stream_sessionize_custom` (applyInPandasWithState) holds ONE")
-    a("  (start, end, n) triple per user with an open session — bounded by")
-    a("  active users, independent of event count; the measured peak equals the")
-    a("  user cardinality at every scale while input rows grow 100x.")
-    a("- `sessionize_native_form` (session_window aggregation) is the")
-    a("  row-identical twin: faster per row (JVM merge, no Arrow transfer)")
-    a("  but holds PER-EVENT state until windows close — its peak grows with")
-    a("  the whole backlog on a bounded replay.")
-    a("- `x_stream_sessionize` (the REGISTERED query) is the round-8")
-    a("  state-aware selector: native under a 2M-row backlog budget")
-    a("  (parquet footer count), the user-bounded custom form above it. The")
-    a("  crossover is a MEMORY-safety policy, not a wall-clock one: at the")
-    a("  top scale the selector deliberately pays the slower custom form's")
-    a("  wall to cap state at user cardinality (the `form` cell shows the")
-    a("  pick) — on a single 24g box the native form's per-event state still")
-    a("  fits, but its peak is the backlog size, which is exactly what OOMs")
-    a("  a state store when the replay is 100 TB rather than GBs. Callers")
-    a("  who know their store can hold the backlog pass force='native'.")
-    a("")
-    labels = list(stream_data)
-    qnames = list(stream_data[labels[0]])
-    hdr = "| query | " + " | ".join(
-        f"{lb} sec / state peak" for lb in labels
-    )
-    a(hdr + " |")
-    a("|---|" + "---|" * len(labels))
-    for q in qnames:
-        cells = " | ".join(
-            f"{stream_data[lb][q]['sec']}s / "
-            f"{stream_data[lb][q]['state_rows_peak']:,}"
-            + (f" ({stream_data[lb][q]['form']})"
-               if "form" in stream_data[lb][q] else "")
-            for lb in labels
-        )
-        a(f"| {q} | {cells} |")
-    a("")
-    # wall-vs-state trade, computed from the measured cells (round-11,
-    # r10 verdict item 8: one paragraph tying the table together)
-    a("### The sessionize wall-vs-state trade, quantified")
-    a("")
-    a("What the selector's safety pick costs (custom wall / native wall)")
-    a("and buys (native state peak / custom state peak) at each point:")
-    a("")
-    a("| scale | custom wall | native wall | wall cost | custom peak |"
-      " native peak | state reduction |")
-    a("|---|---|---|---|---|---|---|")
-    for lb in labels:
-        c = stream_data[lb].get("x_stream_sessionize_custom")
-        n = stream_data[lb].get("sessionize_native_form")
-        if not c or not n:
-            continue
-        wall = c["sec"] / n["sec"] if n["sec"] else float("nan")
-        red = (n["state_rows_peak"] / c["state_rows_peak"]
-               if c["state_rows_peak"] else float("nan"))
-        a(f"| {lb} | {c['sec']}s | {n['sec']}s | {wall:.1f}x |"
-          f" {c['state_rows_peak']:,} | {n['state_rows_peak']:,} |"
-          f" {red:.0f}x |")
-    a("")
-    a("The wall cost is roughly flat in scale (Arrow state transfer per")
-    a("event) while the state reduction GROWS with backlog-to-user ratio —")
-    a("so the bigger the replay, the better the trade. Callers who have")
-    a("sized their state store for the backlog (backlog_rows x ~100 B")
-    a("within the aggregate state budget) should pass force='native' and")
-    a("take the faster wall; the registered query's doc carries the same")
-    a("guidance (plans/scale_queries.py x_stream_sessionize).")
-    a("")
+def main(argv: list[str]) -> None:
+    from bench import duckdb_anchor, solo_remeasure
+    from data_wrangling_spark.plans.registry import oracle_sql
+    from data_wrangling_spark.session import default_parallelism, get_spark
+    from perfbench.workloads import MIX_KINDS
 
+    mults = [int(m) for m in argv] or [10]
+    workdir = os.environ.get("SPARK_GRAFT_SCALE_WORKDIR", "/tmp/dws-scale")
+    dirs = list(BASE_DIRS)
+    spark = get_spark(app_name="dws-bench-scale")
+    spark.sparkContext.setLogLevel("ERROR")
+    for mult in mults:
+        scaled = os.path.join(workdir, f"mult{mult}")
+        materialize(spark, BASE_DIRS[-1][1], scaled, mult)
+        materialize_osm(scaled, mult)
+        dirs.append((f"×{mult} sf0.1", scaled))
+    spark.stop()  # the measurements below each run in their own JVM
 
-def _xml_split_section(a) -> None:
-    # measured once via scripts/bench_osm_split.py (static here so a
-    # SCALING.md regeneration does not require the 185 MB XML run;
-    # re-measure with: python scripts/bench_osm_split.py)
-    a("## One big file: split-parallel XML scan (round 5)")
-    a("")
-    a("The round-4 verdict's last reference-surface gap: a single huge `.osm`")
-    a("parsed in one task. `sources/osm_xml.py` now plans byte-range splits")
-    a("synced to top-level element starts (Hadoop-XmlInputFormat technique: an")
-    a("element belongs to the split holding its first byte; a split reads past")
-    a("its end to finish a straddling element). Measured on a generated")
-    a("189 MB single file (800k nodes + 100k ways = 900k elements,")
-    a("local[32]; regenerate with `python scripts/bench_osm_split.py`):")
-    a("")
-    a("| read | tasks | wall (s) | speedup | rows | value hash |")
-    a("|---|---|---|---|---|---|")
-    a("| one-task (pre-round-5 behavior) | 1 | 22.3 | 1.0x | 900,000 | `-7242476843537470964528` |")
-    a("| split 16 MB | 12 | 3.6 | 6.2x | 900,000 | identical |")
-    a("| split 8 MB | 23 | 2.2 | 10.1x | 900,000 | identical |")
-    a("")
-    a("Value hash = sum over rows of `xxhash64(all columns)` in DECIMAL(38,0) —")
-    a("order-independent row-set identity, not just counts. Speedup tracks")
-    a("the split count (23 tasks on 32 threads); at")
-    a("cluster scale the split count grows with the file, so a 100 GB")
-    a("`planet.osm` fans out to ~1,600 tasks of 64 MB instead of one. The")
-    a("correctness pin lives in `tests/test_osm_split_scan.py`:")
-    a("an exhaustive 2-way cut sweep (every 97th byte) proves every possible")
-    a("boundary placement partitions the element sequence exactly.")
-    a("")
+    oracles = oracle_sql()
+    points = []
+    for label, d in dirs:
+        bench_line = run_bench(d)
+        os.environ["SPARK_GRAFT_SF_DIR"] = d  # read by the solo workers
+        solo = {name: solo_remeasure(name) for name in MIX_KINDS}
+        duck = duckdb_anchor({n: oracles[n] for n in MIX_KINDS}, d)
+        points.append({"label": label, "rows": row_counts(d),
+                       "bench": bench_line, "solo": solo, "duck": duck})
+        print(f"{label}: headline {bench_line['value']}s, mix "
+              f"{json.dumps({n: s and s['median'] for n, s in solo.items()})}",
+              file=sys.stderr, flush=True)
+
+    commit = subprocess.run(
+        ["git", "-C", REPO, "describe", "--always", "--dirty"],
+        capture_output=True, text=True,
+    ).stdout.strip()
+    header = {
+        "command": "python3 scripts/bench_scale.py " + " ".join(map(str, mults)),
+        "commit": commit,
+        "cores": default_parallelism(),
+        "cpus": len(os.sched_getaffinity(0)),
+        "driver_mem": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "1g (Spark default)"),
+    }
+    with open(os.path.join(REPO, "SCALING.md"), "w") as f:
+        f.write(render_scaling_md(header, points))
 
 
 if __name__ == "__main__":
-    if len(sys.argv) > 1 and sys.argv[1] == "--extras-worker":
-        extras_worker(sys.argv[2], sys.argv[3:])
-    else:
-        main()
+    main(sys.argv[1:])

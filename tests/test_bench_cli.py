@@ -27,3 +27,22 @@ def test_bench_cli_contract():
     assert out["unit"] == "sec" and out["sf"] == 0.001
     assert out["value"] > 0 and out["sequential_total"] > 0
     assert out["queries"] and all(v > 0 for v in out["queries"].values())
+
+
+def test_timed_runs_rebuilds_the_plan_and_drops_its_cache(spark):
+    """A persist inside a query's plan must be written and read on every
+    run, not written by the warmups and read by every timed run: the
+    loop builds the plan once per run and clears the cache after it."""
+    from bench import _RUNS, _WARMUPS, timed_runs
+
+    builds = []
+
+    def build():
+        builds.append(1)
+        return spark.range(1000).persist()
+
+    stats = timed_runs(spark, build)
+    assert len(builds) == _WARMUPS + _RUNS
+    assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
+    assert stats["median"] > 0
+    assert stats["spread_pct"] >= stats["trimmed_pct"] >= 0
