@@ -219,24 +219,13 @@ def normalize(
     raw: DataFrame,
     clean: bool = True,
     validate: str = "permissive",
-    cache_raw: bool = False,
 ) -> NormalizedTables:
     """Shape the raw-element DataFrame into the 5 normalized tables.
 
     validate: 'off' | 'permissive' (quarantine split) | 'strict' (raise on
     first violating table, mirroring the reference's per-record raise at
     S2:232-239 but with one vectorized pass instead of a 10× per-row cost).
-
-    cache_raw: persist the raw-element frame so the 5-table fan-out (and
-    the quarantine pass) parses the source ONCE instead of once per
-    derived table. Right for XML input that fits cluster memory/disk; at
-    100 TB the better shape is a one-time parquet landing zone
-    (sources/osm_xml.py::to_landing_zone) — then leave this off and let
-    each table read the splittable, column-pruned parquet (SURVEY.md §3
-    entry point 2). Caller unpersists via the returned handle.
     """
-    if cache_raw:
-        raw = raw.persist()
     tables: dict[str, DataFrame] = {
         "nodes": _entity(raw, "node", NODE_FIELDS),
         "nodes_tags": _tags(raw, "node", clean),

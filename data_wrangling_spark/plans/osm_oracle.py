@@ -18,8 +18,8 @@ Independence, per table:
   corpus. A defect in the Spark expressions cannot also appear here.
 - ``expected_stream_rows`` constructs what the fixture XML CONTAINS
   directly from the fixture constants (same attribute formulas as
-  ``build_osm_xml``), exercising the distributed iterparse + streaming
-  plumbing against a parser-free derivation.
+  ``build_osm_xml``), exercising the distributed incremental parse +
+  streaming plumbing against a parser-free derivation.
 """
 
 from __future__ import annotations

@@ -53,7 +53,7 @@ from data_wrangling_spark.plans.osm_oracle import oracle_parquet
         FROM read_parquet('{oracle_parquet("node_tags")}')
         ORDER BY id, key
     """,
-    doc="OP-SRC-XML → OP-SHAPE end to end: distributed iterparse of OSM "
+    doc="OP-SRC-XML → OP-SHAPE end to end: distributed incremental parse of OSM "
         "XML, problem-char filter, namespace split, per-key cleaning, "
         "validation split; returns the cleaned nodes_tags table. "
         "Hash-checked against the independent dual-implementation golden "
@@ -112,7 +112,7 @@ def osm_pipeline_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ORDER BY element, id
     """,
     doc="Streaming OSM ingest (SURVEY §2.10 extension): readStream "
-        "wholetext over a landing directory, mapInPandas iterparse, "
+        "wholetext over a landing directory, mapInPandas incremental parse, "
         "AvailableNow drain. Returns the raw element rows — identical "
         "to the batch reader over the same files. The registered "
         "projection serializes the nested tags/nds arrays to JSON "
@@ -152,15 +152,13 @@ def _scale_or_fixture_path(sf_dir: str) -> str:
     # driver dirs the query parses the identical fixture corpus, so the
     # independent expected_audit_rows golden is the oracle; at the
     # scaled dirs there is no DuckDB twin at all (DuckDB has no XML
-    # surface) — the bench records the Spark wall with a footnote, and
-    # the competitor anchor is the reference-shaped ONE-TASK iterparse
-    # of the same file (scripts/bench_osm_split.py one-task config).
+    # surface) — the bench records the Spark wall with a footnote.
     oracle=_OSM_AUDIT_ORACLE,
     doc="OP-AGG-AUDIT at bench scale (round-11 verdict item 3: the "
         "reference's own pipeline had no row in the multi-scale table): "
-        "split-parallel parse of {sf_dir}/osm_scaled.osm (8 MB "
-        "boundary-synced splits — the round-5 sweep's winning size) "
-        "-> explode tags -> audit bucketing. Falls back to the fixture "
+        "split-parallel parse of {sf_dir}/osm_scaled.osm "
+        "(boundary-synced splits sized from the file, read_osm_xml's "
+        "rule) -> explode tags -> audit bucketing. Falls back to the fixture "
         "at the driver dirs, where the dual-implementation golden "
         "hash-checks it. The audit output is vocabulary-bounded (the "
         "generator's tag sets), so the aggregate collapses map-side at "
@@ -170,10 +168,7 @@ def x_osm_scale_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_spark.operators.audit import audit
     from data_wrangling_spark.sources.osm_xml import read_osm_xml
 
-    raw = read_osm_xml(
-        spark, _scale_or_fixture_path(sf_dir), tags=("node", "way"),
-        split_bytes=8 << 20,
-    )
+    raw = read_osm_xml(spark, _scale_or_fixture_path(sf_dir), tags=("node", "way"))
     tags = raw.select(F.explode("tags").alias("t")).select(
         F.col("t.k").alias("key"), F.col("t.v").alias("value")
     )
@@ -235,9 +230,7 @@ def x_osm_scale_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_spark.operators.normalize import normalize_counts
     from data_wrangling_spark.sources.osm_xml import read_osm_xml
 
-    raw = read_osm_xml(
-        spark, _scale_or_fixture_path(sf_dir), split_bytes=8 << 20
-    )
+    raw = read_osm_xml(spark, _scale_or_fixture_path(sf_dir))
     return normalize_counts(raw, clean=True, validate="permissive")
 
 

@@ -5,9 +5,9 @@ AQE on (runtime shuffle re-planning, skew-join handling), partial aggregation
 and broadcast joins left to Catalyst, Arrow for the Python boundary, UTC
 session timezone so timestamp semantics are stable across engines.
 
-Local testing runs ``local[$SPARK_GRAFT_CPUS]`` (default 32); on a real
-cluster the same code runs unchanged — only ``master`` and memory sizing
-move to spark-submit / cluster conf.
+Local testing runs ``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs this
+process may run on); on a real cluster the same code runs unchanged —
+only ``master`` and memory sizing move to spark-submit / cluster conf.
 """
 
 from __future__ import annotations
@@ -18,7 +18,10 @@ from pyspark.sql import SparkSession
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``$SPARK_GRAFT_CPUS``, else the size of this process's CPU
+    affinity mask (the cores it can actually use, not the host's)."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
 
 
 def get_spark(

@@ -6,10 +6,22 @@ consumed subtree to bound memory (Step_2_CSV_and_Data_Cleaning.py:191-199;
 start-event audit variant Step_1_Audit_Values.py:55).
 
 Engine: a pure-PySpark source (no spark-xml dependency): files are listed
-driver-side, parallelized BY FILE to executors, and each file is parsed
-incrementally with ``iterparse`` inside ``mapPartitions`` — the same
-bounded-memory property as the reference (elem.clear() after yield), but
-N files parse in parallel.
+driver-side and cut into read tasks, and every task feeds its bytes to
+one incremental ``XMLPullParser`` loop (``_elements``) inside ``flatMap``
+— the same bounded-memory property as the reference (root.clear() after
+each yield), with all tasks parsing in parallel.
+
+Split size follows Spark's own file-scan rule (``FilePartition.
+maxSplitBytes``), so it is sized from the input, not set by the caller:
+
+    split = min(spark.sql.files.maxPartitionBytes,
+                max(spark.sql.files.openCostInBytes,
+                    sum(size + openCostInBytes) / defaultParallelism))
+
+Each file becomes ``ceil(size / split)`` range tasks: every file gets at
+least one task, and small files are never packed together. With the
+session defaults (128 MB cap, 4 MB open cost) a file under 4 MB parses
+as one task, and one large file fans out to about one range per core.
 
 Scale posture (SURVEY.md §7 hard-point 2): raw XML has no record
 delimiter, so a naive byte split risks cutting an element in half. The
@@ -40,9 +52,10 @@ Yielded schema (one row per element, FIXTURES.md §2 `raw_elements`):
 
 from __future__ import annotations
 
+import itertools
 import re
 import xml.etree.ElementTree as ET
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -138,28 +151,6 @@ def _open_maybe_compressed(path: str):
     return open(path, "rb")
 
 
-def _parse_file(path: str, tags: tuple[str, ...]) -> Iterator[tuple]:
-    """Incremental single-file parse: constant memory via elem.clear()
-    after each yielded element (the engine's root.clear() equivalent).
-    Compressed inputs decompress as a stream — constant memory either
-    way."""
-    # capture the root so it can be cleared per yielded element:
-    # elem.clear() alone empties each element but the root keeps
-    # appending child references, growing memory linearly with file size
-    # (the reference's root.clear() at S2:199 exists for exactly this)
-    with _open_maybe_compressed(path) as f:
-        context = ET.iterparse(f, events=("start", "end"))
-        try:
-            _, root = next(context)
-        except StopIteration:
-            return
-        for event, elem in context:
-            if event != "end" or elem.tag not in tags:
-                continue
-            yield _element_row(elem)
-            root.clear()
-
-
 def _scan_forward(f, from_off: int, pattern, chunk: int = 1 << 20) -> int | None:
     """File offset of the first ``pattern`` match at-or-after ``from_off``
     (or None). Streams in chunks, keeping a 16-byte tail so a token
@@ -180,6 +171,41 @@ def _scan_forward(f, from_off: int, pattern, chunk: int = 1 << 20) -> int | None
         pos += len(buf) - keep
 
 
+def _elements(chunks: Iterable[bytes], tags: tuple[str, ...]) -> Iterator[tuple]:
+    """The one parse loop behind every XML read: feed byte ``chunks`` to
+    an XMLPullParser, take the first start event as the document root,
+    and yield one row per closed element of a kept kind. Clearing the
+    root after each row bounds memory: elem.clear() alone would leave
+    the root appending child references, growing linearly with the file
+    (the reference's root.clear() at S2:199 exists for exactly this).
+    A truncated or malformed document raises ``ET.ParseError``."""
+    parser = ET.XMLPullParser(events=("start", "end"))
+    root = None
+    for chunk in itertools.chain(chunks, [None]):
+        if chunk is None:
+            parser.close()
+        else:
+            parser.feed(chunk)
+        for event, elem in parser.read_events():
+            if root is None:
+                root = elem
+            elif event == "end" and elem.tag in tags:
+                yield _element_row(elem)
+                root.clear()
+
+
+def _chunks(f, limit: int | None = None) -> Iterator[bytes]:
+    """``f``'s bytes from its current offset, in 64 KB reads, up to
+    ``limit`` bytes (None: to EOF)."""
+    while limit is None or limit > 0:
+        data = f.read(1 << 16 if limit is None else min(1 << 16, limit))
+        if not data:
+            return
+        if limit is not None:
+            limit -= len(data)
+        yield data
+
+
 def _parse_byte_range(
     path: str, start: int, end: int, tags: tuple[str, ...]
 ) -> Iterator[tuple]:
@@ -188,11 +214,9 @@ def _parse_byte_range(
     Sync: first element start at-or-after ``start`` (an element cut by
     the range boundary has its first byte in the PREVIOUS range, which
     reads past its own ``end`` to finish it — each element is emitted by
-    exactly one split). The byte stream from sync to cut (next element
-    start at-or-after ``end``, or ``</osm>``, or EOF) is fed to an
-    XMLPullParser under a synthetic ``<osm>`` root; memory stays bounded
-    by root.clear() per emitted element, exactly like the whole-file
-    iterparse path."""
+    exactly one split). The bytes from sync to cut (next element start
+    at-or-after ``end``, or ``</osm>``, or EOF) are parsed under a
+    synthetic ``<osm>`` root."""
     with open(path, "rb") as f:
         sync = _scan_forward(f, start, _SYNC_RE)
         if sync is None or sync >= end:
@@ -208,61 +232,57 @@ def _parse_byte_range(
             # (the full forward scan doubled the tail split's I/O —
             # round-5 review find); fall back to the full scan only if
             # the window misses (e.g. kilobytes of trailing junk).
-            f.seek(0, 2)
-            size = f.tell()
+            size = f.seek(0, 2)
             window = max(sync, size - 65536)
             cut = _scan_forward(f, window, re.compile(rb"</osm"))
             if cut is None:
                 cut = _scan_forward(f, sync, re.compile(rb"</osm"))
-
-        parser = ET.XMLPullParser(events=("start", "end"))
-        parser.feed(b"<osm>")
-        root = None
-
-        def drain() -> Iterator[tuple]:
-            nonlocal root
-            for event, elem in parser.read_events():
-                if event == "start":
-                    if root is None:
-                        root = elem  # the synthetic document root
-                    continue
-                if elem.tag in tags and elem is not root:
-                    yield _element_row(elem)
-                    root.clear()
-
+            if cut is None:
+                cut = size
         f.seek(sync)
-        remaining = None if cut is None else cut - sync
-        while remaining is None or remaining > 0:
-            step = (1 << 20) if remaining is None else min(1 << 20, remaining)
-            data = f.read(step)
-            if not data:
-                break
-            if remaining is not None:
-                remaining -= len(data)
-            parser.feed(data)
-            yield from drain()
-        parser.feed(b"</osm>")
-        yield from drain()
+        yield from _elements(
+            itertools.chain([b"<osm>"], _chunks(f, cut - sync), [b"</osm>"]),
+            tags,
+        )
+
+
+def _read_task(task: tuple[str, int, int | None], tags: tuple[str, ...]):
+    """Rows of one read task ``(path, start, end)``: the whole file,
+    decompressed as a stream where compressed, when ``end`` is None;
+    else the byte range [start, end)."""
+    path, start, end = task
+    if end is not None:
+        yield from _parse_byte_range(path, start, end, tags)
+        return
+    with _open_maybe_compressed(path) as f:
+        yield from _elements(_chunks(f), tags)
+
+
+def _split_size(spark: SparkSession, sizes: list[int]) -> int:
+    """Spark's ``FilePartition.maxSplitBytes`` over these file sizes."""
+    conf = spark._jsparkSession.sessionState().conf()
+    max_bytes, open_cost = conf.filesMaxPartitionBytes(), conf.filesOpenCostInBytes()
+    total = sum(size + open_cost for size in sizes)
+    parallelism = spark.sparkContext.defaultParallelism
+    return min(max_bytes, max(open_cost, total // parallelism))
 
 
 def read_osm_xml(
     spark: SparkSession,
     paths: str | list[str],
     tags: tuple[str, ...] = _KEPT_TAGS,
-    *,
-    split_bytes: int = 64 << 20,
 ) -> DataFrame:
     """Distributed OSM-XML read: one task per byte-range split.
 
-    Small files get one task each; a file larger than ``split_bytes``
-    fans out into ``ceil(size / split_bytes)`` boundary-synced range
-    tasks (see module docstring) — so ONE huge ``planet.osm`` no longer
-    parses in a single task. Compressed files (not byte-addressable)
-    keep the whole-file iterparse path with streaming decompression
-    (.gz/.bz2/.xz stdlib; .zst raises — no stdlib codec) and a read-time
-    warning when their size warrants splitting; non-standard ``tags``
-    sets (sync tokens cover only node/way/relation) also stay
-    whole-file.
+    The split size comes from the input and the session's file-scan
+    confs (module docstring): a file no larger than it is one task, a
+    larger file fans out into ``ceil(size / split)`` boundary-synced
+    range tasks — so ONE huge ``planet.osm`` no longer parses in a
+    single task. Compressed files (not byte-addressable) keep the
+    whole-file path with streaming decompression (.gz/.bz2/.xz stdlib;
+    .zst raises — no stdlib codec) and a read-time warning when one is
+    larger than the split size; non-standard ``tags`` sets (sync tokens
+    cover only node/way/relation) also stay whole-file.
 
     ``tags`` filters element kinds at the parser (OP-FLT-TAGKIND — the
     reference's ``tags=('node','way')`` call, S2:320, excludes relations
@@ -276,51 +296,39 @@ def read_osm_xml(
     if not paths:
         raise FileNotFoundError("no OSM files matched")
 
+    sizes = [os.path.getsize(p) for p in paths]
+    split = _split_size(spark, sizes)
     splittable = set(tags) <= set(_KEPT_TAGS)
+    compressed = [p.endswith((".gz", ".bz2", ".zst", ".xz")) for p in paths]
     # non-splittable codecs cap parallelism at one task per file — warn
     # AT READ TIME (round-5 verdict residual gap 4: a docstring note is
     # invisible to the user whose gzipped extract silently parses on one
     # core), with the actionable fixes in the message
-    compressed = [
-        p for p in paths
-        if p.endswith((".gz", ".bz2", ".zst", ".xz"))
-        and os.path.getsize(p) > split_bytes
-    ]
-    if compressed:
+    too_big = [p for p, size, c in zip(paths, sizes, compressed) if c and size > split]
+    if too_big:
         import warnings
 
         warnings.warn(
-            f"{len(compressed)} compressed XML file(s) exceed the "
-            f"{split_bytes}-byte split size but use a non-splittable "
+            f"{len(too_big)} compressed XML file(s) exceed the "
+            f"{split}-byte split size but use a non-splittable "
             "codec — each parses as ONE task regardless of size "
-            f"(first: {os.path.basename(compressed[0])}). For parallel "
+            f"(first: {os.path.basename(too_big[0])}). For parallel "
             "ingest, decompress first or convert once via "
             "to_landing_zone() and read the parquet landing zone.",
             stacklevel=2,
         )
-    # (path, start, end) with end=None meaning whole-file iterparse
+    # (path, start, end) with end=None meaning the whole file
     tasks: list[tuple[str, int, int | None]] = []
-    for p in paths:
-        size = os.path.getsize(p)
-        if (
-            not splittable
-            or p.endswith((".gz", ".bz2", ".zst", ".xz"))
-            or size <= split_bytes
-        ):
+    for p, size, c in zip(paths, sizes, compressed):
+        if not splittable or c or size <= split:
             tasks.append((p, 0, None))
             continue
-        n = -(-size // split_bytes)
+        n = -(-size // split)
         bounds = [size * i // n for i in range(n + 1)]
-        tasks.extend(
-            (p, bounds[i], bounds[i + 1]) for i in range(n)
-        )
+        tasks.extend((p, bounds[i], bounds[i + 1]) for i in range(n))
 
-    sc = spark.sparkContext
-    tasks_rdd = sc.parallelize(tasks, numSlices=len(tasks))
-    rows = tasks_rdd.flatMap(
-        lambda t: _parse_file(t[0], tags)
-        if t[2] is None
-        else _parse_byte_range(t[0], t[1], t[2], tags)
+    rows = spark.sparkContext.parallelize(tasks, numSlices=len(tasks)).flatMap(
+        lambda t: _read_task(t, tags)
     )
     return spark.createDataFrame(rows, RAW_ELEMENT_SCHEMA)
 

@@ -1,13 +1,13 @@
 """Streaming OSM-XML ingest (SURVEY.md §2.10: "the engine may optionally
 expose the ingest as readStream over a landing directory").
 
-The bounded batch source (sources/osm_xml.py) parallelizes BY FILE; the
-streaming twin watches a landing directory with the text source in
+The stream watches a landing directory with the text source in
 ``wholetext`` mode (one row per arriving file — XML cannot be split
-line-wise) and parses each file inside ``mapInPandas`` with the same
-incremental iterparse. New region extracts dropped into the directory
-flow through normalization without re-running a batch job — the
-continuous-ingest pattern for a 100 TB corpus that grows by region.
+line-wise) and parses each file inside ``mapInPandas`` with the batch
+reader's one parse loop (``sources.osm_xml._elements``). New region
+extracts dropped into the directory flow through normalization without
+re-running a batch job — the continuous-ingest pattern for a 100 TB
+corpus that grows by region.
 
 Parity contract (tests/test_streaming_osm.py): draining the stream over
 a directory of fixture files yields EXACTLY the rows of the batch reader
@@ -16,53 +16,19 @@ over the same files.
 
 from __future__ import annotations
 
-import io
 from collections.abc import Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
-from data_wrangling_spark.sources.osm_xml import RAW_ELEMENT_SCHEMA, _KEPT_TAGS
+from data_wrangling_spark.sources.osm_xml import (
+    RAW_ELEMENT_SCHEMA,
+    _KEPT_TAGS,
+    _elements,
+)
 
 _COLS = [f.name for f in RAW_ELEMENT_SCHEMA.fields]
-
-
-def _parse_xml_string(xml_text: str, tags: tuple[str, ...]) -> list[tuple]:
-    """Same element extraction as the batch reader's _parse_file, over an
-    in-memory document (streaming rows arrive as whole-file strings).
-    tags children become dicts (Arrow struct representation)."""
-    import xml.etree.ElementTree as ET
-
-    rows = []
-    context = ET.iterparse(io.StringIO(xml_text), events=("start", "end"))
-    try:
-        _, root = next(context)
-    except StopIteration:
-        return rows
-    for event, elem in context:
-        if event != "end" or elem.tag not in tags:
-            continue
-        a = elem.attrib
-        rows.append(
-            (
-                elem.tag,
-                int(a["id"]) if "id" in a else None,
-                float(a["lat"]) if "lat" in a else None,
-                float(a["lon"]) if "lon" in a else None,
-                a.get("user"),
-                int(a["uid"]) if "uid" in a else None,
-                a.get("version"),
-                int(a["changeset"]) if "changeset" in a else None,
-                a.get("timestamp"),
-                [{"k": c.attrib.get("k"), "v": c.attrib.get("v")}
-                 for c in elem if c.tag == "tag"],
-                [int(c.attrib["ref"]) for c in elem
-                 if c.tag == "nd" and "ref" in c.attrib],
-            )
-        )
-        root.clear()  # bound the tree: the root otherwise keeps every child
-    return rows
 
 
 def read_osm_stream(
@@ -81,7 +47,7 @@ def read_osm_stream(
         for pdf in it:
             rows: list[tuple] = []
             for xml_text in pdf["value"]:
-                rows.extend(_parse_xml_string(xml_text, tags))
+                rows.extend(_elements([xml_text.encode("utf-8")], tags))
             if rows:
                 yield pd.DataFrame(rows, columns=_COLS)
 

@@ -40,6 +40,7 @@ import json
 import os
 import subprocess
 import sys
+import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -139,6 +140,68 @@ def materialize(spark, base_dir: str, out_dir: str, mult: int) -> dict:
     return meta
 
 
+USERS = ["alice", "bob", "carol", "dave", "erin", "frank%20o'hara", "grace"]
+TAGSETS = [
+    "",
+    '<tag k="highway" v="residential"/>',
+    '<tag k="name" v="North Lamar Blvd"/><tag k="tiger:county" v="Travis, TX"/>',
+    '<tag k="amenity" v="cafe"/><tag k="addr:street" v="Burnet Rd"/>'
+    '<tag k="addr:postcode" v="78758"/>',
+]
+
+
+def generate(path: str, n_nodes: int, n_ways: int) -> None:
+    """Write a synthetic OSM extract of ``n_nodes`` nodes (cycling through
+    ``USERS`` and ``TAGSETS``) and ``n_ways`` ways of 8 node refs each.
+    Writes to a temp path and os.replace()s into place: a run killed
+    mid-generate must not leave a truncated file that later runs
+    silently reuse via the exists-check (same atomicity rule as the
+    golden parquet writes)."""
+    t0 = time.perf_counter()
+    tmp = f"{path}.{os.getpid()}.tmp"
+    with open(tmp, "w", buffering=1 << 22) as f:
+        f.write('<?xml version="1.0" encoding="UTF-8"?>\n')
+        f.write('<osm version="0.6" generator="dws-bench">\n')
+        for i in range(n_nodes):
+            u = USERS[i % len(USERS)]
+            tags = TAGSETS[i % len(TAGSETS)]
+            lat = 30.0 + (i % 10_000) * 1e-5
+            lon = -97.0 - (i % 9_973) * 1e-5
+            if tags:
+                f.write(
+                    f'  <node id="{i + 1}" lat="{lat:.7f}" lon="{lon:.7f}" '
+                    f'user="{u}" uid="{i % 5000 + 1}" version="{i % 9 + 1}" '
+                    f'changeset="{i % 77777 + 1}" '
+                    f'timestamp="2017-0{i % 9 + 1}-15T12:30:45Z">'
+                    f"{tags}</node>\n"
+                )
+            else:
+                f.write(
+                    f'  <node id="{i + 1}" lat="{lat:.7f}" lon="{lon:.7f}" '
+                    f'user="{u}" uid="{i % 5000 + 1}" version="{i % 9 + 1}" '
+                    f'changeset="{i % 77777 + 1}" '
+                    f'timestamp="2017-0{i % 9 + 1}-15T12:30:45Z"/>\n'
+                )
+        for i in range(n_ways):
+            wid = 10_000_000 + i
+            nds = "".join(
+                f'<nd ref="{(i * 7 + j) % n_nodes + 1}"/>' for j in range(8)
+            )
+            f.write(
+                f'  <way id="{wid}" user="{USERS[i % len(USERS)]}" '
+                f'uid="{i % 5000 + 1}" version="1" changeset="{i % 555 + 1}" '
+                f'timestamp="2017-03-0{i % 9 + 1}T08:00:00Z">{nds}'
+                f'<tag k="highway" v="service"/></way>\n'
+            )
+        f.write("</osm>\n")
+    os.replace(tmp, path)
+    print(
+        f"generated {path}: {os.path.getsize(path) / 1e6:.0f} MB in "
+        f"{time.perf_counter() - t0:.1f}s",
+        file=sys.stderr,
+    )
+
+
 #: scaled OSM XML density per multiplier, calibrated to the round-5
 #: generator (~210 B/element: 800k nodes + 100k ways ≈ 189 MB) so
 #: mult10 ≈ 90 MB and mult100 ≈ 900 MB — the same order as the scaled
@@ -156,8 +219,6 @@ def materialize_osm(out_dir: str, mult: int) -> str:
     file is complete by construction."""
     path = os.path.join(out_dir, "osm_scaled.osm")
     if not os.path.exists(path):
-        from scripts.bench_osm_split import generate
-
         os.makedirs(out_dir, exist_ok=True)
         generate(path, OSM_NODES_PER_MULT * mult, OSM_WAYS_PER_MULT * mult)
     return path

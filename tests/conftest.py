@@ -5,6 +5,7 @@ insensitive values with columns sorted by name)."""
 from __future__ import annotations
 
 import math
+from contextlib import contextmanager
 
 import duckdb
 import pandas as pd
@@ -63,3 +64,21 @@ def assert_matches_oracle(spark, duck, spark_fn, sql: str, sf_dir: str = SF_DIR)
     assert len(got) == len(want), f"row count: spark={len(got)} duckdb={len(want)}"
     mism = [(g, w) for g, w in zip(got, want) if g != w]
     assert not mism, f"{len(mism)} mismatched rows; first: {mism[0]}"
+
+
+FILE_CONFS = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+
+
+@contextmanager
+def split_size(spark, n_bytes, open_cost=None):
+    """Set ``spark.sql.files.maxPartitionBytes`` to ``n_bytes`` and
+    ``openCostInBytes`` to ``open_cost`` (default ``n_bytes``, which makes
+    read_osm_xml's split size exactly ``n_bytes``); restore both on exit."""
+    saved = [spark.conf.get(k) for k in FILE_CONFS]
+    for k, v in zip(FILE_CONFS, (n_bytes, open_cost or n_bytes)):
+        spark.conf.set(k, str(v))
+    try:
+        yield
+    finally:
+        for k, v in zip(FILE_CONFS, saved):
+            spark.conf.set(k, v)

@@ -1,16 +1,21 @@
-"""scripts/bench_scale.py: the key-shifted replicator on real tables, and
-the SCALING.md renderer on canned ``bench.py`` lines (no JVM)."""
+"""scripts/bench_scale.py: the key-shifted replicator on real tables, the
+OSM extract generator, and the SCALING.md renderer on canned ``bench.py``
+lines (no JVM)."""
 
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 
 from pyspark.sql import functions as F
 
 from scripts.bench_scale import (
     DIM_TABLES,
+    REPO,
     SHIFT_COLS,
     STRIDE,
+    generate,
     materialize,
     render_scaling_md,
 )
@@ -48,6 +53,25 @@ def test_materialize_doubles_facts_and_keeps_dims(spark, tmp_path):
         )
 
     assert joined(out) == 2 * joined(SF_DIR)
+
+
+def test_generate_writes_a_readable_extract(spark, tmp_path):
+    from data_wrangling_spark.sources.osm_xml import read_osm_xml
+
+    path = str(tmp_path / "gen.osm")
+    generate(path, 50, 5)
+    raw = read_osm_xml(spark, path)
+    assert raw.count() == 55
+    assert raw.filter("element = 'way'").count() == 5
+
+    # the generator runs before any Spark session: importing the module
+    # must not load pyspark
+    probe = "import sys, scripts.bench_scale; print('pyspark' in sys.modules)"
+    out = subprocess.run(
+        [sys.executable, "-c", probe], cwd=REPO, capture_output=True, text=True,
+        check=True,
+    )
+    assert out.stdout.strip() == "False"
 
 
 def _bench_line(q1, q2, solo_published):

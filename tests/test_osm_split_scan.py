@@ -13,10 +13,13 @@ from pyspark.sql import functions as F
 
 from data_wrangling_spark.sources.osm_fixture import build_osm_xml
 from data_wrangling_spark.sources.osm_xml import (
+    _elements,
     _parse_byte_range,
-    _parse_file,
     read_osm_xml,
 )
+from tests.conftest import FILE_CONFS, split_size
+
+KINDS = ("node", "way", "relation")
 
 
 @pytest.fixture(scope="module")
@@ -36,23 +39,39 @@ def _canon(df):
 
 
 def test_multi_split_row_identical_to_one_task(spark, one_file):
-    whole = read_osm_xml(spark, one_file)  # size << 64 MB -> one task
+    whole = read_osm_xml(spark, one_file)  # size << 4 MB floor -> one task
     assert whole.rdd.getNumPartitions() == 1
-    split = read_osm_xml(spark, one_file, split_bytes=700)
+    with split_size(spark, 700):
+        split = read_osm_xml(spark, one_file)
     assert split.rdd.getNumPartitions() > 4
     want = _canon(whole)
     assert len(want) > 40
     assert _canon(split) == want
 
 
-@pytest.mark.parametrize("split_bytes", [120, 333, 1021, 5000])
-def test_every_split_width_is_row_identical(spark, one_file, split_bytes):
+def test_split_size_follows_input_and_file_confs(spark, one_file):
+    """Spark's maxSplitBytes rule: with the open cost lowered and the
+    128 MB cap kept, the split is the file's share of defaultParallelism,
+    so the one file fans out to about one range per core; the confs are
+    back to their values afterwards."""
+    saved = [spark.conf.get(k) for k in FILE_CONFS]
+    cores = spark.sparkContext.defaultParallelism
+    with split_size(spark, 128 << 20, open_cost=1):
+        df = read_osm_xml(spark, one_file)
+    assert cores <= df.rdd.getNumPartitions() <= cores + 1
+    assert _canon(df) == _canon(read_osm_xml(spark, one_file))
+    assert [spark.conf.get(k) for k in FILE_CONFS] == saved
+
+
+@pytest.mark.parametrize("width", [120, 333, 1021, 5000])
+def test_every_split_width_is_row_identical(spark, one_file, width):
     """Sweep widths so boundaries land mid-element, mid-token, inside
     attribute values, and inside the header — including widths smaller
     than one element (some splits then sync past their whole range and
     emit nothing; their elements belong to the preceding split)."""
     want = _canon(read_osm_xml(spark, one_file))
-    got = _canon(read_osm_xml(spark, one_file, split_bytes=split_bytes))
+    with split_size(spark, width):
+        got = _canon(read_osm_xml(spark, one_file))
     assert got == want
 
 
@@ -61,20 +80,18 @@ def test_parse_byte_range_partitions_elements_exactly(one_file):
     concatenate to the whole-file rows in document order (no loss, no
     duplication, no reorder) — exhaustive over a byte stride."""
     size = os.path.getsize(one_file)
-    want = list(_parse_file(one_file, ("node", "way", "relation")))
+    with open(one_file, "rb") as f:
+        want = list(_elements(iter(lambda: f.read(4096), b""), KINDS))
     for cut in range(0, size + 1, 97):
-        a = list(_parse_byte_range(one_file, 0, cut, ("node", "way", "relation")))
-        b = list(
-            _parse_byte_range(one_file, cut, size, ("node", "way", "relation"))
-        )
+        a = list(_parse_byte_range(one_file, 0, cut, KINDS))
+        b = list(_parse_byte_range(one_file, cut, size, KINDS))
         assert a + b == want, f"cut={cut}: {len(a)}+{len(b)} != {len(want)}"
 
 
 def test_tag_kind_filter_parity_across_split(spark, one_file):
     want = _canon(read_osm_xml(spark, one_file, tags=("node", "way")))
-    got = _canon(
-        read_osm_xml(spark, one_file, tags=("node", "way"), split_bytes=400)
-    )
+    with split_size(spark, 400):
+        got = _canon(read_osm_xml(spark, one_file, tags=("node", "way")))
     assert got == want
     assert all(r[0] != "relation" for r in got)
 
@@ -85,13 +102,15 @@ def test_invalid_attr_fixture_parity_across_split(spark, tmp_path):
     p = tmp_path / "invalid.osm"
     p.write_text(build_osm_xml(include_invalid=True))
     want = _canon(read_osm_xml(spark, str(p)))
-    got = _canon(read_osm_xml(spark, str(p), split_bytes=256))
+    with split_size(spark, 256):
+        got = _canon(read_osm_xml(spark, str(p)))
     assert got == want
 
 
 def test_nonstandard_tags_fall_back_to_one_task(spark, one_file):
     """Sync tokens cover only node/way/relation; another kind must use
     the whole-file path (still correct, just unsplit)."""
-    df = read_osm_xml(spark, one_file, tags=("bounds",), split_bytes=200)
+    with split_size(spark, 200):
+        df = read_osm_xml(spark, one_file, tags=("bounds",))
     assert df.rdd.getNumPartitions() == 1
     assert df.count() == 1  # the fixture's single <bounds/>

@@ -31,3 +31,6 @@ def test_stream_matches_batch_ingest(spark, tmp_path):
 
     got, want = _canon(streamed), _canon(batch)
     assert len(got) == len(want) and got == want
+    # the shared parser yields tags as (k, v) tuples; Arrow must turn
+    # them into the struct through mapInPandas, not into nulls
+    assert any(row[9] for row in got)
