@@ -29,8 +29,9 @@ Two numbers are reported:
   individual scan, so inter-query overlap — not intra-query parallelism
   — is where the cores get used. This loop re-runs one prepared
   DataFrame per query, which is safe only because no headline query
-  persists. "sequential_total" (sum of the per-query medians) is
-  included alongside for the one-at-a-time view.
+  persists (tests/test_plan_hygiene.py checks it). "sequential_total"
+  (sum of the per-query medians) is included alongside for the
+  one-at-a-time view.
 
 Noise armor (round-3 lesson: a contended container run archived a 3x
 per-query regression that never reproduced): 2 warmups + median of 5,

@@ -123,12 +123,8 @@ def _required_violation(df: DataFrame, required: tuple[str, ...]) -> Column:
     return cond
 
 
-def normalize_counts(
-    raw: DataFrame,
-    clean: bool = True,
-    validate: str = "permissive",
-) -> DataFrame:
-    """Per-table VALID row counts of ``normalize(raw, clean, validate)``
+def normalize_counts(raw: DataFrame, validate: str = "permissive") -> DataFrame:
+    """Per-table VALID row counts of ``normalize(raw, validate=validate)``
     as ONE aggregate over the raw-element frame — the aggregate-pushdown
     twin of the 5-table fan-out (round 13, guide §1.2: don't compute
     things you throw away). Counting valid rows requires neither
@@ -153,8 +149,8 @@ def normalize_counts(
       null-preserving (regexp_extract/replace, when, concat chains:
       null in → null out), so post-clean ``value`` is null iff the raw
       ``v`` is null. Validity per surviving tag row therefore =
-      element id non-null AND v non-null — ``clean`` cannot change the
-      count (parameter kept for signature parity with normalize()).
+      element id non-null AND v non-null — cleaning cannot change the
+      count, so there is no ``clean`` parameter.
     - ways_nodes: position (posexplode) is never null; validity =
       way id non-null AND the nd ref non-null.
 

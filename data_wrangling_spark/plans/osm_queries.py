@@ -201,7 +201,7 @@ def _normalize_counts_oracle() -> str:
     oracle=_normalize_counts_oracle(),
     doc="The 5-table normalize row-count audit at bench scale: "
         "split-parallel parse of {sf_dir}/osm_scaled.osm, then "
-        "normalize_counts(clean=True, validate='permissive') — the "
+        "normalize_counts(validate='permissive') — the "
         "aggregate-pushdown twin of normalize(): per-table VALID row "
         "counts as conditional sums in ONE pass over the parse, no "
         "persisted raw, no table materialization (round 13; the "
@@ -231,7 +231,7 @@ def x_osm_scale_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_spark.sources.osm_xml import read_osm_xml
 
     raw = read_osm_xml(spark, _scale_or_fixture_path(sf_dir))
-    return normalize_counts(raw, clean=True, validate="permissive")
+    return normalize_counts(raw, validate="permissive")
 
 
 @register(

@@ -2828,7 +2828,8 @@ def x_sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Round-14 re-probe (verdict item 2, unshipped shj* variants; "
         "probe script at 6482cf1:scripts/bench_q7_ab.py): the "
         "1996-1998 shipdate window IS in the lineitem "
-        "PushedFilters (plans/r14 before dump — the suspected miss "
+        "PushedFilters (bf2fef4:plans/r14/"
+        "ext_tpch_q7_volume_shipping_before.txt — the suspected miss "
         "was unfounded), and SHUFFLE_HASH-hinting either or both "
         "fact joins measured a WASH across 6 interleaved fresh-JVM "
         "pairs (3 wins/3 losses; shipped 4.33-6.58s vs both-SHJ "
@@ -4509,6 +4510,22 @@ _EVAL_LABELED_CTES = r"""
 """
 
 
+def _labeled_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The x_eval_* input: (doc_id, source, _y, score_milli), the hashed
+    quality score of every document with its weak label
+    ``_y = lang == 'en'``. The label and group columns ride through the
+    map-only classifier (``carry``), so no doc-scale join re-attaches
+    them."""
+    from data_wrangling_spark.operators.text_analysis import hashed_linear_score
+
+    docs = _t(spark, sf_dir, "documents").withColumn(
+        "_y", F.when(F.col("lang") == "en", 1).otherwise(0)
+    )
+    return hashed_linear_score(docs, carry=["source", "_y"]).select(
+        "doc_id", "source", "_y", "score_milli"
+    )
+
+
 @register(
     "x_eval_auc_quality",
     oracle=_EVAL_LABELED_CTES + r""", cnt AS (
@@ -4545,17 +4562,8 @@ _EVAL_LABELED_CTES = r"""
 )
 def x_eval_auc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_spark.operators.evaluation import roc_auc
-    from data_wrangling_spark.operators.text_analysis import hashed_linear_score
 
-    # round 13: the label/group columns ride THROUGH the map-only
-    # classifier (carry=...) instead of a doc-scale re-attach join —
-    # they were in the same row all along
-    docs = _t(spark, sf_dir, "documents").withColumn(
-        "_y", F.when(F.col("lang") == "en", 1).otherwise(0)
-    )
-    lab = hashed_linear_score(docs, carry=["source", "_y"]).select(
-        "doc_id", "source", "_y", "score_milli"
-    )
+    lab = _labeled_scores(spark, sf_dir)
     return roc_auc(lab, "score_milli", "_y", ["source"]).orderBy("source")
 
 
@@ -4596,17 +4604,8 @@ def x_eval_auc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x_eval_pr_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_spark.operators.evaluation import pr_at_thresholds
-    from data_wrangling_spark.operators.text_analysis import hashed_linear_score
 
-    # round 13: the label/group columns ride THROUGH the map-only
-    # classifier (carry=...) instead of a doc-scale re-attach join —
-    # they were in the same row all along
-    docs = _t(spark, sf_dir, "documents").withColumn(
-        "_y", F.when(F.col("lang") == "en", 1).otherwise(0)
-    )
-    lab = hashed_linear_score(docs, carry=["source", "_y"]).select(
-        "doc_id", "source", "_y", "score_milli"
-    )
+    lab = _labeled_scores(spark, sf_dir)
     out = pr_at_thresholds(
         lab, "score_milli", "_y", [-300, -150, 0, 150, 300], ["source"]
     )
@@ -4656,17 +4655,8 @@ def x_eval_pr_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x_eval_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_spark.operators.evaluation import calibration_bins
-    from data_wrangling_spark.operators.text_analysis import hashed_linear_score
 
-    # round 13: the label/group columns ride THROUGH the map-only
-    # classifier (carry=...) instead of a doc-scale re-attach join —
-    # they were in the same row all along
-    docs = _t(spark, sf_dir, "documents").withColumn(
-        "_y", F.when(F.col("lang") == "en", 1).otherwise(0)
-    )
-    lab = hashed_linear_score(docs, carry=["source", "_y"]).select(
-        "doc_id", "source", "_y", "score_milli"
-    )
+    lab = _labeled_scores(spark, sf_dir)
     return calibration_bins(
         lab, "score_milli", "_y", n_bins=10, lo=-500, hi=500,
         group_cols=["source"],
@@ -4710,17 +4700,8 @@ def x_eval_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x_eval_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_spark.operators.evaluation import calibration_error
-    from data_wrangling_spark.operators.text_analysis import hashed_linear_score
 
-    # round 13: the label/group columns ride THROUGH the map-only
-    # classifier (carry=...) instead of a doc-scale re-attach join —
-    # they were in the same row all along
-    docs = _t(spark, sf_dir, "documents").withColumn(
-        "_y", F.when(F.col("lang") == "en", 1).otherwise(0)
-    )
-    lab = hashed_linear_score(docs, carry=["source", "_y"]).select(
-        "doc_id", "source", "_y", "score_milli"
-    )
+    lab = _labeled_scores(spark, sf_dir)
     return calibration_error(
         lab, "score_milli", "_y", n_bins=10, lo=-500, hi=500,
         group_cols=["source"],
@@ -4763,17 +4744,8 @@ def x_eval_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x_eval_brier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_spark.operators.evaluation import brier_score
-    from data_wrangling_spark.operators.text_analysis import hashed_linear_score
 
-    # round 13: the label/group columns ride THROUGH the map-only
-    # classifier (carry=...) instead of a doc-scale re-attach join —
-    # they were in the same row all along
-    docs = _t(spark, sf_dir, "documents").withColumn(
-        "_y", F.when(F.col("lang") == "en", 1).otherwise(0)
-    )
-    lab = hashed_linear_score(docs, carry=["source", "_y"]).select(
-        "doc_id", "source", "_y", "score_milli"
-    )
+    lab = _labeled_scores(spark, sf_dir)
     return brier_score(
         lab, "score_milli", "_y", lo=-500, hi=500, group_cols=["source"]
     ).orderBy("source")

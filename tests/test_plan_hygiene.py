@@ -15,13 +15,19 @@ DataFrame construction itself runs Spark jobs):
 Streaming and iterative queries are excluded: building their DataFrame
 executes jobs (stream drains, Pregel rounds), and their scale posture is
 pinned by their own tests instead.
+
+PLAN_FACTS at the end of the module pins per-query structural wins
+(operator counts, pushed filters) as checked rows.
 """
 
 from __future__ import annotations
 
+import operator
+import re
+
 import pytest
 
-from data_wrangling_spark.plans.registry import QUERIES, queries
+from data_wrangling_spark.plans.registry import QUERIES, bench_queries, queries
 
 queries()  # force registration
 
@@ -479,3 +485,137 @@ def test_shuffle_hash_gate_shut_on_unknown_size(spark, monkeypatch, name, size, 
     df = QUERIES[name].spark(spark, SF_DIR)
     plan = df._jdf.queryExecution().analyzed().toString()
     assert ("shuffle_hash" in plan.lower()) == hinted, plan
+
+
+# ------------------------------------------------------------------
+# plan facts: per-query structural wins as checked rows
+# ------------------------------------------------------------------
+
+_NO_JOIN = (r"\w+Join\b", "== 0")
+
+#: query -> facts about its executed plan at sf0.001. A fact is
+#: ``(regex, bound)``: the number of regex matches in the plan string
+#: must satisfy the bound, written ``== n``, ``<= n`` or ``>= n``. A
+#: deliberate plan change edits its row in the same commit. The formatted
+#: plan dumps these rows replaced stay readable with
+#: ``git show bf2fef4:plans/r13/<query>_{before,after}.txt`` (and r14).
+PLAN_FACTS: dict[str, list[tuple[str, str]]] = {
+    # round 14: a per-order conditional aggregate replaced the MIN/MAX
+    # windows over l_orderkey (three Window nodes in the before plan)
+    "ext_tpch_q21_waiting_suppliers": [(r"Window\b", "== 0")],
+    # round 13: the score is per-document, so array HOFs compute it in
+    # one map-only pass (the before plan exploded tokens into an
+    # exchange + hash aggregate and range-sorted for presentation)
+    "x_text_quality_classifier": [("Exchange", "== 0"), ("HashAggregate", "== 0")],
+    # round 13: entropy is per-document; array-sort + run-length HOFs
+    # replaced two exchanges
+    "x_text_entropy": [("Exchange", "== 0")],
+    # round 13: label and group columns ride through the classifier
+    # (carry=...) instead of a doc-scale re-attach join
+    "x_eval_auc_quality": [_NO_JOIN],
+    "x_eval_pr_sweep": [_NO_JOIN],
+    "x_eval_calibration": [_NO_JOIN],
+    "x_eval_ece": [_NO_JOIN],
+    "x_eval_brier": [_NO_JOIN],
+    # round 13: normalize_counts counts the five tables in one pass over
+    # the parse (the before plan parsed, persisted and scanned 5 times)
+    "x_osm_scale_normalize": [
+        ("Scan ExistingRDD", "== 1"),
+        ("InMemoryRelation", "== 0"),
+    ],
+    # round 14: the fast branch and the churn branch read one persisted
+    # full-outer join instead of each re-executing it
+    "x_corpus_snapshot_diff": [("InMemoryRelation", ">= 1")],
+    "x_corpus_snapshot_diff_realistic": [("InMemoryRelation", ">= 1")],
+    # round 13: the (user, week) active set is persisted, and each
+    # user's first week derives from it instead of another events pass
+    "ext_cohort_retention": [("InMemoryRelation", ">= 1")],
+    # round 13: replicas come from exploding an id-offset array over one
+    # scan, not a 3-branch union re-run per reference (37 Unions before)
+    "x_dedup_jaccard_collapsed": [("Union", "== 1")],
+    # round 13: no presentation orderBy(event_id), whose range exchange
+    # re-ran the window to sample
+    "ext_rolling_event_features": [("rangepartitioning", "== 0")],
+    # round 13: the vocabulary derives from the bigram model (no fifth
+    # corpus scan), and scoring joins the model on one xxhash64 long
+    # instead of probing with the (h1, h2) pair
+    "x_text_lm_score": [("Scan parquet", "<= 4"), (r"Join \[[^\]]*,", "== 0")],
+    # round 13: within-doc segment dedup is array_distinct, so no
+    # exchange hash-partitions on (doc_id, hash)
+    "x_text_boilerplate_removal": [(r"hashpartitioning\(doc_id#\d+L?, _h", "== 0")],
+    # round 13: the derived bound l_shipdate > 1997-03-02 (implied by
+    # the orders floor and the +60 day conjunct) reaches the lineitem scan
+    "ext_tpch_q4_late_shipments": [
+        (r"PushedFilters: \[[^\]]*GreaterThan\(l_shipdate,1997-03-02", "== 1"),
+    ],
+    # the 1996-1998 shipdate window is pushed to the lineitem scan
+    "ext_tpch_q7_volume_shipping": [
+        (r"PushedFilters: \[[^\]]*GreaterThanOrEqual\(l_shipdate,1996-01-01", "== 1"),
+    ],
+    # orders are aggregated per customer (partial + final) below the
+    # outer join, so the join shuffles customer-sized rows
+    "ext_tpch_q13_order_distribution": [
+        (r"HashAggregate\(keys=\[o_custkey#\d+L?\]", "== 2"),
+    ],
+    # decorrelated per-part average: one per-partkey pre-aggregate
+    "ext_tpch_q17_small_quantity": [
+        (r"HashAggregate\(keys=\[l_partkey#\d+L?\]", "== 2"),
+    ],
+    # per-side OR residues of the disjunctive predicate reach both scans
+    "ext_tpch_q19_disjunctive_pushdown": [(r"PushedFilters: \[[^\]]*Or\(", "== 2")],
+    "ext_tpch_q22_dormant_customers": [("LeftAnti", "== 1")],
+    # decorrelated to one aggregate (partial + final) and one join
+    "ext_correlated_subquery": [(r"\w+Join\b", "== 1"), ("HashAggregate", "== 2")],
+    # partial top-k before the exchange
+    "ext_topn_per_group": [(r"WindowGroupLimit .*Partial", "== 1")],
+    # round 13: the banded self-join runs over distinct hash values and
+    # the pair expansion emits each pair once, with no output DISTINCT
+    "x_multimodal_image_dedup": [
+        (r"HashAggregate\(keys=\[ahash_hi#\d+L?, ahash_lo#\d+L?\]", ">= 2"),
+        (r"HashAggregate\(keys=\[media_", "== 0"),
+    ],
+    # one 4-column lineitem scan, no join
+    "ext_tpch_q6_forecast_revenue": [
+        _NO_JOIN,
+        (r"ReadSchema: struct<(\w+:\w+,){3}\w+:\w+>", "== 1"),
+    ],
+    "ext_merge_upsert": [("LeftAnti", "== 1")],
+    # top-k as TakeOrderedAndProject, not a full sort; q10's returnflag
+    # filter reaches the lineitem scan
+    "ext_tpch_q10_returned_items": [
+        ("TakeOrderedAndProject", "== 1"),
+        (r"PushedFilters: \[[^\]]*EqualTo\(l_returnflag,R\)", "== 1"),
+    ],
+    "ext_tpch_q3_shipping_priority": [("TakeOrderedAndProject", "== 1")],
+    "q4_top_users": [("TakeOrderedAndProject", "== 1")],
+}
+
+_COMPARE = {"==": operator.eq, "<=": operator.le, ">=": operator.ge}
+
+
+def _executed_plan(spark, plans, name: str) -> str:
+    """The fixture's plan string, or a direct build for the
+    EXECUTES_ON_BUILD queries the fixture leaves out."""
+    if name in plans:
+        return plans[name]
+    df = QUERIES[name].spark(spark, SF_DIR)
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("name", sorted(PLAN_FACTS))
+def test_plan_facts(spark, plans, name):
+    plan = _executed_plan(spark, plans, name)
+    broken = []
+    for pattern, bound in PLAN_FACTS[name]:
+        op, n = bound.split()
+        found = len(re.findall(pattern, plan))
+        if not _COMPARE[op](found, int(n)):
+            broken.append(f"{pattern!r}: {found} matches, want {bound}")
+    assert not broken, f"{name}: " + "; ".join(broken) + f"\n{plan}"
+
+
+@pytest.mark.parametrize("name", sorted(bench_queries()))
+def test_bench_queries_do_not_persist(spark, plans, name):
+    """bench.py's concurrent headline re-runs one prepared DataFrame per
+    query, which times real work only while no headline plan persists."""
+    assert "InMemoryRelation" not in _executed_plan(spark, plans, name)

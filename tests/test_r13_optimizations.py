@@ -1,9 +1,10 @@
 """Focused regression tests for the round-13 optimization reworks.
 
-Each test pins the PROPERTY the rework delivered (plan shape or
-value-identity of a restructured internal), so a later refactor cannot
-silently regress it. The full output values are pinned by the oracle
-suite (test_queries_oracle.py) as for every registered query.
+Each test pins the PROPERTY the rework delivered (an operator ordering
+or value-identity of a restructured internal), so a later refactor
+cannot silently regress it. Plain operator-count facts live in
+test_plan_hygiene.py's PLAN_FACTS. The full output values are pinned by
+the oracle suite (test_queries_oracle.py) as for every registered query.
 """
 
 from __future__ import annotations
@@ -17,28 +18,8 @@ queries()  # force registration
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def _executed_plan(spark, name: str) -> str:
-    df = QUERIES[name].spark(spark, SF_DIR)
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_entropy_plan_has_no_exchange(spark):
-    """token_entropy is a single map-only pass (round 13): entropy is a
-    per-document statistic, so no shuffle is fundamentally required —
-    the array-sort + run-length HOF form must keep the plan
-    exchange-free."""
-    plan = _executed_plan(spark, "x_text_entropy")
-    assert "Exchange" not in plan, plan
-
-
-def test_lm_score_scans_documents_at_most_four_times(spark):
-    """lm_score_bigram derives the vocabulary from the MODEL (h1 ∪ h2
-    of distinct bigrams), not from a fifth corpus pass; the plan holds
-    at most 4 scans of documents (scoring occurrences, model, prefix
-    counts, vocabulary — the latter three collapse into one at runtime
-    via ReuseExchange)."""
-    plan = _executed_plan(spark, "x_text_lm_score")
-    assert plan.count("Scan parquet") <= 4, plan
 
 
 def test_q11_filters_lineitem_before_catalog_aggregate(spark):
@@ -47,7 +28,8 @@ def test_q11_filters_lineitem_before_catalog_aggregate(spark):
     contain a LeftSemi join, and the q11 grouping aggregate must sit
     ABOVE it (the filter runs on scan output, not on aggregated
     partsupp rows)."""
-    plan = _executed_plan(spark, "ext_tpch_q11_important_parts")
+    df = QUERIES["ext_tpch_q11_important_parts"].spark(spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert "LeftSemi" in plan, plan
     # Anchor on the CATALOG aggregate specifically (round-14 ADVICE
     # fix: the FIRST HashAggregate in a top-down plan string is the
@@ -81,27 +63,8 @@ def test_q11_filters_lineitem_before_catalog_aggregate(spark):
         prev = s
 
 
-def test_rolling_event_features_has_no_terminal_sort(spark):
-    """The presentation orderBy(event_id) was dropped round 13 (an
-    event-scale range exchange whose sampling pass re-executes the
-    window upstream); the only exchange left is the per-user hash
-    partition feeding the window."""
-    plan = _executed_plan(spark, "ext_rolling_event_features")
-    assert "rangepartitioning" not in plan, plan
 
 
-def test_boilerplate_removal_has_no_doc_hash_exchange(spark):
-    """boilerplate_removal dedups within-doc segments IN THE ARRAY
-    (array_distinct over the hashed array), so the (doc, hash) posting
-    relation is distinct by construction and the former corpus-scale
-    per-(doc, hash) aggregate exchange must not reappear: no exchange
-    may hash-partition on (doc_id, hash) together."""
-    import re
-
-    plan = _executed_plan(spark, "x_text_boilerplate_removal")
-    assert not re.search(
-        r"hashpartitioning\(doc_id#\d+L?, _h", plan
-    ), plan
 
 
 def test_normalize_counts_matches_materializing_counts(spark):
