@@ -80,25 +80,15 @@ def exact_quantiles(
         raise ValueError("exact_quantiles: no non-null input values")
     lo, hi, n = int(lo), int(hi), int(n)
 
-    # 0-based order-statistic ranks needed for interpolation
-    positions = [p * (n - 1) for p in probs]
-    ranks = sorted(
-        {math.floor(pos) for pos in positions}
-        | {min(math.floor(pos) + 1, n - 1) for pos in positions}
-    )
-    # rank -> (interval_lo, interval_hi, rows_below_interval)
-    state: dict[int, tuple[int, int, int]] = {k: (lo, hi, 0) for k in ranks}
+    positions, state = _rank_state(lo, hi, n, probs)
 
     for _ in range(_levels_needed(lo, hi, strata, max_levels)):
-        # distinct unresolved intervals; disjoint by construction (each
-        # level picks one stratum of a partition of the previous level)
-        active = sorted({(l, h) for (l, h, _) in state.values() if l < h})
+        active = _active(state, strata)
         if not active:
             break
-        widths = [max(1, -(-(h - l + 1) // strata)) for (l, h) in active]
         icase: Column | None = None
         scase: Column | None = None
-        for i, ((l, h), w) in enumerate(zip(active, widths)):
+        for i, (l, h, w) in enumerate(active):
             cond = probe["_v"].between(l, h)
             # integer `div`, NOT float division + floor: doubles lose
             # exactness past 2^53 and mis-bucket boundary values while
@@ -128,36 +118,78 @@ def exact_quantiles(
         hist: dict[int, dict[int, int]] = defaultdict(dict)
         for r in hist_rows:
             hist[r["_iv"]][r["_st"]] = r["count"]
-        iv_index = {iv: i for i, iv in enumerate(active)}
-        for k, (l, h, below) in state.items():
-            if l >= h:
-                continue
-            i = iv_index[(l, h)]
-            w = widths[i]
-            cum = below
-            for s in sorted(hist[i]):
-                cnt = hist[i][s]
-                if cum + cnt > k:
-                    state[k] = (
-                        l + s * w,
-                        min(h, l + (s + 1) * w - 1),
-                        cum,
-                    )
-                    break
-                cum += cnt
-            else:  # pragma: no cover - counts always cover the rank
-                raise AssertionError("rank outside histogram mass")
+        _narrow(state, active, hist)
+    return _interpolated(state, positions, n)
+
+
+#: one rank's refinement state: (interval_lo, interval_hi, rows_below)
+_RankState = dict[int, tuple[int, int, int]]
+
+
+def _rank_state(
+    lo: int, hi: int, n: int, probs: list[float]
+) -> tuple[list[float], _RankState]:
+    """The 0-based interpolation position of each prob over n values, and
+    the starting state of every order-statistic rank interpolation
+    needs: the whole [lo, hi] interval, nothing below it."""
+    positions = [p * (n - 1) for p in probs]
+    ranks = sorted(
+        {math.floor(pos) for pos in positions}
+        | {min(math.floor(pos) + 1, n - 1) for pos in positions}
+    )
+    return positions, {k: (lo, hi, 0) for k in ranks}
+
+
+def _active(state: _RankState, strata: int) -> list[tuple[int, int, int]]:
+    """The distinct unresolved intervals as (lo, hi, stratum width);
+    disjoint by construction (each level picks one stratum of a partition
+    of the previous level)."""
+    return [
+        (l, h, max(1, -(-(h - l + 1) // strata)))
+        for (l, h) in sorted({(l, h) for (l, h, _) in state.values() if l < h})
+    ]
+
+
+def _narrow(
+    state: _RankState,
+    active: list[tuple[int, int, int]],
+    hist: dict[int, dict[int, int]],
+) -> None:
+    """Narrow each unresolved rank to the stratum holding it, from the
+    level's histogram: ``hist[i][stratum]`` counts the rows of
+    ``active[i]`` in that stratum."""
+    index = {(l, h): i for i, (l, h, _) in enumerate(active)}
+    for k, (l, h, below) in state.items():
+        if l >= h:
+            continue
+        i = index[(l, h)]
+        w = active[i][2]
+        cum = below
+        for s in sorted(hist[i]):
+            cnt = hist[i][s]
+            if cum + cnt > k:
+                state[k] = (l + s * w, min(h, l + (s + 1) * w - 1), cum)
+                break
+            cum += cnt
+        else:  # pragma: no cover - counts always cover the rank
+            raise AssertionError("rank outside histogram mass")
+
+
+def _interpolated(
+    state: _RankState, positions: list[float], n: int
+) -> list[float]:
+    """The value at each position once every rank is resolved to one
+    value, interpolated with ``quantile_cont`` semantics."""
     unresolved = [k for k, (l, h, _) in state.items() if l < h]
     if unresolved:  # pragma: no cover - needs >strata^max_levels domain
         raise AssertionError(f"unresolved ranks after refinement: {unresolved}")
-
     value_at = {k: float(l) for k, (l, _, _) in state.items()}
     out: list[float] = []
     for pos in positions:
         fl = math.floor(pos)
-        frac = pos - fl
-        v = _interpolate(value_at[fl], value_at[min(fl + 1, n - 1)], frac)
-        out.append(v)
+        out.append(
+            _interpolate(value_at[fl], value_at[min(fl + 1, n - 1)], pos - fl)
+        )
     return out
 
 
@@ -225,18 +257,13 @@ def exact_quantiles_grouped(
         .collect()  # O(groups) control-plane rows
     )
     spark = df.sparkSession
-    # per group: rank -> (interval_lo, interval_hi, rows_below)
-    meta: dict[object, tuple[int, list[float]]] = {}
-    state: dict[object, dict[int, tuple[int, int, int]]] = {}
+    # per group: (positions, n) and the rank refinement state
+    meta: dict[object, tuple[list[float], int]] = {}
+    state: dict[object, _RankState] = {}
     for r in bounds:
-        g, lo, hi, n = r["_g"], int(r["lo"]), int(r["hi"]), int(r["n"])
-        positions = [p * (n - 1) for p in probs]
-        ranks = sorted(
-            {math.floor(pos) for pos in positions}
-            | {min(math.floor(pos) + 1, n - 1) for pos in positions}
-        )
-        meta[g] = (n, positions)
-        state[g] = {k: (lo, hi, 0) for k in ranks}
+        g, n = r["_g"], int(r["n"])
+        positions, state[g] = _rank_state(int(r["lo"]), int(r["hi"]), n, probs)
+        meta[g] = (positions, n)
 
     worst = max(
         (_levels_needed(int(r["lo"]), int(r["hi"]), strata, max_levels)
@@ -245,13 +272,12 @@ def exact_quantiles_grouped(
     )
     for _ in range(worst):
         # one broadcast interval table covering every group's open work
-        iv_rows = []
-        for g, st in state.items():
-            for iv_id, (l, h) in enumerate(
-                sorted({(l, h) for (l, h, _) in st.values() if l < h})
-            ):
-                w = max(1, -(-(h - l + 1) // strata))
-                iv_rows.append((g, iv_id, l, h, Decimal(w)))
+        active = {g: _active(st, strata) for g, st in state.items()}
+        iv_rows = [
+            (g, iv_id, l, h, Decimal(w))
+            for g, ivs in active.items()
+            for iv_id, (l, h, w) in enumerate(ivs)
+        ]
         if not iv_rows:
             break
         from pyspark.sql import types as T
@@ -282,39 +308,11 @@ def exact_quantiles_grouped(
             .count()
             .collect()  # O(groups * strata) tiny control-plane rows
         )
-        hist: dict[tuple, dict[int, int]] = defaultdict(dict)
+        hist: dict[object, dict[int, dict[int, int]]] = defaultdict(
+            lambda: defaultdict(dict)
+        )
         for r in hist_rows:
-            hist[(r["_g"], r["_iv"])][r["_st"]] = r["count"]
+            hist[r["_g"]][r["_iv"]][r["_st"]] = r["count"]
         for g, st in state.items():
-            actives = sorted({(l, h) for (l, h, _) in st.values() if l < h})
-            iv_index = {iv: i for i, iv in enumerate(actives)}
-            for k, (l, h, below) in st.items():
-                if l >= h:
-                    continue
-                i = iv_index[(l, h)]
-                w = max(1, -(-(h - l + 1) // strata))
-                cum = below
-                for s in sorted(hist[(g, i)]):
-                    cnt = hist[(g, i)][s]
-                    if cum + cnt > k:
-                        st[k] = (l + s * w, min(h, l + (s + 1) * w - 1), cum)
-                        break
-                    cum += cnt
-                else:  # pragma: no cover
-                    raise AssertionError("rank outside histogram mass")
-    out: dict[object, list[float]] = {}
-    for g, st in state.items():
-        unresolved = [k for k, (l, h, _) in st.items() if l < h]
-        if unresolved:  # pragma: no cover
-            raise AssertionError(f"unresolved ranks for group {g!r}")
-        n, positions = meta[g]
-        value_at = {k: float(l) for k, (l, _, _) in st.items()}
-        vals = []
-        for pos in positions:
-            fl = math.floor(pos)
-            frac = pos - fl
-            vals.append(
-                _interpolate(value_at[fl], value_at[min(fl + 1, n - 1)], frac)
-            )
-        out[g] = vals
-    return out
+            _narrow(st, active[g], hist[g])
+    return {g: _interpolated(st, *meta[g]) for g, st in state.items()}

@@ -8,9 +8,19 @@ durable layer is partitioned parquet; temp views replace SQLite tables
 At 100 TB the landing zone is a partitioned parquet directory per table;
 ``spark.read.parquet`` gives partition pruning + predicate pushdown + column
 pruning for free. Nothing here collects to the driver.
+
+Timestamps are decoded here, once, for both the batch tables and the events
+streams (``streaming/events.py``). Spark's parquet reader decodes seconds,
+millis, micros and INT96 natively; the one encoding it cannot turn into a
+timestamp is INT64 ``TIMESTAMP(NANOS)``, which ``ensure_utc`` makes it read
+as ``bigint`` and :func:`decode_nanos` converts to micros.
 """
 
 from __future__ import annotations
+
+import glob
+import json
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,6 +42,14 @@ TABLES = (
 )
 
 
+#: session confs the engine's timestamp semantics depend on
+_UTC_CONFS = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
+
 def ensure_utc(spark: SparkSession) -> None:
     """Pin the session timezone to UTC and parquet timestamp inference to
     session-zone TimestampType (idempotent). Timestamp semantics must not
@@ -47,32 +65,31 @@ def ensure_utc(spark: SparkSession) -> None:
     wall-clock values), which breaks double-casts, window arithmetic and
     schema stability. Disabling it at the scan keeps the type native to
     the parquet reader, so filter pushdown is unaffected (no cast wrapped
-    around the scan column)."""
-    if spark.conf.get("spark.sql.session.timeZone", "") != "UTC":
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true") != "false":
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    around the scan column).
+
+    ``nanosAsLong`` makes the reader return TIMESTAMP(NANOS) columns as
+    their raw int64 instead of failing with PARQUET_TYPE_ILLEGAL;
+    :func:`decode_nanos` turns them into timestamps.
+
+    Each conf is read without a default: every one is registered with its
+    own, and Spark validates a caller-supplied default (``""`` is not a
+    valid time zone), so one JVM read per conf, plus a write only when it
+    differs."""
+    for key, want in _UTC_CONFS.items():
+        if spark.conf.get(key) != want:
+            spark.conf.set(key, want)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one parquet table from a scale-factor directory.
-
-    Handles parquet TIMESTAMP(NANOS) columns (which Spark's reader rejects,
-    PARQUET_TYPE_ILLEGAL) independent of session config: such columns are
-    read as raw int64 via an explicit schema and integer-divided down to
-    microseconds — the same truncation DuckDB applies at scan, so oracle
-    values agree exactly.
-    """
+    """Load one parquet table (a file or a directory) from a scale-factor
+    directory, timestamps decoded by :func:`decode_nanos`."""
     ensure_utc(spark)
     path = f"{sf_dir}/{name}.parquet"
     key = (id(spark), path)
     cached = _TABLE_CACHE.get(key)
     if cached is not None:
         return cached
-    if _has_nanos_timestamp(path):
-        df = _load_parquet_nanos_safe(spark, path)
-    else:
-        df = spark.read.parquet(path)
+    df = decode_nanos(spark.read.parquet(path), path)
     # belt-and-braces vs ensure_utc's inferTimestampNTZ=false: if a future
     # Spark stops honoring that conf, normalize any NTZ column to the
     # session-zone type here (UTC session → identical wall-clock values;
@@ -101,58 +118,38 @@ def clear_table_cache() -> None:
     _TABLE_CACHE.clear()
 
 
-def _has_nanos_timestamp(path: str) -> bool:
-    """Driver-side O(1) footer probe for TIMESTAMP(NANOS) columns."""
-    try:
-        import pyarrow.parquet as pq
-
-        return any(str(f.type).startswith("timestamp[ns") for f in pq.read_schema(path))
-    except Exception:
-        return False
-
-
-_PA_TO_SPARK = {
-    "int64": T.LongType(),
-    "int32": T.IntegerType(),
-    "double": T.DoubleType(),
-    "float": T.FloatType(),
-    "string": T.StringType(),
-    "large_string": T.StringType(),
-    "bool": T.BooleanType(),
-    "binary": T.BinaryType(),
-    "date32[day]": T.DateType(),
-}
+def _source_files(src: str) -> list[str]:
+    """The parquet files behind ``src``: the file itself, or every
+    ``*.parquet`` under a directory (part files, hive partitions),
+    sorted."""
+    if os.path.isdir(src):
+        return sorted(glob.glob(os.path.join(src, "**", "*.parquet"), recursive=True))
+    return [src]
 
 
-def _load_parquet_nanos_safe(spark: SparkSession, path: str) -> DataFrame:
-    """Fallback reader for files whose footer Spark cannot convert.
-
-    Builds an explicit Spark schema from the pyarrow footer, mapping
-    timestamp[ns] → int64, then converts those columns to TimestampType
-    with `div 1000` (exact integer math — float division would lose
-    precision above 2^53 ns). Footer inspection is driver-side and O(1);
-    the data read stays fully distributed.
-    """
+def _nanos_columns(path: str) -> list[str]:
+    """Top-level columns stored as physical INT64 with the logical type
+    TIMESTAMP(NANOS), read from the footer of ``path``'s first file
+    (driver-side, O(1)). INT96 also reaches pyarrow as ``timestamp[ns]``,
+    so the parquet logical type is read, not the arrow type."""
     import pyarrow.parquet as pq
 
-    arrow_schema = pq.read_schema(path)
-    fields, nanos_cols = [], []
-    for f in arrow_schema:
-        ts = str(f.type)
-        if ts.startswith("timestamp[ns"):
-            fields.append(T.StructField(f.name, T.LongType()))
-            nanos_cols.append(f.name)
-        elif ts.startswith("timestamp"):
-            fields.append(T.StructField(f.name, T.TimestampType()))
-        elif ts.startswith("list<"):
-            inner = ts[5:-1].split(" ")[-1]
-            fields.append(
-                T.StructField(f.name, T.ArrayType(_PA_TO_SPARK.get(inner, T.StringType())))
-            )
-        else:
-            fields.append(T.StructField(f.name, _PA_TO_SPARK.get(ts, T.StringType())))
-    df = spark.read.schema(T.StructType(fields)).parquet(path)
-    for c in nanos_cols:
+    schema = pq.ParquetFile(_source_files(path)[0]).schema
+    cols = (schema.column(i) for i in range(len(schema)))
+    return [
+        c.name for c in cols
+        if c.path == c.name and c.physical_type == "INT64"
+        and json.loads(c.logical_type.to_json()).get("timeUnit") == "nanoseconds"
+    ]
+
+
+def decode_nanos(df: DataFrame, path: str) -> DataFrame:
+    """Turn the raw int64 TIMESTAMP(NANOS) columns of a batch or
+    streaming read of ``path`` into TimestampType: ``div 1000`` is exact
+    integer math, the same truncation to micros DuckDB applies at scan, so
+    oracle values agree exactly. Every other encoding is already a
+    timestamp."""
+    for c in _nanos_columns(path):
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     return df
 

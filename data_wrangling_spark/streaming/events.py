@@ -10,8 +10,13 @@ directory / Kafka topic; here the bounded parquet file is replayed with
 Late data: the watermark bounds state (windows older than watermark are
 finalized and evicted) — mandatory at 100 TB where unbounded window state
 would OOM. ``applyInPandasWithState`` is the escape hatch for custom
-stateful operators (e.g. sessionization), demonstrated by
-``sessionize_events`` in batch-equivalent form below.
+stateful operators: :func:`sessionize_stream` is the streaming form of the
+batch ``operators.temporal.sessionize``.
+
+Timestamps: a stream reads its staged directory with the schema the batch
+reader infers for it and decodes it with the batch tables' one decoder,
+``sources.tables.decode_nanos``; seconds, millis, micros and INT96 arrive
+as timestamps, TIMESTAMP(NANOS) as int64 that the decoder converts.
 """
 
 from __future__ import annotations
@@ -22,164 +27,71 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-#: streaming reads require an explicit schema; ts is read as raw int64
-#: (valid for any parquet timestamp physical encoding) and converted to
-#: TimestampType per the file's actual unit — see _ts_micros_expr
-_RAW_EVENTS_SCHEMA = (
-    "event_id long, ts long, user_id long, "
-    "event_type string, value double, props string"
-)
-
-#: schema for Spark-written landing files (physical INT96 ts): the
-#: vectorized reader decodes INT96 only as TimestampType, so ts arrives
-#: as a ready timestamp and needs no unit conversion (_ts_is_int96)
-_TS_EVENTS_SCHEMA = (
-    "event_id long, ts timestamp, user_id long, "
-    "event_type string, value double, props string"
+from data_wrangling_spark.sources.tables import (
+    _nanos_columns,
+    _source_files,
+    decode_nanos,
+    ensure_utc,
+    load_table,
 )
 
 
-def _load_events_stream(spark: SparkSession, src: str, stage: str) -> DataFrame:
-    """Schema-dispatching streaming load: INT96 files read ts natively,
-    raw-int64 files read it as long and convert per the footer's unit."""
-    if _ts_is_int96(src):
-        return (
-            spark.readStream.schema(_TS_EVENTS_SCHEMA)
-            .format("parquet")
-            .load(stage)
-        )
-    stream = (
-        spark.readStream.schema(_RAW_EVENTS_SCHEMA).format("parquet").load(stage)
-    )
-    return stream.withColumn(
-        "ts", F.timestamp_micros(F.expr(_ts_micros_expr(src)))
-    )
-
-
-def _ts_micros_expr(path: str) -> str:
-    """SQL expr converting the raw int64 ``ts`` of this file to epoch
-    MICROseconds, from the parquet footer's declared unit. Driver-side
-    O(1) footer probe — the testdata has shipped both TIMESTAMP(NANOS)
-    and TIMESTAMP(MICROS) across rounds, so the unit must be read, not
-    assumed (a wrong divisor silently shrinks every timestamp 1000x)."""
-    unit = _ts_unit(path)
-    if unit.startswith("timestamp[ns"):
-        return "ts div 1000"
-    if unit.startswith("timestamp[ms"):
-        return "ts * 1000"
-    if unit.startswith("timestamp[s"):
-        return "ts * 1000000"
-    return "ts"  # timestamp[us]
-
-
-def _source_files(src: str) -> list[str]:
-    """A landing 'file' may be a single parquet file or a directory of
-    part files (the scale harness writes multi-file tables); return the
-    concrete file list either way."""
-    if os.path.isdir(src):
-        return sorted(
-            os.path.join(src, f)
-            for f in os.listdir(src)
-            if f.endswith(".parquet")
-        )
-    return [src]
-
-
-def _ts_unit(path: str) -> str:
-    import pyarrow.parquet as pq
-
-    return str(pq.read_schema(_source_files(path)[0]).field("ts").type)
-
-
-def _ts_is_int96(path: str) -> bool:
-    """True when ``ts`` is stored as physical INT96 — Spark's own legacy
-    timestamp encoding (the default parquet writer output), which the
-    vectorized reader can ONLY decode as TimestampType: declaring the
-    raw-int64 streaming schema against it fails with
-    PARQUET_COLUMN_DATA_TYPE_MISMATCH. Landing files written by Spark
-    jobs (e.g. the scale harness's materialized events) take this
-    branch; the raw testdata (plain INT64 nanos) takes the int64+convert
-    branch."""
-    import pyarrow.parquet as pq
-
-    sch = pq.ParquetFile(_source_files(path)[0]).schema
-    return sch.column(sch.names.index("ts")).physical_type == "INT96"
-
-
-def _assert_uniform_ts_unit(stage: str, expected: str) -> None:
-    """The unit divisor AND the schema dispatch are baked into the
-    stream at plan-build time from ONE footer probe, so a landing
-    directory must be uniform in BOTH dimensions the probe reads: the
-    logical unit (a mixed-unit file would be silently misconverted by a
-    fixed 1000x factor) and the PHYSICAL encoding (pyarrow reports both
-    INT96 and raw INT64-nanos as timestamp[ns], so a unit check alone
-    passes a mix that then dies mid-batch with
-    PARQUET_COLUMN_DATA_TYPE_MISMATCH once the fixed schema meets the
-    other encoding — the round-6 review find). Fail loudly up front.
-    (On a real deployment this check runs in the ingest path that
-    admits files to the landing directory.)"""
-    expected_phys = None
-    units: dict[str, str] = {}
-    phys: dict[str, str] = {}
-    for f in sorted(os.listdir(stage)):
-        p = os.path.join(stage, f)
-        try:
-            units[f] = _ts_unit(p)
-            phys[f] = "INT96" if _ts_is_int96(p) else "other"
-        except Exception as exc:
-            raise ValueError(
-                f"unreadable parquet footer in streaming dir {stage}: {f}"
-            ) from exc
-        if expected_phys is None:
-            expected_phys = phys[f]
-    mixed = {f: u for f, u in units.items() if u != expected}
-    mixed_phys = {f: p for f, p in phys.items() if p != expected_phys}
-    if mixed or mixed_phys:
+def _assert_uniform_nanos(stage: str) -> None:
+    """The stream's schema and its nanos conversion are fixed at
+    plan-build time from one file's footer, so every file in a landing
+    directory must agree on which columns are TIMESTAMP(NANOS): a micros
+    file read under the nanos file's ``bigint`` schema silently yields raw
+    micros. Other mixes (micros + millis, INT96 + micros) all read as
+    timestamps and pass. Fail loudly up front. (On a real deployment this
+    check runs in the ingest path that admits files to the landing
+    directory.)"""
+    nanos = {os.path.basename(f): _nanos_columns(f) for f in _source_files(stage)}
+    if len({tuple(cols) for cols in nanos.values()}) > 1:
         raise ValueError(
             f"mixed parquet timestamp encodings in streaming dir {stage}: "
-            f"expected unit {expected} / physical {expected_phys}, found "
-            f"units {mixed or '{}'} / physical {mixed_phys or '{}'} — the "
-            "stream's schema and unit conversion are fixed at plan-build "
-            "time"
+            f"TIMESTAMP(NANOS) columns per file {nanos} — the stream's "
+            "schema and nanos conversion are fixed at plan-build time"
         )
 
 
-def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events parquet (schema must be given
-    explicitly for streaming reads). ts arrives as int64 in the file's
-    native unit → converted to TimestampType exactly, unit per footer."""
-    from data_wrangling_spark.sources.tables import ensure_utc
-
+def _events_stream(spark: SparkSession, *files: str) -> DataFrame:
+    """File-source stream over ``files`` staged as one landing directory:
+    the batch-inferred schema (streaming reads require one) and the batch
+    tables' timestamp decoder."""
     ensure_utc(spark)
-    src = f"{sf_dir}/events.parquet"
     # the file streaming source requires a DIRECTORY (its 'basePath');
     # stage a symlink dir pointing at the bounded file(s) — on a cluster
     # this would simply be the landing directory new files arrive in. A
     # multi-file source (scale harness layout) stages one link per part
     # file, so the stream discovers them like arriving files.
-    stage = _staged_dir("events", *_source_files(src))
-    _assert_uniform_ts_unit(stage, _ts_unit(src))
-    return _load_events_stream(spark, src, stage)
+    stage = _staged_dir(*files)
+    _assert_uniform_nanos(stage)
+    schema = spark.read.parquet(stage).schema
+    return decode_nanos(spark.readStream.schema(schema).parquet(stage), stage)
+
+
+def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """File-source stream over the events parquet (a file or a directory
+    of part files)."""
+    return _events_stream(spark, *_source_files(f"{sf_dir}/events.parquet"))
 
 
 #: memoized staging dirs: repeated calls (bench loops, test suites) reuse
-#: one symlink dir per (kind, source) instead of leaking a fresh mkdtemp
+#: one symlink dir per file list instead of leaking a fresh mkdtemp
 _STAGE_CACHE: dict[tuple[str, ...], str] = {}
 
 
-def _staged_dir(kind: str, *links: str) -> str:
-    key = (kind, *links)
-    cached = _STAGE_CACHE.get(key)
+def _staged_dir(*links: str) -> str:
+    cached = _STAGE_CACHE.get(links)
     if cached is not None and os.path.isdir(cached):
         return cached
-    stage = tempfile.mkdtemp(prefix=f"dws-stream-{kind}-")
+    stage = tempfile.mkdtemp(prefix="dws-stream-events-")
     for i, target in enumerate(links):
         name = os.path.basename(target)
         if i > 0:  # same file staged twice needs distinct link names
             name = f"redelivered_{i}_{name}"
         os.symlink(target, f"{stage}/{name}")
-    _STAGE_CACHE[key] = stage
+    _STAGE_CACHE[links] = stage
     return stage
 
 
@@ -211,15 +123,7 @@ def run_stream_to_memory(spark: SparkSession, sf_dir: str,
     ``windowed_counts_to_parquet`` (update mode — watermark actually
     evicts finalized windows)."""
     counts = windowed_event_counts(read_events_stream(spark, sf_dir))
-    q = (
-        counts.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(table_name)
+    return _drain_to_memory(spark, counts, table_name, "complete")
 
 
 def windowed_counts_to_parquet(
@@ -284,8 +188,6 @@ def enrich_stream(
     classic enrichment bug. Bounded drain via AvailableNow into a
     memory sink; the aggregate is batch-equivalent, so this streaming
     job carries a full DuckDB oracle (x_stream_enrich)."""
-    from data_wrangling_spark.sources.tables import load_table
-
     ev = read_events_stream(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"),
@@ -298,15 +200,7 @@ def enrich_stream(
         F.count("*").alias("n_events"),
         F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("value_cents"),
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(table_name)
+    return _drain_to_memory(spark, agg, table_name, "complete")
 
 
 def attribution_stream(
@@ -362,17 +256,9 @@ def attribution_stream(
     # happens in batch over the drained sink (an aggregation stacked on
     # the join would need append-mode finalization, which a bounded
     # drain's final watermark never grants to the newest windows)
-    q = (
-        pairs.select(F.col("c_user").alias("user_id"), "click_id", "purchase_id")
-        .writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    matched = pairs.select(F.col("c_user").alias("user_id"), "click_id", "purchase_id")
     return (
-        spark.table(table_name)
+        _drain_to_memory(spark, matched, table_name, "append")
         .groupBy("user_id")
         .agg(F.count("*").alias("n_pairs"))
     )
@@ -399,30 +285,25 @@ def dedup_stream(
     ``progress_out`` receives ``state_rows_peak`` — the max
     ``numRowsTotal`` across the run's state operators, the measured
     state-boundedness evidence."""
-    from data_wrangling_spark.sources.tables import ensure_utc
-
-    ensure_utc(spark)
-    src = f"{sf_dir}/events.parquet"
-    files = _source_files(src)
-    stage = _staged_dir("dedup", *files, *files)
-    _assert_uniform_ts_unit(stage, _ts_unit(src))
+    files = _source_files(f"{sf_dir}/events.parquet")
     stream = (
-        _load_events_stream(spark, src, stage)
+        _events_stream(spark, *files, *files)
         .withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "user_id", "event_type")
     )
-    return _drain_to_memory(spark, stream, table_name, progress_out)
+    return _drain_to_memory(spark, stream, table_name, "append", progress_out)
 
 
 def _drain_to_memory(
-    spark: SparkSession, stream: DataFrame, table_name: str,
-    progress_out: dict | None,
+    spark: SparkSession, stream: DataFrame, table_name: str, mode: str,
+    progress_out: dict | None = None,
 ) -> DataFrame:
-    """Run ``stream`` to completion (availableNow) into the in-memory
-    table ``table_name``, record its state peak, and return the table."""
+    """Run ``stream`` to completion (availableNow) in output ``mode`` into
+    the in-memory table ``table_name``, record its state peak, and return
+    the table."""
     q = (
-        stream.writeStream.outputMode("append").trigger(availableNow=True)
+        stream.writeStream.outputMode(mode).trigger(availableNow=True)
         .format("memory").queryName(table_name).start()
     )
     q.awaitTermination()
@@ -586,7 +467,7 @@ def sessionize_stream(
     """
     events = read_events_stream(spark, sf_dir).withWatermark("ts", watermark)
     out = _sessionize_plan_custom(events, gap_minutes)
-    return _drain_to_memory(spark, out, table_name, progress_out)
+    return _drain_to_memory(spark, out, table_name, "append", progress_out)
 
 
 def sessionize_stream_native(
@@ -620,7 +501,7 @@ def sessionize_stream_native(
     """
     events = read_events_stream(spark, sf_dir).withWatermark("ts", watermark)
     out = _sessionize_plan_native(events, gap_minutes)
-    return _drain_to_memory(spark, out, table_name, progress_out)
+    return _drain_to_memory(spark, out, table_name, "append", progress_out)
 
 
 #: default ceiling on native session_window per-event state rows: above

@@ -27,6 +27,7 @@ from data_wrangling_spark.sources.osm_xml import (
     _KEPT_TAGS,
     _elements,
 )
+from data_wrangling_spark.streaming.events import _drain_to_memory
 
 _COLS = [f.name for f in RAW_ELEMENT_SCHEMA.fields]
 
@@ -63,13 +64,6 @@ def drain_osm_stream(
     """Run the ingest with AvailableNow into a memory sink (bounded
     drain for tests/driver checks; a real deployment writes the
     partitioned parquet landing zone with foreachBatch/toTable)."""
-    q = (
-        read_osm_stream(spark, landing_dir, tags)
-        .writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return _drain_to_memory(
+        spark, read_osm_stream(spark, landing_dir, tags), table_name, "append"
     )
-    q.awaitTermination()
-    return spark.table(table_name)

@@ -92,17 +92,15 @@ def test_late_event_dropped_after_watermark(spark, tmp_path):
 
 
 def test_mixed_timestamp_units_fail_loudly(tmp_path):
-    """The stream's unit divisor is fixed at plan-build time from one
-    footer probe; a landing dir mixing units would silently misconvert
-    by 1000x — the reader must refuse instead (round-3 advice)."""
+    """The stream's schema and nanos conversion are fixed at plan-build
+    time from one footer; a landing dir mixing nanos and micros files
+    would silently read the micros file as raw int64 — the reader must
+    refuse instead (round-3 advice)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     import pytest
 
-    from data_wrangling_spark.streaming.events import (
-        _assert_uniform_ts_unit,
-        _ts_unit,
-    )
+    from data_wrangling_spark.streaming.events import _assert_uniform_nanos
 
     def write(path, unit):
         pq.write_table(
@@ -113,8 +111,8 @@ def test_mixed_timestamp_units_fail_loudly(tmp_path):
     write(tmp_path / "a.parquet", "ns")
     write(tmp_path / "b.parquet", "us")
     with pytest.raises(ValueError, match="mixed parquet timestamp encodings"):
-        _assert_uniform_ts_unit(str(tmp_path), _ts_unit(str(tmp_path / "a.parquet")))
+        _assert_uniform_nanos(str(tmp_path))
 
     # single-unit dir passes
     (tmp_path / "b.parquet").unlink()
-    _assert_uniform_ts_unit(str(tmp_path), _ts_unit(str(tmp_path / "a.parquet")))
+    _assert_uniform_nanos(str(tmp_path))
