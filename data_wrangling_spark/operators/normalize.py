@@ -244,8 +244,8 @@ def normalize(
             tables[name] = df.filter(~bad)
         if validate == "strict":
             for name, q in quarantine.items():
-                # one pass, not count()+first() (each recomputes the full
-                # upstream lineage incl. the XML parse)
+                # one pass, not count()+first() (each re-runs the
+                # table's shaping over the raw frame)
                 bad_sample = q.take(1)
                 if bad_sample:
                     raise ValueError(

@@ -203,8 +203,9 @@ def _normalize_counts_oracle() -> str:
         "split-parallel parse of {sf_dir}/osm_scaled.osm, then "
         "normalize_counts(validate='permissive') — the "
         "aggregate-pushdown twin of normalize(): per-table VALID row "
-        "counts as conditional sums in ONE pass over the parse, no "
-        "persisted raw, no table materialization (round 13; the "
+        "counts as conditional sums in ONE pass over the parse (whose "
+        "checkpoint is written but never read back), no table "
+        "materialization (round 13; the "
         "former parse→persist→5-count-jobs shape measured 15.95s at "
         "100x vs 8.0s for the bare parse noop — this form runs AT the "
         "parse floor, measured at 0379a6b; equivalence to the "
@@ -254,17 +255,14 @@ def osm_pipeline_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_wrangling_spark.operators.normalize import normalize
     from data_wrangling_spark.sources.osm_xml import read_osm_xml
 
-    raw = read_osm_xml(spark, _fixture_path(include_invalid=True)).persist()
-    try:
-        # persist: the 10 per-table counts below otherwise re-run the
-        # full XML parse each (5 tables x quarantined/clean)
-        out = normalize(raw, clean=True, validate="permissive")
-        rows = [
-            (name, out.quarantine[name].count(), out.as_dict()[name].count())
-            for name in sorted(out.quarantine)
-        ]
-    finally:
-        raw.unpersist()
+    # the 10 per-table counts below read read_osm_xml's checkpoint, so
+    # the XML parses once
+    raw = read_osm_xml(spark, _fixture_path(include_invalid=True))
+    out = normalize(raw, clean=True, validate="permissive")
+    rows = [
+        (name, out.quarantine[name].count(), out.as_dict()[name].count())
+        for name in sorted(out.quarantine)
+    ]
     return spark.createDataFrame(
         rows, "table string, n_quarantined long, n_clean long"
     ).orderBy("table")

@@ -103,6 +103,13 @@ DEFAULT_PARTITIONING: dict[str, tuple[str, ...]] = {
 }
 
 
+#: the CSV read-back's ``nullValue``. The writer leaves a null field bare
+#: and quotes an empty string (``""``); Spark's default ``nullValue=""``
+#: reads both as NULL. With this sentinel a bare field still reads as NULL
+#: and ``""`` reads as ``''``.
+_CSV_NULL_VALUE = "\u0000"
+
+
 def write_tables(
     tables: dict[str, DataFrame],
     out_dir: str,
@@ -110,7 +117,11 @@ def write_tables(
     register: SparkSession | None = None,
 ) -> None:
     """Persist the normalized 5-table schema; optionally register each
-    written table back as a temp view (the query layer, OP-SNK-SQL)."""
+    written table back as a temp view (the query layer, OP-SNK-SQL).
+
+    A CSV table registered back keeps empty strings as ``''``; the one
+    string value that reads back as NULL is ``"\\u0000"``, which XML 1.0
+    forbids in any document, so no value parsed from OSM XML holds it."""
     for name, df in tables.items():
         path = f"{out_dir}/{name}"
         if fmt == "csv":
@@ -120,10 +131,8 @@ def write_tables(
         if register is not None:
             # read back with the WRITTEN df's schema: a bare CSV read
             # would give all-string columns (no types in the format)
-            back = (
-                register.read.format(fmt)
-                .option("header", "true")
-                .schema(df.schema)
-                .load(path)
-            )
+            reader = register.read.format(fmt).option("header", "true")
+            if fmt == "csv":
+                reader = reader.option("nullValue", _CSV_NULL_VALUE)
+            back = reader.schema(df.schema).load(path)
             back.createOrReplaceTempView(name)

@@ -36,10 +36,20 @@ because ``<`` cannot appear unescaped inside XML attribute values and
 OSM top-level kinds never nest (children are only tag/nd/member); the
 one documented blind spot is a ``<node`` inside an XML comment, which
 real OSM dumps don't produce. Compressed inputs (.gz/.bz2) are not
-byte-addressable and keep one task per file. For repeated passes at
-100 TB the right move is still a ONE-TIME conversion to a partitioned
-parquet landing zone (``to_landing_zone``): column pruning, predicate
-pushdown, and split-level parallelism for free on every later read.
+byte-addressable and keep one task per file.
+
+One read parses once: the returned frame is a lazy local checkpoint of
+the parsed rows, stored serialized at ``MEMORY_AND_DISK``. The first
+action parses and stores them; every later action on the frame or on a
+frame derived from it (the audit, ``normalize``, each table write) reads
+the store instead of the XML. The store spills to disk under memory
+pressure, and Spark's ContextCleaner frees it once the frame is
+garbage-collected. Its limit: a local checkpoint is not fault tolerant,
+so losing an executor fails the job instead of re-parsing. For durable
+or cross-session re-reads, and for repeated passes at 100 TB, the move
+is still a ONE-TIME conversion to a partitioned parquet landing zone
+(``to_landing_zone``): column pruning, predicate pushdown, and
+split-level parallelism for free on every later read.
 
 Yielded schema (one row per element, FIXTURES.md §2 `raw_elements`):
     element   string  'node' | 'way' | 'relation'
@@ -57,6 +67,7 @@ import re
 import xml.etree.ElementTree as ET
 from collections.abc import Iterable, Iterator
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -286,7 +297,14 @@ def read_osm_xml(
 
     ``tags`` filters element kinds at the parser (OP-FLT-TAGKIND — the
     reference's ``tags=('node','way')`` call, S2:320, excludes relations
-    before any shaping)."""
+    before any shaping).
+
+    The read is lazy: the frame is a serialized local checkpoint, so the
+    first action parses and stores the rows (spilling to disk under
+    memory pressure) and every later action reads them back; the store
+    is freed with the frame. It is not fault tolerant — an executor lost
+    after the parse fails the job rather than re-parsing — so durable or
+    cross-session re-reads go through ``to_landing_zone``."""
     import glob as _glob
     import os
 
@@ -330,7 +348,11 @@ def read_osm_xml(
     rows = spark.sparkContext.parallelize(tasks, numSlices=len(tasks)).flatMap(
         lambda t: _read_task(t, tags)
     )
-    return spark.createDataFrame(rows, RAW_ELEMENT_SCHEMA)
+    # serialized: the deserialized default holds every row as a JVM
+    # object and raised the ingest's peak RSS by a quarter or more
+    return spark.createDataFrame(rows, RAW_ELEMENT_SCHEMA).localCheckpoint(
+        eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
+    )
 
 
 def to_landing_zone(
@@ -341,6 +363,9 @@ def to_landing_zone(
 ) -> None:
     """One-time XML → partitioned-parquet conversion. Downstream passes
     read the landing zone (splittable, column-pruned, predicate-pushed)
-    instead of re-parsing XML — the 100 TB ingest pattern."""
+    instead of re-parsing XML — the 100 TB ingest pattern. Unlike
+    ``read_osm_xml``'s in-session checkpoint, which dies with its frame
+    or with a lost executor, the landing zone is durable and serves any
+    later session."""
     raw = read_osm_xml(spark, xml_paths)
     raw.write.mode("overwrite").partitionBy(partition_by).parquet(out_dir)
